@@ -24,9 +24,11 @@ import java.util.concurrent.atomic.AtomicLong
   *
   * Prints ONE JSON line and writes the complete record (per-batch
   * trigger durations included) to SPARK_GRAFT_STREAM_BENCH_FILE
-  * (default BENCH_STREAM_r16.json). Events/s/partition divides by the
-  * SOURCE partition count (the reference's per-partition thread
-  * model), not the executor thread count.
+  * (default BENCH_STREAM.json in the working directory). Executors
+  * default to local[number of cores] (SPARK_GRAFT_CPUS overrides).
+  * Events/s/partition divides by the SOURCE partition count (the
+  * reference's per-partition thread model), not the executor thread
+  * count.
   *
   * Besides the AvailableNow DRAIN (pre-seeded backlog), the bench runs
   * a SUSTAINED-load RATE LADDER — the resident-service regime the
@@ -95,11 +97,12 @@ object BenchStream {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8").toInt
     val perPart = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "50000").toLong
     val benchFile = sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH_FILE",
-      "/root/repo/BENCH_STREAM_r16.json")
+      "BENCH_STREAM.json")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

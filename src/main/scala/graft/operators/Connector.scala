@@ -39,15 +39,17 @@ object Connector {
         StructField("ValueString", StringType))))))))))
 
   /** R3 — tolerant parse of a raw JSON line column: corrupt lines yield a
-    * NULL struct (Spark `from_json` PERMISSIVE semantics), mirroring the
-    * reference's log-and-skip (app.py:106-114). Callers filter on
-    * `parsed IS NOT NULL` to reproduce the drop.
+    * NULL struct or one with a NULL `metadata` (Spark `from_json`
+    * PERMISSIVE semantics), mirroring the reference's log-and-skip
+    * (app.py:106-114). Callers filter on `parsed.metadata IS NOT NULL`
+    * to reproduce the drop.
     */
   def parseLine(raw: Column): Column = from_json(raw, envelopeSchema)
 
   /** R5 — flatten an array<struct<Key,ValueString>> into a last-wins map
     * (app.py:122-127: later duplicate keys overwrite earlier). Requires
     * spark.sql.mapKeyDedupPolicy=LAST_WIN, which [[lastWinPolicy]] sets.
+    * The declarative spec of [[kvFlattenNative]], which the connector runs.
     */
   def kvFlatten(kvArray: Column): Column =
     map_from_entries(transform(kvArray, e => struct(e("Key"), e("ValueString"))))

@@ -382,24 +382,23 @@ object Knn {
     *
     * Distributed float means are accumulation-order-dependent, so the
     * mean is computed over QUANTIZED components (round(x·2^20) — exact
-    * integers whose sum is order-independent via [[graft.functions.QVecSum]],
-    * a map-side-partial Aggregator; no per-dimension explode) and one
-    * exact division at the end. The result is bit-reproducible across
-    * partitionings AND replayable by a serial SQL oracle — the same
-    * discipline as the engine's integer-cents money sums, applied to
-    * codebook training. Empty cells keep their previous centroid (the
-    * standard Lloyd convention).
+    * integers whose per-dimension long sums, map-side-partial
+    * declarative aggregates, are order-independent; no per-dimension
+    * explode) and one exact division at the end. The result is
+    * bit-reproducible across partitionings AND replayable by a serial
+    * SQL oracle — the same discipline as the engine's integer-cents
+    * money sums, applied to codebook training. Empty cells keep their
+    * previous centroid (the standard Lloyd convention).
     */
   def kmeansRefine(vectors: DataFrame, centroids: DataFrame, dim: Int): DataFrame = {
     val Q = 1L << 20
-    // dim DECLARATIVE long sums instead of the QVecSum typed UDAF: the
+    // dim DECLARATIVE long sums rather than a typed vector-sum UDAF: the
     // aggregate runs over EVERY corpus vector (the training hot path of
-    // each Lloyd round), and the ObjectHashAggregate's per-row typed
-    // update (encoder decode + array buffer) was the same floor the
-    // k=1 topkTail removed from the ANN tier. Per-element expression is
-    // identical (round(x·2^20) cast long; long sums exact and order-
-    // independent), so the refined centroids are bit-identical; the
-    // transform HOF (CodegenFallback) leaves the scan stage too.
+    // each Lloyd round), and an ObjectHashAggregate's per-row typed
+    // update (encoder decode + array buffer) is the same floor the
+    // k=1 topkTail removed from the ANN tier. Long sums are exact and
+    // order-independent, so the refined centroids are bit-reproducible;
+    // no transform HOF (CodegenFallback) sits in the scan stage either.
     val assigned = ivfAssign(vectors, centroids, dim)
     val refined = assigned.groupBy("cell")
       .agg(array((0 until dim).map(i =>

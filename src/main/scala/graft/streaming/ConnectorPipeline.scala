@@ -32,11 +32,15 @@ object ConnectorPipeline {
     */
   def transform(lines: DataFrame, host: String, streamId: String): DataFrame = {
     Connector.lastWinPolicy(lines.sparkSession)
+    graft.expressions.KvLastWinMap.register(lines.sparkSession)
+    // the parse is a Generate output (one row per line), so the optimizer
+    // cannot push the R3 filter below it and re-parse there: each line
+    // goes through from_json exactly once
     val parsed = lines
       .where(length(col("value")) > 0)                       // R2 empty-line drop
-      .withColumn("parsed", Connector.parseLine(col("value")))
-      .where(col("parsed").isNotNull &&
-        col("parsed.metadata").isNotNull)                    // R3 corrupt drop
+      .select(col("value"),
+        explode(array(Connector.parseLine(col("value")))).as("parsed"))
+      .where(col("parsed.metadata").isNotNull)               // R3 corrupt drop
     val kv = col("parsed.event.AuditKeyValues")
     parsed.select(
       col("parsed.metadata.eventCreationTime").as("timestamp"), // R4
@@ -45,7 +49,7 @@ object ConnectorPipeline {
       lit(host).as("host"),                                     // R6
       lit(streamId).as("stream"),                               // R6
       when(kv.isNotNull,
-        Connector.kvFlatten(kv)).otherwise(map())
+        Connector.kvFlattenNative(kv)).otherwise(map())
         .as("event_fields"))                                    // R5
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Connector
 import graft.streaming.ConnectorPipeline
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Edge semantics of the connector operators, pinned to the reference
@@ -35,6 +36,122 @@ class ConnectorSpec extends SparkSpec {
     val out = ConnectorPipeline.transform(Seq(goodLine).toDF("value"), "h", "s")
       .select(col("event_fields")("action")).as[String].head()
     assert(out == "update2")
+  }
+
+  /** The connector transform as first declared — `from_json` in a
+    * projection under the R3 filter, R5 as the `kvFlatten` lambda chain —
+    * kept here as the spec the single-parse production path must equal.
+    */
+  private def declarativeTransform(lines: DataFrame): DataFrame = {
+    Connector.lastWinPolicy(spark)
+    val parsed = lines
+      .where(length(col("value")) > 0)
+      .withColumn("parsed", Connector.parseLine(col("value")))
+      .where(col("parsed").isNotNull && col("parsed.metadata").isNotNull)
+    val kv = col("parsed.event.AuditKeyValues")
+    parsed.select(
+      col("parsed.metadata.eventCreationTime").as("timestamp"),
+      col("value").as("rawstring"),
+      col("parsed.metadata.offset").as("offset"),
+      lit("h").as("host"),
+      lit("s").as("stream"),
+      when(kv.isNotNull, Connector.kvFlatten(kv)).otherwise(map())
+        .as("event_fields"))
+  }
+
+  /** `transform` and its shipped `to_json` payload equal the declarative
+    * spec row for row (same order, same map key order, same types).
+    */
+  private def assertMatchesSpec(lines: Seq[String]): Int = {
+    val df = lines.toDF("value")
+    val got = ConnectorPipeline.transform(df, "h", "s")
+    val want = declarativeTransform(df)
+    assert(got.schema == want.schema)
+    def payload(d: DataFrame) = d.select(to_json(struct(col("timestamp"),
+      col("rawstring"), col("host"), col("stream"), col("event_fields"))))
+      .as[String].collect().toSeq
+    val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+    assert(g == w, (g zip w).find(p => p._1 != p._2).toString)
+    assert(payload(got) == payload(want))
+    g.size
+  }
+
+  test("transform equals the declarative parse/flatten chain on edge lines") {
+    val env = """{"metadata": {"offset": 5, "eventCreationTime": 1000}, "event": """
+    val edge = Seq(
+      "", " ", "   \t ", "garbage", "{not json", "{", "}", "null", "[]",
+      "42", "\"str\"", "[1, 2]",
+      goodLine.take(40), goodLine.take(goodLine.length - 1), goodLine + "}",
+      """{"metadata": null, "event": {"UserId": "u"}}""",
+      """{"metadata": {}, "event": {"UserId": "u"}}""",
+      """{"metadata": {"offset": 9, "eventCreationTime": 2}}""",
+      """{"event": {"UserId": "u"}}""",
+      env + """{"AuditKeyValues": null}}""",
+      env + """{"AuditKeyValues": []}}""",
+      env + """{"AuditKeyValues": [{"Key": "a", "ValueString": "1"},
+        |{"Key": "b", "ValueString": "2"}, {"Key": "a", "ValueString": "3"}]}}""",
+      env + """{"AuditKeyValues": [{"Key": "a", "ValueString": null},
+        |{"Key": "b"}, {"Key": "a", "ValueString": "x"}, {"Key": "b", "ValueString": null}]}}""",
+      env + """{"AuditKeyValues": [{"Key": "n", "ValueString": 7}]}}""",
+      env + """{"AuditKeyValues": "not an array"}}""",
+      env + "\"not an object\"}",
+      env + """{"UserId": {"nested": 1}}}""",
+      """{"metadata": {"offset": 3, "eventCreationTime": "1648464000000"}, "event": {}}""",
+      """{"metadata": {"offset": 3, "eventCreationTime": "soon"}, "event": {}}""",
+      """{"metadata": {"offset": "x", "eventCreationTime": 1}, "event": {}}""",
+      """{"metadata": {"offset": 1.5, "eventCreationTime": 1}, "event": {}}""",
+      """{'metadata': {'offset': 4, 'eventCreationTime': 1}, 'event': {}}""",
+      """[{"metadata": {"offset": 6, "eventCreationTime": 1}, "event": {}}]""",
+      goodLine).map(_.stripMargin.replace("\n", " "))
+    // the good line, the envelope variants and the typed-field cases
+    // survive; empty, blank, garbage and truncated lines are dropped
+    assert(assertMatchesSpec(edge) > 10)
+    // a KV entry without a Key is no drop on either path: both fail
+    for (kv <- Seq("""[{"ValueString": "x"}]""", "[null]")) {
+      val bad = Seq(env + s"""{"AuditKeyValues": $kv}}""").toDF("value")
+      intercept[Exception](ConnectorPipeline.transform(bad, "h", "s").collect())
+      intercept[Exception](declarativeTransform(bad).collect())
+    }
+  }
+
+  test("transform equals the declarative chain on seeded random envelopes") {
+    val rnd = new scala.util.Random(20261017)
+    def pick[T](xs: T*): T = xs(rnd.nextInt(xs.length))
+    def str(): String = "\"" + pick("a", "b", "c", "k1", "détail", "x y", "") + "\""
+    def kv(): String = {
+      val fields = Seq(
+        Some("\"Key\": " + str()),
+        pick(Some("\"ValueString\": " + pick(str(), "null", "12")), None))
+      "{" + rnd.shuffle(fields.flatten).mkString(", ") + "}"
+    }
+    def envelope(): String = {
+      val meta = pick(
+        s"""{"offset": ${rnd.nextInt(100000)}, "eventCreationTime": ${1648464000000L + rnd.nextInt(1000000)}, "eventType": "T"}""",
+        s"""{"offset": ${rnd.nextInt(100)}, "eventCreationTime": "${rnd.nextInt(100)}"}""",
+        s"""{"eventCreationTime": ${rnd.nextInt(100)}}""",
+        "null", "{}")
+      val kvs = pick(
+        "null", "[]",
+        Seq.fill(1 + rnd.nextInt(6))(kv()).mkString("[", ", ", "]"))
+      val event = pick(
+        s"""{"UserId": ${str()}, "OperationName": ${str()}, "AuditKeyValues": $kvs}""",
+        s"""{"AuditKeyValues": $kvs}""",
+        s"""{"UserId": ${str()}}""",
+        "null")
+      val body = pick(
+        s"""{"metadata": $meta, "event": $event}""",
+        s"""{"event": $event, "metadata": $meta}""",
+        s"""{"metadata": $meta}""")
+      rnd.nextInt(20) match {
+        case 0 => ""
+        case 1 => body.take(rnd.nextInt(body.length))   // truncated
+        case 2 => "  "
+        case _ => body
+      }
+    }
+    val lines = Seq.fill(3000)(envelope())
+    val kept = assertMatchesSpec(lines)
+    assert(kept > 1000 && kept < lines.size)
   }
 
   test("KvLastWinMap native equals map_from_entries under LAST_WIN") {

@@ -5,6 +5,8 @@ import graft.operators.{Dedup, Drift, Knn, StatefulFunnel, StatefulTransitions}
 import graft.query.HumioQuery
 import graft.streaming.{ConnectorPipeline, Curation}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, JsonToStructs}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.streaming.operators.stateful.{SessionWindowStateStoreSaveExec, StateStoreSaveExec, StreamingDeduplicateExec, StreamingDeduplicateWithinWatermarkExec, StreamingGlobalLimitExec}
 import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
@@ -437,5 +439,44 @@ class StreamGuardSpec extends SparkSpec {
       query.processAllAvailable()
       assert(auditBoundedState("connector", query) == Set.empty[String])
     } finally query.stop()
+  }
+
+  test("connector path parses each line once: one JsonToStructs, no ArrayTransform") {
+    // the R3 corrupt-drop filter, pushed below the parse projection,
+    // used to leave two more from_json copies in the plan (one pruned to
+    // `metadata`), and R5 ran an interpreted transform lambda — an
+    // optimizer rule that brings either back shows up here
+    def assertParsedOnce(entry: String, q: StreamingQuery): Unit = {
+      val plan: LogicalPlan = q.asInstanceOf[StreamingQueryWrapper]
+        .streamingQuery.lastExecution.optimizedPlan
+      val exprs = plan.collect { case node => node.expressions }.flatten
+      val parses = exprs.flatMap(_.collect { case j: JsonToStructs => j })
+      val lambdas = exprs.flatMap(_.collect { case t: ArrayTransform => t })
+      assert(parses.size == 1, s"$entry: ${parses.size} from_json per line:\n$plan")
+      assert(lambdas.isEmpty, s"$entry: interpreted KV flatten lambda:\n$plan")
+    }
+    val line = """{"metadata":{"eventCreationTime":1,"offset":1},""" +
+      """"event":{"AuditKeyValues":[{"Key":"k","ValueString":"v"}]}}"""
+    implicit val sq = spark.sqlContext
+
+    val mem = MemoryStream[String]
+    val cp = java.nio.file.Files.createTempDirectory("graft-sg-cp").toString
+    val shipped = ConnectorPipeline.run(mem.toDF(), new ConnectorPipeline.BulkSink {
+      def post(events: Seq[String]): Boolean = true
+    }, cp, "host1", "stream1", triggerMs = 0L)
+    try {
+      mem.addData(line); shipped.processAllAvailable()
+      assertParsedOnce("run", shipped)
+    } finally shipped.stop()
+
+    val mem2 = MemoryStream[String]
+    val hunted = ConnectorPipeline.queryStream(mem2.toDF(), "k = v", "host1",
+        "stream1", promote = Seq("k"))
+      .writeStream.format("memory").queryName("sg_connector_hq")
+      .outputMode("append").start()
+    try {
+      mem2.addData(line); hunted.processAllAvailable()
+      assertParsedOnce("queryStream", hunted)
+    } finally hunted.stop()
   }
 }
