@@ -15,8 +15,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  - per-partition threads + supervision/restart (app.py:225-241,305-326)
   *    → one task per source partition, task retry, query restart;
   *  - offset checkpoint file under a process lock (app.py:38-58)
-  *    → the checkpointLocation offset WAL + commit log (crash-atomic,
-  *      which the reference's read-modify-write is not);
+  *    → the checkpointLocation offset WAL + commit log, crash-atomic
+  *      where the reference's read-modify-write is not: [[run]] installs
+  *      [[LocalCheckpointFileManager]], which writes each log file to a
+  *      temp file, fsyncs it and publishes it by hard link (a second
+  *      writer fails) or atomic rename. Without libhadoop, Hadoop's local
+  *      file system starts `chmod`/`readlink` processes for each such
+  *      write (~38 ms per file on a 4-vCPU VM, the largest fixed cost of
+  *      a micro-batch). Checkpoints on other file systems are written by
+  *      Spark's default manager, as before;
   *  - count-or-time flush trigger (app.py:139-144) → ProcessingTime
   *    trigger + per-batch chunking in the sink (documented deviation:
   *    Spark's trigger also fires on a quiet stream, strictly better than
@@ -169,12 +176,15 @@ object ConnectorPipeline {
     * (R7): undecorated lines, unstructured wire shape. `metadata` gates
     * the @host/@stream decoration of enriched events (`--metadata`,
     * app.py:129-132 + :364-368) — off means attributes ship undecorated.
+    * Checkpoint logs are written by [[LocalCheckpointFileManager]] unless
+    * the session already sets `spark.sql.streaming.checkpointFileManagerClass`.
     */
   def run(lines: DataFrame, sink: BulkSink, checkpointDir: String,
           host: String, streamId: String,
           triggerMs: Long = 10000L, bulkMaxSize: Int = 200,
           enrich: Boolean = true, metadata: Boolean = true,
           availableNow: Boolean = false): StreamingQuery = {
+    LocalCheckpointFileManager.install(lines.sparkSession)
     val shippedCols =
       if (metadata) Seq(col("timestamp"), col("rawstring"), col("host"),
         col("stream"), col("event_fields"))

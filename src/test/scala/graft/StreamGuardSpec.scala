@@ -441,6 +441,29 @@ class StreamGuardSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("connector checkpoint: offsets/ and commits/ hold no Hadoop .crc files") {
+    // run's checkpoint logs go through LocalCheckpointFileManager; a
+    // .crc sibling means a write went through Hadoop's ChecksumFs, which
+    // without libhadoop starts chmod/readlink processes for every file
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[String]
+    val cp = java.nio.file.Files.createTempDirectory("graft-sg-crc").toFile
+    val q = ConnectorPipeline.run(mem.toDF(), new ConnectorPipeline.BulkSink {
+      def post(events: Seq[String]): Boolean = true
+    }, cp.toString, "host1", "stream1", triggerMs = 0L)
+    try {
+      mem.addData("""{"metadata":{"eventCreationTime":1,"offset":1},"event":{}}""")
+      q.processAllAvailable()
+      mem.addData("""{"metadata":{"eventCreationTime":2,"offset":2},"event":{}}""")
+      q.processAllAvailable()
+    } finally q.stop()
+    for (log <- Seq("offsets", "commits")) {
+      val names = new java.io.File(cp, log).list().toSeq
+      assert(names.contains("1"), s"$log: both batches must be logged, got $names")
+      assert(!names.exists(_.endsWith(".crc")), s"$log: checksum files $names")
+    }
+  }
+
   test("connector path parses each line once: one JsonToStructs, no ArrayTransform") {
     // the R3 corrupt-drop filter, pushed below the parse projection,
     // used to leave two more from_json copies in the plan (one pruned to

@@ -181,6 +181,44 @@ class StreamingSpec extends SparkSpec {
     assert(total == 3, "restart must deliver only the new event, not replay committed ones")
   }
 
+  test("a checkpoint started under Spark's default manager resumes through run, twice, exactly") {
+    import graft.streaming.LocalCheckpointFileManager
+    import LocalCheckpointFileManager.ConfKey
+    import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+    RecordingSink.reset()
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[String]
+    val cp = Files.createTempDirectory("graft-cp").toFile
+    def runOnce(from: Long, to: Long): Unit = {
+      mem.addData((from to to).map(eventLine(_)): _*)
+      val q = ConnectorPipeline.run(mem.toDF(), new RecordingSink(false), cp.toString,
+        "h", "s", triggerMs = 50L)
+      q.processAllAvailable(); q.stop()
+    }
+    val before = spark.conf.getOption(ConfKey)
+    try {
+      // a manager the session already names is kept by run
+      spark.conf.set(ConfKey, classOf[FileContextBasedCheckpointFileManager].getName)
+      runOnce(1, 3)
+      assert(spark.conf.get(ConfKey) == classOf[FileContextBasedCheckpointFileManager].getName)
+      assert(new java.io.File(cp, "offsets/.0.crc").exists() &&
+        new java.io.File(cp, "commits/.0.crc").exists(),
+        "the first run must leave Spark's default-manager checksum files")
+      spark.conf.unset(ConfKey)
+      runOnce(4, 6)
+      assert(spark.conf.get(ConfKey) == classOf[LocalCheckpointFileManager].getName)
+      runOnce(7, 9)
+    } finally before match {
+      case Some(v) => spark.conf.set(ConfKey, v)
+      case None => spark.conf.unset(ConfKey)
+    }
+    // offsets ride inside the JSON-escaped rawstring of the payload
+    val offset = """\\"offset\\": (\d+)""".r
+    val delivered = RecordingSink.received.asScala.toSeq
+      .map(e => offset.findFirstMatchIn(e).get.group(1).toLong)
+    assert(delivered.sorted == (1L to 9L), "every event once: no loss, no duplicate")
+  }
+
   test("Supervisor restarts a failed query from the checkpoint and delivers everything") {
     import graft.streaming.Supervisor
     RecordingSink.reset()
