@@ -84,7 +84,7 @@ object BenchStream {
     }
   }
 
-  private def line(offset: Long, part: Int): String = {
+  private[graft] def line(offset: Long, part: Int): String = {
     val t = 1700000000000L + offset * 13
     s"""{"metadata": {"offset": $offset, "eventCreationTime": $t, """ +
       s""""eventType": "AuthActivityAuditEvent"}, "event": {"UserId": """ +

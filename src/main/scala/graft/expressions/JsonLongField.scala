@@ -8,14 +8,16 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Tolerant top-level JSON long-field extraction — the connector's R3
-  * parse as a codegen'd native expression.
+/** Tolerant top-level JSON long-field extraction as a codegen'd native
+  * expression. It backs the `ConnectorQueries` batch queries over the
+  * events table's `props` (e_parse, e_kv_flatten); the streaming
+  * connector's R3 envelope parse is [[FalconEnvelope]].
   *
   * Both of Spark's JSON extractors (JsonToStructs behind from_json,
   * GetJsonObject) are CodegenFallback: one appearance breaks the whole
   * projection out of whole-stage codegen and pays interpreted dispatch
   * plus Jackson per row — ~8 µs/row on 9-char documents, the dominant
-  * term of the connector pack's per-row cost. This expression is a
+  * term of those queries' per-row cost. This expression is a
   * strict little recursive-descent JSON VALIDATOR (the whole document
   * must parse, exactly like from_json) that captures the target
   * top-level field while scanning.

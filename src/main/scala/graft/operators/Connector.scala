@@ -43,8 +43,17 @@ object Connector {
     * PERMISSIVE semantics), mirroring the reference's log-and-skip
     * (app.py:106-114). Callers filter on `parsed.metadata IS NOT NULL`
     * to reproduce the drop.
+    * The declarative spec of [[parseLineNative]], which the connector runs.
     */
   def parseLine(raw: Column): Column = from_json(raw, envelopeSchema)
+
+  /** Codegen'd twin of [[parseLine]] ([[graft.expressions.FalconEnvelope]],
+    * differentially tested equal): a strict byte-level fast path builds
+    * the row, and any line outside its grammar goes to `from_json`.
+    * Requires `FalconEnvelope.register(spark)`.
+    */
+  def parseLineNative(raw: Column): Column =
+    call_function("graft_falcon_envelope", raw)
 
   /** R5 — flatten an array<struct<Key,ValueString>> into a last-wins map
     * (app.py:122-127: later duplicate keys overwrite earlier). Requires

@@ -40,13 +40,15 @@ object ConnectorPipeline {
   def transform(lines: DataFrame, host: String, streamId: String): DataFrame = {
     Connector.lastWinPolicy(lines.sparkSession)
     graft.expressions.KvLastWinMap.register(lines.sparkSession)
+    graft.expressions.FalconEnvelope.register(lines.sparkSession)
     // the parse is a Generate output (one row per line), so the optimizer
-    // cannot push the R3 filter below it and re-parse there: each line
-    // goes through from_json exactly once
+    // cannot push the R3 filter below it and re-parse there: each line is
+    // parsed exactly once, by the native envelope parser, inside the same
+    // whole-stage codegen stage as the payload projection
     val parsed = lines
       .where(length(col("value")) > 0)                       // R2 empty-line drop
       .select(col("value"),
-        explode(array(Connector.parseLine(col("value")))).as("parsed"))
+        explode(array(Connector.parseLineNative(col("value")))).as("parsed"))
       .where(col("parsed.metadata").isNotNull)               // R3 corrupt drop
     val kv = col("parsed.event.AuditKeyValues")
     parsed.select(

@@ -60,7 +60,8 @@ class ConnectorSpec extends SparkSpec {
   }
 
   /** `transform` and its shipped `to_json` payload equal the declarative
-    * spec row for row (same order, same map key order, same types).
+    * spec row for row (same order, same map key order, same types), and
+    * the native envelope parse equals `from_json` on every line.
     */
   private def assertMatchesSpec(lines: Seq[String]): Int = {
     val df = lines.toDF("value")
@@ -73,6 +74,9 @@ class ConnectorSpec extends SparkSpec {
     val (g, w) = (got.collect().toSeq, want.collect().toSeq)
     assert(g == w, (g zip w).find(p => p._1 != p._2).toString)
     assert(payload(got) == payload(want))
+    // the whole envelope, not only the projected fields, parses equal
+    val unequal = FalconEnvelopeSpec.mismatches(spark, lines)
+    assert(unequal.isEmpty, unequal.take(3).mkString(" | "))
     g.size
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.expressions.FalconEnvelope
 import graft.functions.Text
 import graft.operators.{Dedup, Drift, Knn, StatefulFunnel, StatefulTransitions}
 import graft.query.HumioQuery
@@ -7,7 +8,7 @@ import graft.streaming.{ConnectorPipeline, Curation}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, JsonToStructs}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.streaming.operators.stateful.{SessionWindowStateStoreSaveExec, StateStoreSaveExec, StreamingDeduplicateExec, StreamingDeduplicateWithinWatermarkExec, StreamingGlobalLimitExec}
 import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
 import org.apache.spark.sql.execution.streaming.operators.stateful.join.StreamingSymmetricHashJoinExec
@@ -464,18 +465,49 @@ class StreamGuardSpec extends SparkSpec {
     }
   }
 
-  test("connector path parses each line once: one JsonToStructs, no ArrayTransform") {
+  test("connector run: the parse Generate and the payload Project share one codegen stage") {
+    // JsonToStructs is CodegenFallback: with from_json as the R3 parse,
+    // the Generate and the to_json projection above it ran outside
+    // whole-stage codegen
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[String]
+    val cp = java.nio.file.Files.createTempDirectory("graft-sg-wscg").toString
+    val q = ConnectorPipeline.run(mem.toDF(), new ConnectorPipeline.BulkSink {
+      def post(events: Seq[String]): Boolean = true
+    }, cp, "host1", "stream1", triggerMs = 0L)
+    val plan = try {
+      mem.addData("""{"metadata":{"eventCreationTime":1,"offset":1},"event":{}}""")
+      q.processAllAvailable()
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    } finally q.stop()
+    // the operators a codegen stage fuses: its subtree down to InputAdapter
+    def fused(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case other => other.children.flatMap(fused)
+    })
+    val stages = plan.collect { case w: WholeStageCodegenExec => fused(w.child) }
+    val shared = stages.filter(ops =>
+      ops.exists(_.isInstanceOf[GenerateExec]) &&
+        ops.exists { case p: ProjectExec => p.output.exists(_.name == "payload"); case _ => false })
+    assert(shared.size == 1, s"parse and payload are not fused:\n$plan")
+  }
+
+  test("connector parses each line once: one FalconEnvelope, no from_json or lambda") {
     // the R3 corrupt-drop filter, pushed below the parse projection,
-    // used to leave two more from_json copies in the plan (one pruned to
-    // `metadata`), and R5 ran an interpreted transform lambda — an
-    // optimizer rule that brings either back shows up here
+    // used to leave two more parses in the plan (one pruned to
+    // `metadata`), and R5 ran an interpreted transform lambda; R3 is the
+    // native envelope parse, whose from_json fallback is a field, not a
+    // child — an optimizer rule or a rewrite that brings any of these
+    // back shows up here
     def assertParsedOnce(entry: String, q: StreamingQuery): Unit = {
       val plan: LogicalPlan = q.asInstanceOf[StreamingQueryWrapper]
         .streamingQuery.lastExecution.optimizedPlan
       val exprs = plan.collect { case node => node.expressions }.flatten
+      val native = exprs.flatMap(_.collect { case f: FalconEnvelope => f })
       val parses = exprs.flatMap(_.collect { case j: JsonToStructs => j })
       val lambdas = exprs.flatMap(_.collect { case t: ArrayTransform => t })
-      assert(parses.size == 1, s"$entry: ${parses.size} from_json per line:\n$plan")
+      assert(native.size == 1, s"$entry: ${native.size} native parses per line:\n$plan")
+      assert(parses.isEmpty, s"$entry: ${parses.size} from_json in the plan:\n$plan")
       assert(lambdas.isEmpty, s"$entry: interpreted KV flatten lambda:\n$plan")
     }
     val line = """{"metadata":{"eventCreationTime":1,"offset":1},""" +
