@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
@@ -48,9 +46,7 @@ case class BqSign64(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object BqSign64 {
-  private val ident = new FunctionIdentifier("graft_bq_sign")
-
+object BqSign64 extends NativeFunction("graft_bq_sign", classOf[BqSign64]) {
   def compute(emb: ArrayData): Long = {
     val n = math.min(64, emb.numElements())
     var v = 0L
@@ -62,11 +58,6 @@ object BqSign64 {
     v
   }
 
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[BqSign64].getName, "graft_bq_sign"),
-        (children: Seq[Expression]) => BqSign64(children.head))
-    }
+  def build(children: Seq[Expression]): Expression =
+    BqSign64(children.head)
 }

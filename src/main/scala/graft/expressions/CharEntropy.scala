@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -51,9 +49,8 @@ case class CharEntropy(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object CharEntropy {
+object CharEntropy extends NativeFunction("graft_entropy", classOf[CharEntropy]) {
   private val Q = 1099511627776L  // 2^40
-  private val ident = new FunctionIdentifier("graft_entropy")
 
   /** One counting pass over code points, one quantized-term pass over
     * the distinct set. Static so generated code calls it directly.
@@ -83,14 +80,6 @@ object CharEntropy {
     -(sum.toDouble / Q.toDouble)
   }
 
-  /** Idempotent per-session registration for
-    * `call_function("graft_entropy", text)`.
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[CharEntropy].getName, "graft_entropy"),
-        (children: Seq[Expression]) => CharEntropy(children.head))
-    }
+  def build(children: Seq[Expression]): Expression =
+    CharEntropy(children.head)
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -65,17 +63,7 @@ case class CharTrigrams(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object CharTrigrams {
-  private val ident = new FunctionIdentifier("graft_char_trigrams")
-
-  /** Idempotent per-session registration for
-    * `call_function("graft_char_trigrams", text)`.
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[CharTrigrams].getName, "graft_char_trigrams"),
-        (children: Seq[Expression]) => CharTrigrams(children.head))
-    }
+object CharTrigrams extends NativeFunction("graft_char_trigrams", classOf[CharTrigrams]) {
+  def build(children: Seq[Expression]): Expression =
+    CharTrigrams(children.head)
 }

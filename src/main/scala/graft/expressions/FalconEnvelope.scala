@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, JsonToStructs, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, JsonToStructs, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.internal.SQLConf
@@ -87,9 +85,7 @@ case class FalconEnvelope(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object FalconEnvelope {
-  private val ident = new FunctionIdentifier("graft_falcon_envelope")
-
+object FalconEnvelope extends NativeFunction("graft_falcon_envelope", classOf[FalconEnvelope]) {
   val schema = graft.operators.Connector.envelopeSchema
 
   /** Nesting bound of the fast path; deeper lines go to the fallback,
@@ -433,11 +429,6 @@ object FalconEnvelope {
     }
   }
 
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[FalconEnvelope].getName, "graft_falcon_envelope"),
-        (children: Seq[Expression]) => FalconEnvelope(children.head))
-    }
+  def build(children: Seq[Expression]): Expression =
+    FalconEnvelope(children.head)
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -86,17 +84,7 @@ case class FloatDot(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-object FloatDot {
-  private val ident = new FunctionIdentifier("graft_dot")
-
-  /** Idempotent per-session registration; afterwards `expr("graft_dot(a,b)")`
-    * resolves in any DataFrame/SQL context of the session.
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[FloatDot].getName, "graft_dot"),
-        (children: Seq[Expression]) => FloatDot(children(0), children(1)))
-    }
+object FloatDot extends NativeFunction("graft_dot", classOf[FloatDot]) {
+  def build(children: Seq[Expression]): Expression =
+    FloatDot(children(0), children(1))
 }

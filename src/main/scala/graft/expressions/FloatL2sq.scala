@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -95,17 +93,7 @@ case class FloatL2sq(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-object FloatL2sq {
-  private val ident = new FunctionIdentifier("graft_l2sq")
-
-  /** Idempotent per-session registration; afterwards `expr("graft_l2sq(a,b)")`
-    * resolves in any DataFrame/SQL context of the session.
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[FloatL2sq].getName, "graft_l2sq"),
-        (children: Seq[Expression]) => FloatL2sq(children(0), children(1)))
-    }
+object FloatL2sq extends NativeFunction("graft_l2sq", classOf[FloatL2sq]) {
+  def build(children: Seq[Expression]): Expression =
+    FloatL2sq(children(0), children(1))
 }

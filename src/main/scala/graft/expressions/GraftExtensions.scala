@@ -1,75 +1,26 @@
 package graft.expressions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Standard extension hook: deployments add
   * `spark.sql.extensions=graft.expressions.GraftExtensions` and every
   * session (including pure-SQL users) gets the engine's native functions
-  * without touching code. [[FloatDot.register]] remains the programmatic
-  * per-session path.
+  * without touching code. Each function's `register` remains the
+  * programmatic per-session path; both install the same
+  * [[NativeFunction.entry]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[FloatDot].getName, "graft_dot"),
-      (children: Seq[Expression]) => FloatDot(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingle_minhash"),
-      new ExpressionInfo(classOf[ShingleMinHash].getName, "graft_shingle_minhash"),
-      (children: Seq[Expression]) => ShingleMinHash(
-        children.head,
-        children(1).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Int],
-        children(2).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Int])))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingle_perm_minhash"),
-      new ExpressionInfo(classOf[ShinglePermMinHash].getName, "graft_shingle_perm_minhash"),
-      (children: Seq[Expression]) => ShinglePermMinHash(
-        children.head,
-        children(1).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Int],
-        children(2).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Int])))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_rolling_winnow"),
-      new ExpressionInfo(classOf[RollingWinnow].getName, "graft_rolling_winnow"),
-      (children: Seq[Expression]) => RollingWinnow(
-        children.head,
-        children(1).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Int],
-        children(2).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Int])))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (children: Seq[Expression]) => SimHash64(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_char_trigrams"),
-      new ExpressionInfo(classOf[CharTrigrams].getName, "graft_char_trigrams"),
-      (children: Seq[Expression]) => CharTrigrams(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_entropy"),
-      new ExpressionInfo(classOf[CharEntropy].getName, "graft_entropy"),
-      (children: Seq[Expression]) => CharEntropy(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_trigram_jaccard"),
-      new ExpressionInfo(classOf[TrigramJaccard].getName, "graft_trigram_jaccard"),
-      (children: Seq[Expression]) => TrigramJaccard(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bq_sign"),
-      new ExpressionInfo(classOf[BqSign64].getName, "graft_bq_sign"),
-      (children: Seq[Expression]) => BqSign64(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-      WordShingles.builder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_l2sq"),
-      new ExpressionInfo(classOf[FloatL2sq].getName, "graft_l2sq"),
-      (children: Seq[Expression]) => FloatL2sq(children(0), children(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(f => ext.injectFunction(f.entry))
+}
+
+object GraftExtensions {
+  /** Every native function (ExtensionsSpec checks this list against the
+    * names the `register` methods install).
+    */
+  val functions: Seq[NativeFunction] = Seq(
+    BqSign64, CharEntropy, CharTrigrams, FalconEnvelope, FloatDot, FloatL2sq,
+    JsonLongField, JsonStrField, KvKeyed, KvLastWinMap, LangBest, RollingWinnow,
+    ShingleMinHash, ShinglePermMinHash, SimHash64, Sq8Error, StopwordCounts,
+    TrigramJaccard, WordShingles)
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -93,9 +91,7 @@ case class JsonLongField(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object JsonLongField {
-  private val ident = new FunctionIdentifier("graft_json_long")
-
+object JsonLongField extends NativeFunction("graft_json_long", classOf[JsonLongField]) {
   /** Validate the whole document; return the last top-level `key` value
     * iff it is an integral in-range JSON number, else null (boxed so
     * generated code distinguishes null-field from a parsed value).
@@ -303,11 +299,6 @@ object JsonLongField {
   private final class BadJson extends Exception(null, null, false, false)
   private val Bad = new BadJson
 
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[JsonLongField].getName, "graft_json_long"),
-        (children: Seq[Expression]) => JsonLongField(children.head, children(1)))
-    }
+  def build(children: Seq[Expression]): Expression =
+    JsonLongField(children.head, children(1))
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -67,9 +65,7 @@ case class JsonStrField(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object JsonStrField {
-  private val ident = new FunctionIdentifier("graft_json_str")
-
+object JsonStrField extends NativeFunction("graft_json_str", classOf[JsonStrField]) {
   def compute(s: UTF8String, key: String): UTF8String = {
     val r = new Parser(s.toString, key).parse()
     if (r == null) null else UTF8String.fromString(r)
@@ -252,11 +248,6 @@ object JsonStrField {
   private final class BadJson extends Exception(null, null, false, false)
   private val Bad = new BadJson
 
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[JsonStrField].getName, "graft_json_str"),
-        (children: Seq[Expression]) => JsonStrField(children.head, children(1)))
-    }
+  def build(children: Seq[Expression]): Expression =
+    JsonStrField(children.head, children(1))
 }

@@ -1,10 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,7 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * differentially tested): duplicate keys keep the FIRST occurrence's
   * position with the LAST occurrence's value (Spark's ArrayBasedMapBuilder
   * convention), NULL values are kept, a NULL entry or NULL key raises —
-  * the same error class of behavior as map_from_entries.
+  * the same error class of behavior as map_from_entries. The connector
+  * drops such lines before R5 ([[KvKeyed]]).
   *
   * The declarative chain pays an interpreted `transform` lambda per row
   * plus map_from_entries' builder; worse, extracting two keys from the
@@ -39,15 +40,8 @@ case class KvLastWinMap(child: Expression) extends UnaryExpression {
     valueContainsNull = true)
   override def prettyName: String = "graft_kv_lastwin"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(st: StructType, _)
-        if st.length == 2 && st(0).dataType == StringType &&
-           st(1).dataType == StringType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      "graft_kv_lastwin expects array<struct<string,string>>, got " +
-        other.simpleString)
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    KvLastWinMap.checkKvArray(prettyName, child.dataType)
 
   override protected def nullSafeEval(input: Any): Any =
     KvLastWinMap.compute(input.asInstanceOf[ArrayData])
@@ -60,8 +54,17 @@ case class KvLastWinMap(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object KvLastWinMap {
-  private val ident = new FunctionIdentifier("graft_kv_lastwin")
+object KvLastWinMap extends NativeFunction("graft_kv_lastwin", classOf[KvLastWinMap]) {
+  /** The audit KV shape, fields taken positionally: key, value. */
+  private[expressions] def checkKvArray(function: String,
+                                        dataType: DataType): TypeCheckResult = dataType match {
+    case ArrayType(st: StructType, _)
+        if st.length == 2 && st(0).dataType == StringType &&
+           st(1).dataType == StringType =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$function expects array<struct<string,string>>, got ${other.simpleString}")
+  }
 
   /** One pass; duplicate key → value overwritten in place (first
     * position, last value). KV arrays are small (an audit record's
@@ -102,11 +105,54 @@ object KvLastWinMap {
     new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
   }
 
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[KvLastWinMap].getName, "graft_kv_lastwin"),
-        (children: Seq[Expression]) => KvLastWinMap(children.head))
+  /** Whether [[compute]] accepts `arr`: no NULL entry and no NULL key. */
+  def keyed(arr: ArrayData): Boolean = {
+    val n = arr.numElements()
+    var i = 0
+    while (i < n) {
+      if (arr.isNullAt(i) || arr.getStruct(i, 2).isNullAt(0)) return false
+      i += 1
     }
+    true
+  }
+
+  def build(children: Seq[Expression]): Expression =
+    KvLastWinMap(children.head)
+}
+
+/** The connector's R3 poison-line test: true when [[KvLastWinMap]] can
+  * flatten the audit KV array, i.e. no entry and no entry's `Key` is
+  * NULL; true for a NULL array too, which R5 maps to an empty map. A line
+  * failing it is dropped as corrupt instead of failing its micro-batch,
+  * which would replay the line forever. Native rather than an `exists`
+  * lambda, which is `CodegenFallback` and would pull the connector's
+  * parse stage out of whole-stage codegen.
+  */
+case class KvKeyed(child: Expression) extends UnaryExpression with Predicate {
+
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_kv_keyed"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    KvLastWinMap.checkKvArray(prettyName, child.dataType)
+
+  override def eval(input: InternalRow): Any = {
+    val arr = child.eval(input)
+    arr == null || KvLastWinMap.keyed(arr.asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      boolean ${ev.value} = ${c.isNull} ||
+        graft.expressions.KvLastWinMap.keyed(${c.value});""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object KvKeyed extends NativeFunction("graft_kv_keyed", classOf[KvKeyed]) {
+  def build(children: Seq[Expression]): Expression = KvKeyed(children.head)
 }

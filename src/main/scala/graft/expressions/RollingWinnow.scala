@@ -101,22 +101,12 @@ case class RollingWinnow(child: Expression, k: Int, w: Int)
     copy(child = newChild)
 }
 
-object RollingWinnow {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
+object RollingWinnow extends NativeFunction("graft_rolling_winnow", classOf[RollingWinnow]) {
+  import org.apache.spark.sql.catalyst.expressions.Literal
 
-  private val ident = new FunctionIdentifier("graft_rolling_winnow")
-
-  /** Register for `call_function("graft_rolling_winnow", toks, lit(k), lit(w))`. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[RollingWinnow].getName, "graft_rolling_winnow"),
-        (children: Seq[Expression]) => RollingWinnow(
-          children.head,
-          children(1).asInstanceOf[Literal].value.asInstanceOf[Int],
-          children(2).asInstanceOf[Literal].value.asInstanceOf[Int]))
-    }
+  /** Builds `call_function("graft_rolling_winnow", toks, lit(k), lit(w))`. */
+  def build(children: Seq[Expression]): Expression = RollingWinnow(
+    children.head,
+    children(1).asInstanceOf[Literal].value.asInstanceOf[Int],
+    children(2).asInstanceOf[Literal].value.asInstanceOf[Int])
 }

@@ -92,22 +92,12 @@ case class ShingleMinHash(child: Expression, shingleWords: Int, k: Int)
     copy(child = newChild)
 }
 
-object ShingleMinHash {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
+object ShingleMinHash extends NativeFunction("graft_shingle_minhash", classOf[ShingleMinHash]) {
+  import org.apache.spark.sql.catalyst.expressions.Literal
 
-  private val ident = new FunctionIdentifier("graft_shingle_minhash")
-
-  /** Register for `call_function("graft_shingle_minhash", toks, lit(w), lit(k))`. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[ShingleMinHash].getName, "graft_shingle_minhash"),
-        (children: Seq[Expression]) => ShingleMinHash(
-          children.head,
-          children(1).asInstanceOf[Literal].value.asInstanceOf[Int],
-          children(2).asInstanceOf[Literal].value.asInstanceOf[Int]))
-    }
+  /** Builds `call_function("graft_shingle_minhash", toks, lit(w), lit(k))`. */
+  def build(children: Seq[Expression]): Expression = ShingleMinHash(
+    children.head,
+    children(1).asInstanceOf[Literal].value.asInstanceOf[Int],
+    children(2).asInstanceOf[Literal].value.asInstanceOf[Int])
 }

@@ -108,22 +108,12 @@ case class ShinglePermMinHash(child: Expression, shingleWords: Int, numPerms: In
     copy(child = newChild)
 }
 
-object ShinglePermMinHash {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
+object ShinglePermMinHash extends NativeFunction("graft_shingle_perm_minhash", classOf[ShinglePermMinHash]) {
+  import org.apache.spark.sql.catalyst.expressions.Literal
 
-  private val ident = new FunctionIdentifier("graft_shingle_perm_minhash")
-
-  /** Register for `call_function("graft_shingle_perm_minhash", toks, lit(w), lit(n))`. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[ShinglePermMinHash].getName, "graft_shingle_perm_minhash"),
-        (children: Seq[Expression]) => ShinglePermMinHash(
-          children.head,
-          children(1).asInstanceOf[Literal].value.asInstanceOf[Int],
-          children(2).asInstanceOf[Literal].value.asInstanceOf[Int]))
-    }
+  /** Builds `call_function("graft_shingle_perm_minhash", toks, lit(w), lit(n))`. */
+  def build(children: Seq[Expression]): Expression = ShinglePermMinHash(
+    children.head,
+    children(1).asInstanceOf[Literal].value.asInstanceOf[Int],
+    children(2).asInstanceOf[Literal].value.asInstanceOf[Int])
 }

@@ -66,18 +66,7 @@ case class SimHash64(child: Expression)
     copy(child = newChild)
 }
 
-object SimHash64 {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  private val ident = new FunctionIdentifier("graft_simhash64")
-
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-        (children: Seq[Expression]) => SimHash64(children.head))
-    }
+object SimHash64 extends NativeFunction("graft_simhash64", classOf[SimHash64]) {
+  def build(children: Seq[Expression]): Expression =
+    SimHash64(children.head)
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -56,9 +54,7 @@ case class Sq8Error(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-object Sq8Error {
-  private val ident = new FunctionIdentifier("graft_sq8_err")
-
+object Sq8Error extends NativeFunction("graft_sq8_err", classOf[Sq8Error]) {
   def compute(emb: ArrayData, mn: ArrayData, mx: ArrayData): Double = {
     val n = emb.numElements()
     // a scale table from a different corpus (or a truncated one) is a
@@ -91,12 +87,6 @@ object Sq8Error {
     sum
   }
 
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[Sq8Error].getName, "graft_sq8_err"),
-        (children: Seq[Expression]) =>
-          Sq8Error(children.head, children(1), children(2)))
-    }
+  def build(children: Seq[Expression]): Expression =
+    Sq8Error(children.head, children(1), children(2))
 }

@@ -1,9 +1,8 @@
 package graft.expressions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -50,9 +49,7 @@ case class StopwordCounts(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object StopwordCounts {
-  private val ident = new FunctionIdentifier("graft_stopword_counts")
-
+object StopwordCounts extends NativeFunction("graft_stopword_counts", classOf[StopwordCounts]) {
   /** The language order of the output array — pinned to
     * [[graft.functions.Text.stopwordSets]], the single source of truth
     * both the HOF form and the DuckDB oracles read.
@@ -103,13 +100,12 @@ object StopwordCounts {
     new GenericArrayData(counts)
   }
 
-  def register(spark: SparkSession): Unit = {
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[StopwordCounts].getName, "graft_stopword_counts"),
-        (children: Seq[Expression]) => StopwordCounts(children.head))
-    }
+  def build(children: Seq[Expression]): Expression =
+    StopwordCounts(children.head)
+
+  /** Also registers [[LangBest]], which consumes these counts. */
+  override def register(spark: SparkSession): Unit = {
+    super.register(spark)
     LangBest.register(spark)
   }
 }
@@ -145,9 +141,7 @@ case class LangBest(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object LangBest {
-  private val ident = new FunctionIdentifier("graft_lang_best")
-
+object LangBest extends NativeFunction("graft_lang_best", classOf[LangBest]) {
   /** Designed for [[StopwordCounts]] output (a dense non-null 5-array),
     * but the function is session-registered so arbitrary arrays can
     * reach it: an empty array or one with NULL elements yields NULL
@@ -169,11 +163,6 @@ object LangBest {
     StopwordCounts.langs(best)
   }
 
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[LangBest].getName, "graft_lang_best"),
-        (children: Seq[Expression]) => LangBest(children.head))
-    }
+  def build(children: Seq[Expression]): Expression =
+    LangBest(children.head)
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -124,17 +122,7 @@ case class TrigramJaccard(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-object TrigramJaccard {
-  private val ident = new FunctionIdentifier("graft_trigram_jaccard")
-
-  /** Idempotent per-session registration for
-    * `call_function("graft_trigram_jaccard", a, b)`.
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[TrigramJaccard].getName, "graft_trigram_jaccard"),
-        (children: Seq[Expression]) => TrigramJaccard(children(0), children(1)))
-    }
+object TrigramJaccard extends NativeFunction("graft_trigram_jaccard", classOf[TrigramJaccard]) {
+  def build(children: Seq[Expression]): Expression =
+    TrigramJaccard(children(0), children(1))
 }

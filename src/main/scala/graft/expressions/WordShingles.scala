@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -92,14 +90,11 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object WordShingles {
-  private val ident = new FunctionIdentifier("graft_shingles")
-
-  /** The one guarded builder both registration paths (per-session
-    * [[register]] and the [[GraftExtensions]] injection) share — a
-    * SQL-side misuse must produce the same clear error either way.
+object WordShingles extends NativeFunction("graft_shingles", classOf[WordShingles]) {
+  /** Builds `call_function("graft_shingles", toks, lit(k))`: the width
+    * must be a foldable integer literal (it shapes the generated loop).
     */
-  val builder: Seq[Expression] => Expression = { children =>
+  def build(children: Seq[Expression]): Expression = {
     require(children.size == 2,
       s"graft_shingles(toks, k) takes 2 arguments, got ${children.size}")
     val k = children(1) match {
@@ -109,16 +104,4 @@ object WordShingles {
     }
     WordShingles(children.head, k)
   }
-
-  /** Idempotent per-session registration for
-    * `call_function("graft_shingles", toks, lit(k))` — the width must be
-    * a foldable integer literal (it shapes the generated loop).
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(ident)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-        builder)
-    }
 }

@@ -74,6 +74,15 @@ object Connector {
   def kvFlattenNative(kvArray: Column): Column =
     call_function("graft_kv_lastwin", kvArray)
 
+  /** R3 poison-line rule: true unless the KV array holds a NULL entry or
+    * an entry with a NULL or missing `Key`, which neither [[kvFlatten]]
+    * nor [[kvFlattenNative]] accepts; the connector drops such a line as
+    * corrupt ([[graft.expressions.KvKeyed]]). Requires
+    * `KvKeyed.register(spark)`.
+    */
+  def kvKeyed(kvArray: Column): Column =
+    call_function("graft_kv_keyed", kvArray)
+
   def lastWinPolicy(spark: SparkSession): Unit =
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
 

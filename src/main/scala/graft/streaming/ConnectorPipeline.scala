@@ -1,7 +1,10 @@
 package graft.streaming
 
+import graft.expressions.{FalconEnvelope, KvKeyed, KvLastWinMap}
 import graft.operators.Connector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -30,27 +33,36 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    the reference's flush-only-on-next-event quirk);
   *  - at-least-once delivery (checkpoint written only after sink success,
   *    app.py:151-176) → foreachBatch: a thrown sink error fails the batch
-  *    before the commit log records it, so the batch replays.
+  *    before the commit log records it, so the batch replays. [[run]]
+  *    posts from the batch's already-planned rows, in one job inside the
+  *    micro-batch's own SQL execution: `foreachPartition` would plan a
+  *    second execution (a `Row` deserializer plan, a start event carrying
+  *    its plan string) and clean a new closure every batch, fixed
+  *    per-batch cost that sets the connector's delivery latency.
   */
 object ConnectorPipeline {
 
   /** The per-event transform chain (R2–R6), usable identically on batch
-    * and streaming DataFrames of `value: STRING` lines.
+    * and streaming DataFrames of `value: STRING` lines. R3 drops a corrupt
+    * line, and also a poison line: one whose `AuditKeyValues` holds a
+    * `null` entry or an entry with a null or missing `Key`, which the R5
+    * flatten rejects (its micro-batch would fail and replay it forever).
     */
   def transform(lines: DataFrame, host: String, streamId: String): DataFrame = {
-    Connector.lastWinPolicy(lines.sparkSession)
-    graft.expressions.KvLastWinMap.register(lines.sparkSession)
-    graft.expressions.FalconEnvelope.register(lines.sparkSession)
+    val spark = lines.sparkSession
+    Connector.lastWinPolicy(spark)
+    Seq(KvKeyed, KvLastWinMap, FalconEnvelope).foreach(_.register(spark))
     // the parse is a Generate output (one row per line), so the optimizer
     // cannot push the R3 filter below it and re-parse there: each line is
     // parsed exactly once, by the native envelope parser, inside the same
     // whole-stage codegen stage as the payload projection
+    val kv = col("parsed.event.AuditKeyValues")
     val parsed = lines
-      .where(length(col("value")) > 0)                       // R2 empty-line drop
+      .where(nonEmpty(col("value")))                         // R2 empty-line drop
       .select(col("value"),
         explode(array(Connector.parseLineNative(col("value")))).as("parsed"))
-      .where(col("parsed.metadata").isNotNull)               // R3 corrupt drop
-    val kv = col("parsed.event.AuditKeyValues")
+      .where(col("parsed.metadata").isNotNull &&             // R3 corrupt drop,
+        Connector.kvKeyed(kv))                               // poison KV lines too
     parsed.select(
       col("parsed.metadata.eventCreationTime").as("timestamp"), // R4
       col("value").as("rawstring"),                             // R4
@@ -62,6 +74,11 @@ object ConnectorPipeline {
         .as("event_fields"))                                    // R5
   }
 
+  /** R2's empty-line test on the byte length: `length` counts characters,
+    * which walks every byte of each line only to compare with zero.
+    */
+  private def nonEmpty(line: Column): Column = octet_length(line) > 0
+
   /** R7 — the no-enrich ("raw") data path (app.py:135-137): non-empty
     * lines ship UNDECORATED — no parse, no projection, no flatten, no
     * metadata; corrupt JSON passes through too (nothing ever parses it).
@@ -70,7 +87,7 @@ object ConnectorPipeline {
     * both avoid per-event parsing on this path.
     */
   def transformRaw(lines: DataFrame): DataFrame =
-    lines.where(length(col("value")) > 0).select(col("value"))
+    lines.where(nonEmpty(col("value"))).select(col("value"))
 
   /** Normalized option map for [[fromKafka]]: brokers + topic with the
     * connector-shaped defaults (read from the earliest retained offset
@@ -137,6 +154,22 @@ object ConnectorPipeline {
       * restart, app.py:151-176). Default: ignore.
       */
     def begin(batchId: Long): Unit = ()
+  }
+
+  /** One task of a micro-batch's delivery: posts the partition's payloads
+    * (column 0) in `bulkMaxSize` chunks. A rejected post fails the task,
+    * so the job, the micro-batch and its commit fail and the batch replays:
+    * at-least-once, no checkpoint advance (mirror of app.py:157-162). A
+    * named class, not a lambda, so the closure cleaner has no class file
+    * to read for it.
+    */
+  private final class PostPartition(sink: BulkSink, bulkMaxSize: Int)
+      extends ((TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+    def apply(context: TaskContext, rows: Iterator[InternalRow]): Unit =
+      rows.map(_.getUTF8String(0).toString).grouped(bulkMaxSize).foreach { chunk =>
+        if (!sink.post(chunk))
+          throw new RuntimeException(s"bulk sink rejected ${chunk.size} events")
+      }
   }
 
   /** The two Humio ingest wire shapes, selected by the enrich mode
@@ -207,15 +240,12 @@ object ConnectorPipeline {
                else Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         sink.begin(batchId)
-        batch.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-          rows.map(_.getString(0)).grouped(bulkMaxSize).foreach { chunk =>
-            if (!sink.post(chunk))
-              // fail the task → fail the batch → replay: at-least-once,
-              // no checkpoint advance (mirror of app.py:157-162)
-              throw new RuntimeException(s"bulk sink rejected ${chunk.size} events")
-          }
-        }
-        ()
+        // one job over the batch's planned rows, inside the micro-batch's
+        // own SQL execution (why not `foreachPartition`: see the object doc)
+        val rows = batch.queryExecution.toRdd
+        batch.sparkSession.sparkContext.runJob(rows,
+          new PostPartition(sink, bulkMaxSize), rows.partitions.indices,
+          (_: Int, _: Unit) => ())
       }
       .start()
   }

@@ -41,14 +41,17 @@ class ConnectorSpec extends SparkSpec {
   /** The connector transform as first declared — `from_json` in a
     * projection under the R3 filter, R5 as the `kvFlatten` lambda chain —
     * kept here as the spec the single-parse production path must equal.
+    * R3 also drops a poison line: a KV array with a null entry or a null
+    * `Key`, which `map_from_entries` rejects.
     */
   private def declarativeTransform(lines: DataFrame): DataFrame = {
     Connector.lastWinPolicy(spark)
+    val kv = col("parsed.event.AuditKeyValues")
     val parsed = lines
       .where(length(col("value")) > 0)
       .withColumn("parsed", Connector.parseLine(col("value")))
-      .where(col("parsed").isNotNull && col("parsed.metadata").isNotNull)
-    val kv = col("parsed.event.AuditKeyValues")
+      .where(col("parsed").isNotNull && col("parsed.metadata").isNotNull &&
+        (kv.isNull || !exists(kv, e => e.isNull || e("Key").isNull)))
     parsed.select(
       col("parsed.metadata.eventCreationTime").as("timestamp"),
       col("value").as("rawstring"),
@@ -110,12 +113,14 @@ class ConnectorSpec extends SparkSpec {
     // the good line, the envelope variants and the typed-field cases
     // survive; empty, blank, garbage and truncated lines are dropped
     assert(assertMatchesSpec(edge) > 10)
-    // a KV entry without a Key is no drop on either path: both fail
-    for (kv <- Seq("""[{"ValueString": "x"}]""", "[null]")) {
-      val bad = Seq(env + s"""{"AuditKeyValues": $kv}}""").toDF("value")
-      intercept[Exception](ConnectorPipeline.transform(bad, "h", "s").collect())
-      intercept[Exception](declarativeTransform(bad).collect())
-    }
+    // a KV entry without a Key, or a null entry, is a poison line: it
+    // is dropped as corrupt on both paths
+    val poison = Seq("""[{"ValueString": "x"}]""", "[null]",
+      """[{"Key": null, "ValueString": "x"}]""",
+      """[{"Key": "a", "ValueString": "1"}, null]""")
+      .map(kv => env + s"""{"AuditKeyValues": $kv}}""")
+    assert(assertMatchesSpec(poison) == 0)
+    assert(assertMatchesSpec(poison :+ goodLine) == 1)
   }
 
   test("transform equals the declarative chain on seeded random envelopes") {
@@ -189,6 +194,39 @@ class ConnectorSpec extends SparkSpec {
     val nullArr = Seq(1).toDF("id").select(Connector.kvFlattenNative(
       lit(null).cast("array<struct<Key:string,ValueString:string>>")).as("m"))
     assert(nullArr.collect().head.isNullAt(0))
+  }
+
+  test("KvKeyed equals the exists-lambda poison rule, compiled and interpreted") {
+    graft.expressions.KvKeyed.register(spark)
+    val kvType = "array<struct<Key:string,ValueString:string>>"
+    val kvs = Seq("null", "[]", """[{"Key": "a", "ValueString": null}]""",
+      """[{"Key": "a"}, {"Key": "b", "ValueString": "2"}]""", "[null]",
+      """[{"ValueString": "x"}]""", """[{"Key": "a"}, {"Key": null}]""",
+      """[{"Key": "a"}, null]""")
+    // repartition: keeps the optimizer from folding the projection over
+    // the local rows, so the codegen path really runs
+    val df = kvs.toDF("j").repartition(1)
+      .select(from_json(col("j"), lit(kvType)).as("kv"))
+    val want = Seq(true, true, true, true, false, false, false, false)
+    val rule = col("kv").isNull || !exists(col("kv"), e => e.isNull || e("Key").isNull)
+    assert(df.select(rule).as[Boolean].collect().toSeq == want)
+    for (codegen <- Seq("true", "false")) {
+      withSQLConf("spark.sql.codegen.wholeStage" -> codegen,
+        "spark.sql.codegen.factoryMode" -> (if (codegen == "true") "CODEGEN_ONLY" else "NO_CODEGEN")) {
+        assert(df.select(Connector.kvKeyed(col("kv"))).as[Boolean].collect().toSeq == want,
+          s"wholeStage=$codegen")
+      }
+    }
+  }
+
+  private def withSQLConf[T](kvs: (String, String)*)(body: => T): T = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("JsonLongField native equals from_json tolerant long extraction") {

@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** The spark.sql.extensions deployment path: a session built with
-  * GraftExtensions resolves graft_dot in plain SQL.
+  * GraftExtensions resolves the native functions in plain SQL.
   *
   * Needs its OWN SparkSession (extensions apply at session build), but
   * must not disturb the suite-shared one: clear the default/active
@@ -13,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * shared context for every later spec).
   */
 class ExtensionsSpec extends AnyFunSuite {
-  test("graft_dot resolves via spark.sql.extensions") {
+
+  private def withExtensionSession[T](body: SparkSession => T): T = {
     SparkSpec.session  // ensure the shared context exists first
     val prior = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
@@ -28,7 +32,19 @@ class ExtensionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.expressions.GraftExtensions())
       .getOrCreate()
-    try {
+    try body(spark)
+    finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prior.foreach { p =>
+        SparkSession.setDefaultSession(p)
+        SparkSession.setActiveSession(p)
+      }
+    }
+  }
+
+  test("graft_dot resolves via spark.sql.extensions") {
+    withExtensionSession { spark =>
       val out = spark.sql(
         "SELECT graft_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
           "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
@@ -58,12 +74,49 @@ class ExtensionsSpec extends AnyFunSuite {
       val sg = spark.sql("SELECT graft_shingles(array('a','b','c'), 2) AS g")
         .collect().head.getSeq[String](0)
       assert(sg == Seq("a b", "b c"))
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prior.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
+    }
+  }
+
+  /** Every object in `graft.expressions` with a `register(SparkSession)`
+    * method, found on the class path rather than listed by hand.
+    */
+  private def registerCalls(): Seq[SparkSession => Unit] = {
+    val pkg = "graft/expressions"
+    val loader = getClass.getClassLoader
+    // the suite runs from sbt's class directories
+    val files = loader.getResources(pkg).asScala.toSeq
+      .flatMap(url => new java.io.File(url.toURI).list().toSeq)
+    files.filter(_.endsWith("$.class")).distinct.flatMap { f =>
+      val cls = Class.forName(pkg.replace('/', '.') + "." + f.stripSuffix(".class"),
+        false, loader)
+      scala.util.Try(cls.getMethod("register", classOf[SparkSession])).toOption.map { m =>
+        (s: SparkSession) => { m.invoke(cls.getField("MODULE$").get(null), s); () }
+      }
+    }
+  }
+
+  test("every function a register method installs resolves via spark.sql.extensions") {
+    // the names come from the function registry of a session in which
+    // every register method ran, so a new native function that the
+    // extension hook misses fails here
+    val registered = SparkSpec.session.newSession()
+    val registry = registered.sessionState.functionRegistry
+    def graftNames = registry.listFunction().map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(graftNames.isEmpty, "a new session starts without native functions")
+    val calls = registerCalls()
+    assert(calls.size >= 18, s"found ${calls.size} register methods")
+    calls.foreach(_(registered))
+    val names = graftNames
+    assert(names.size >= 19, names.toSeq.sorted.mkString(", "))
+    withExtensionSession { spark =>
+      val ext = spark.sessionState.functionRegistry
+      val missing = names.filterNot(n => ext.functionExists(FunctionIdentifier(n)))
+      assert(missing.isEmpty, s"not injected by GraftExtensions: ${missing.toSeq.sorted}")
+      for (n <- names) {
+        val id = FunctionIdentifier(n)
+        assert(ext.lookupFunction(id).map(_.getClassName) ==
+          registry.lookupFunction(id).map(_.getClassName), n)
+        assert(spark.catalog.functionExists(n), n)
       }
     }
   }

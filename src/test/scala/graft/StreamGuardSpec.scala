@@ -6,9 +6,11 @@ import graft.operators.{Dedup, Drift, Knn, StatefulFunnel, StatefulTransitions}
 import graft.query.HumioQuery
 import graft.streaming.{ConnectorPipeline, Curation}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, JsonToStructs}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, JsonToStructs, Length}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.execution.streaming.operators.stateful.{SessionWindowStateStoreSaveExec, StateStoreSaveExec, StreamingDeduplicateExec, StreamingDeduplicateWithinWatermarkExec, StreamingGlobalLimitExec}
 import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
 import org.apache.spark.sql.execution.streaming.operators.stateful.join.StreamingSymmetricHashJoinExec
@@ -532,6 +534,97 @@ class StreamGuardSpec extends SparkSpec {
     try {
       mem2.addData(line); hunted.processAllAvailable()
       assertParsedOnce("queryStream", hunted)
+    } finally hunted.stop()
+  }
+
+  private val acceptAll = new ConnectorPipeline.BulkSink {
+    def post(events: Seq[String]): Boolean = true
+  }
+
+  /** Starts [[ConnectorPipeline.run]] on a MemoryStream, feeds `batches`
+    * one micro-batch each, and hands the query to `inspect` before
+    * stopping it.
+    */
+  private def withConnectorRun[T](batches: Seq[Seq[String]], enrich: Boolean = true,
+                                   sink: ConnectorPipeline.BulkSink = acceptAll)
+                                  (inspect: StreamingQuery => T): T = {
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[String]
+    val cp = java.nio.file.Files.createTempDirectory("graft-sg-run").toString
+    val q = ConnectorPipeline.run(mem.toDF(), sink, cp, "host1", "stream1",
+      triggerMs = 0L, enrich = enrich)
+    try {
+      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      inspect(q)
+    } finally q.stop()
+  }
+
+  test("connector run: one SQL execution per micro-batch") {
+    // the sink used to post through `batch.foreachPartition`, which
+    // started a second SQL execution per batch (a Row deserializer plan
+    // and a start event carrying its plan string); posting from the
+    // batch's planned rows runs inside the micro-batch's own execution
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val marker = "graft-sg-sql-executions-drained"
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => starts.add(s.description)
+        case _ => ()
+      }
+      // listener events arrive in order: a job started after the query
+      // stopped marks every execution event of the query as delivered
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          drained.countDown()
+    }
+    val begins = new java.util.concurrent.atomic.AtomicInteger
+    val sink = new ConnectorPipeline.BulkSink {
+      def post(events: Seq[String]): Boolean = true
+      override def begin(batchId: Long): Unit = begins.incrementAndGet()
+    }
+    def line(o: Int) =
+      s"""{"metadata":{"eventCreationTime":$o,"offset":$o},"event":{}}"""
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val runId = withConnectorRun(Seq(Seq(line(1), line(2)), Seq(line(3)), Seq(line(4))),
+        sink = sink)(_.runId.toString)
+      spark.sparkContext.setJobGroup(marker, marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      val ours = starts.toArray(Array.empty[String]).count(d => d != null && d.contains(runId))
+      assert(begins.get() == 3, s"batches that reached the sink: ${begins.get()}")
+      assert(ours == begins.get(),
+        s"$ours SQL executions for ${begins.get()} micro-batches")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("connector R2 drops empty lines by byte length: no Length in the plan") {
+    // `length` counts characters, walking every byte of a line only to
+    // compare the count with zero; `octet_length` reads the byte count
+    def assertNoLength(entry: String, q: StreamingQuery): Unit = {
+      val plan = q.asInstanceOf[StreamingQueryWrapper]
+        .streamingQuery.lastExecution.optimizedPlan
+      val lengths = plan.collect { case node => node.expressions }.flatten
+        .flatMap(_.collect { case l: Length => l })
+      assert(lengths.isEmpty, s"$entry: character-length test in the plan:\n$plan")
+    }
+    val line = """{"metadata":{"eventCreationTime":1,"offset":1},""" +
+      """"event":{"AuditKeyValues":[{"Key":"k","ValueString":"v"}]}}"""
+    for (enrich <- Seq(true, false))
+      withConnectorRun(Seq(Seq(line, "")), enrich = enrich)(
+        assertNoLength(s"run(enrich = $enrich)", _))
+
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[String]
+    val hunted = ConnectorPipeline.queryStream(mem.toDF(), "k = v", "host1",
+        "stream1", promote = Seq("k"))
+      .writeStream.format("memory").queryName("sg_connector_len")
+      .outputMode("append").start()
+    try {
+      mem.addData(line, ""); hunted.processAllAvailable()
+      assertNoLength("queryStream", hunted)
     } finally hunted.stop()
   }
 }

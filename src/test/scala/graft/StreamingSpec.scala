@@ -162,6 +162,31 @@ class StreamingSpec extends SparkSpec {
     assert(RecordingSink.received.asScala.size == 3) // delivered exactly the lost batch
   }
 
+  test("a poison KV line is dropped: every valid line delivered once, no batch fails") {
+    // a null KV entry or a KV entry without a Key used to fail R5, so the
+    // batch replayed the same line forever; R3 now drops it as corrupt
+    RecordingSink.reset()
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[String]
+    def poison(offset: Long, kv: String): String =
+      s"""{"metadata": {"offset": $offset, "eventCreationTime": 1}, "event": {"AuditKeyValues": $kv}}"""
+    val cp = Files.createTempDirectory("graft-cp").toString
+    val q = ConnectorPipeline.run(mem.toDF(), new RecordingSink(false), cp,
+      "h", "s", triggerMs = 50L, bulkMaxSize = 10)
+    try {
+      mem.addData(eventLine(1), poison(101, """[{"ValueString": "x"}]"""), eventLine(2))
+      q.processAllAvailable()
+      mem.addData(eventLine(3), poison(102, "[null]"), eventLine(4))
+      q.processAllAvailable()
+      assert(q.isActive && q.exception.isEmpty)
+      assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    } finally q.stop()
+    val offset = """\\"offset\\": (\d+)""".r
+    val delivered = RecordingSink.received.asScala.toSeq
+      .map(e => offset.findFirstMatchIn(e).get.group(1).toLong)
+    assert(delivered.sorted == (1L to 4L), "every valid event once, no poison line")
+  }
+
   test("checkpoint restart resumes past committed batches (app.py:38-58 upgraded)") {
     RecordingSink.reset()
     implicit val sq = spark.sqlContext
