@@ -158,7 +158,6 @@ object BenchStream {
 
     // JVM/codegen warm-up on a small slice so the measured runs aren't
     // charged for compilation (the Bench discipline)
-    val warmParts = 1
     StubFalconServer.register("bench-warm", Seq(StreamDesc(0, 1800)))
     (0L until 2000L).foreach(o => StubFalconServer.push("bench-warm", 0, o, line(o, 0)))
     val warmCkpt = java.nio.file.Files.createTempDirectory("graft-bench-warm").toString
@@ -167,16 +166,6 @@ object BenchStream {
         .option("appId", "bench-warm").load(),
       new CountingSink, warmCkpt, "h", "s",
       enrich = true, availableNow = true).awaitTermination()
-    val _ = warmParts
-
-    // fixed CPU-only calibration probe (same shape as graft.Bench's):
-    // cross-epoch records self-normalize through it
-    val calibrationSec = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0, 400000000L, 1, 32)
-        .selectExpr("sum(id % 1000003)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }.min
 
     val (wallE, progE) = drain(enrich = true, "enriched")
     val (wallR, progR) = drain(enrich = false, "raw")
@@ -307,7 +296,6 @@ object BenchStream {
     // configuration twice under two labels).
     val susSecs = sys.env.getOrElse("SPARK_GRAFT_STREAM_SUSTAIN_SEC", "60").toInt
     val rates: Seq[Long] = sys.env.get("SPARK_GRAFT_STREAM_RATES")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_RATE"))
       .getOrElse("80000,120000,160000,240000,320000")
       .split(',').map(_.trim.toLong).toSeq
     val partPoints = Seq(parts, 32).distinct
@@ -377,8 +365,6 @@ object BenchStream {
       }.mkString("[\n", ",\n", "\n  ]")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(benchFile),
       s"""{\n  "events": $total, "partitions": $parts,\n""" +
-        s"""  "calibration_sec": ${BigDecimal(calibrationSec)
-               .setScale(3, BigDecimal.RoundingMode.HALF_UP)},\n""" +
         s"""  "reference_floor_events_per_sec_per_partition": 20,\n""" +
         s"""  "reference_trigger": "200 events / 10 s",\n""" +
         s"""  "enriched": {"wall_sec": ${f(wallE)}, "events_per_sec": ${f(epsE)},\n""" +

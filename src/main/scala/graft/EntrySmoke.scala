@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke of the driver's t1 contract: `SparkEntry.entry` must return
   * rows>0 on sf0.001. Run: `sbt "runMain graft.EntrySmoke"`.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fixture sources are read-only and the JVM exits after the run —
-      // the regime the staged-subtree memo is sound in (see Scale.StageMemoConf)
-      .config("spark.graft.stage.memo", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Driver.session()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,19 +11,7 @@ object Verify {
     val only = args.drop(2).toSet
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fixture sources are read-only and the JVM exits after the run —
-      // the regime the staged-subtree memo is sound in (see Scale.StageMemoConf)
-      .config("spark.graft.stage.memo", "true")
-      // same contract for the hq compiled-pipeline memo (HumioQuery.PlanMemoConf)
-      .config("spark.graft.hq.memo", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session()
     // fail FAST if a session conf would diverge the engine from the
     // static oracle SQL (the r14 cellCap lesson, generalized) — a loud
     // named error here beats a hash mismatch at whatever SF the knob binds
@@ -37,27 +24,10 @@ object Verify {
       // so two sweeps of the same build are comparable (see Bench)
       .toSeq.sortBy(_._1)
       .foreach { case (name, fn) =>
-      // per-query timeout: one hung query must not wedge the whole
-      // correctness round. The job group lets the timeout path cancel the
-      // stuck Spark jobs before moving on.
-      val worker = new Thread(() => {
-        spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
+      Driver.watchdog(spark, name, timeoutSec) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-      }, s"verify-$name")
-      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      worker.setUncaughtExceptionHandler((_, e) => failure.set(e))
-      // daemon: a query that ignores cancellation must not block JVM exit
-      worker.setDaemon(true)
-      worker.start()
-      worker.join(timeoutSec * 1000)
-      val err: Option[String] =
-        if (worker.isAlive) {
-          spark.sparkContext.cancelJobGroup(name)
-          worker.join(30000)
-          Some(s"timed out after ${timeoutSec}s")
-        } else Option(failure.get).map(_.getMessage)
-      err.foreach { msg =>
+      }.foreach { msg =>
         System.err.println(s"[verify] $name failed: $msg")
         // remove any previous run's output: stale parquet here would make
         // the driver hash-compare an OLD result instead of recording the
