@@ -101,16 +101,13 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "300").toLong
     val benchFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", "BENCH_LOCAL.json")
-    // a typo'd name fails before session startup, not as a 0.00 s run
+    // a typo'd name or conf fails before session startup, not as a 0.00 s run
     val only = args.toSet
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val conf = Driver.envConf()
     val spark = Driver.session()
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
     // warm-up, so the first timed query is not charged for one-offs:
     // session init, codegen compiler, shuffle machinery, Jackson behind
     // from_json (~1 s cold), the noop-sink write path, and each table's

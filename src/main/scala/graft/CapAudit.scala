@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Registry of every conf-backed knob and scale cap in the engine, with
+/** Registry of every session conf and scale cap in the engine, with
   * the proof that each one cannot silently diverge the Spark plan from
   * its DuckDB oracle — the industrialization of the round-14 sf1-sweep
   * lesson: the sweep caught ONE cap (the semdedup cellCap) whose oracles
@@ -12,16 +10,10 @@ import org.apache.spark.sql.SparkSession
   * Every entry carries one of four defenses:
   *
   *  - [[RowsInvariant]] — a session conf that selects between plans with
-  *    IDENTICAL output rows (join strategy, aggregation shape, staging /
-  *    checkpoint flavor). Any setting is oracle-safe; the evidence is a
-  *    result-identity proof (a spec, or an oracled query twin that
-  *    shares the other mode's oracle through the driver's hash gate).
-  *  - [[OraclePinned]] — a session conf that CHANGES output rows, whose
-  *    oracles replay the default value (or the default count-scaled
-  *    rule). An override under oracle comparison is the r14 bug class by
-  *    construction, so [[assertOracleSafe]] fails FAST on it — Verify
-  *    calls it before dumping ([[Verify]]), converting a late hash-red
-  *    at some faraway SF into an immediate, named error.
+  *    IDENTICAL output rows (staging, memoization, checkpoint flavor).
+  *    Any setting is oracle-safe; the evidence is a result-identity
+  *    proof in a spec. No session conf may change output rows: a bound
+  *    the oracles must replay is a constant or a count-scaled rule.
   *  - [[SpliceCap]] — a Scala constant interpolated into BOTH the Spark
   *    plan and the oracle SQL text from the single definition site. It
   *    cannot diverge unless the splice is deleted; [[CapAuditSpec]]
@@ -41,7 +33,6 @@ object CapAudit {
 
   sealed trait Kind
   case object RowsInvariant extends Kind
-  case object OraclePinned extends Kind
   case object SpliceCap extends Kind
   case object ExactnessRegime extends Kind
   case object NoOracleSurface extends Kind
@@ -59,15 +50,10 @@ object CapAudit {
     *                  danger class and demands splice or regime proof)
     * @param evidence  the proof artifact: spec name, oracle splice, or
     *                  shared-oracle twin
-    * @param fragments for [[SpliceCap]]/[[OraclePinned]] entries:
-    *                  rendered SQL fragments that must each appear in at
-    *                  least one [[SparkEntry.oracleSql]] value (the
-    *                  structural splice assert, CapReplaySpec-style)
-    * @param allowedValue for [[OraclePinned]] confs with an explicit
-    *                  scalar default: setting the conf to exactly this
-    *                  rendering is harmless and allowed by
-    *                  [[assertOracleSafe]]; `None` means the default is
-    *                  a count-scaled RULE, so ANY session value diverges
+    * @param fragments for [[SpliceCap]] entries: rendered SQL fragments
+    *                  that must each appear in at least one
+    *                  [[SparkEntry.oracleSql]] value (the structural
+    *                  splice assert, CapReplaySpec-style)
     */
   final case class Entry(
       id: String,
@@ -75,10 +61,9 @@ object CapAudit {
       value: String,
       bindsWhen: String,
       evidence: String,
-      fragments: Seq[String] = Nil,
-      allowedValue: Option[String] = None)
+      fragments: Seq[String] = Nil)
 
-  import graft.operators.{Dedup, Drift, Knn, LogAnalytics, Scale, Sketches}
+  import graft.operators.{Drift, LogAnalytics, Scale, Sketches}
   import graft.queries.{LogQueries, PipelineQueries => PQ}
 
   val entries: Seq[Entry] = Seq(
@@ -108,74 +93,15 @@ object CapAudit {
     Entry(Scale.ReliableCheckpointConf, RowsInvariant, "false",
       "never — checkpoint flavor, rows unchanged",
       "ScaleSpec"),
-    Entry(Dedup.GramJoinModeConf, RowsInvariant, "false",
-      "never — window and distinct->count->join formulations are " +
-        "result-identical by construction",
-      "DedupSpec both-modes test; the oracled `_skewjoin` twins share the " +
-        "window-mode oracles through the driver's hash gate"),
-    Entry(LogAnalytics.ExactPercentileModeConf, RowsInvariant, "buffer",
-      "never — counts mode is exact and bit-identical (same lerp)",
-      "l_percentile_counts shares l_percentile's oracle; hash gate proves " +
-        "identity on the real corpus every round"),
-    Entry(graft.functions.Bloom.MBitsConf, RowsInvariant,
-      graft.functions.Bloom.Default.mBits.toString,
-      "never binds the ANSWER — an undersized bitmap degrades to " +
-        "pass-through (zero false negatives), the exact verify join " +
-        "restores bit-identical output at any m",
-      "CurationGateSpec proves x_decontam_bloom == x_decontam at m = 2^8; " +
-        "x_decontam_bloom shares x_decontam's oracle in the gate"),
-    Entry(graft.functions.Bloom.KConf, RowsInvariant,
-      graft.functions.Bloom.Default.k.toString,
-      "never binds the ANSWER — same zero-false-negative argument as mBits",
-      "CurationGateSpec; shared x_decontam oracle"),
 
-    // ── session confs: oracle-pinned (override breaks the hash gate) ──
-    Entry(PQ.SemdedupCellCapConf, OraclePinned,
-      PQ.SemdedupCellCapDefault.toString,
+    // ── constants: spliced into both engines from one definition ──
+    Entry("PipelineQueries.SEMDEDUP_CELL_CAP", SpliceCap,
+      PQ.SEMDEDUP_CELL_CAP.toString,
       "cells outgrow 1024 around sf1 (the r14 sweep catch)",
       "capIdsSql splices the md5-ordered cap into all five family " +
         "oracles; CapReplaySpec pins member identity at cap=4",
-      fragments = Seq(s"pos <= ${PQ.SemdedupCellCapDefault}",
-        "md5(CAST(vec_id AS VARCHAR))"),
-      allowedValue = Some(PQ.SemdedupCellCapDefault.toString)),
-    Entry(Knn.CodebookKConf, OraclePinned, "rule: fixture-pinned k " +
-      "(KMEANS_K=8 / IVF_K=16) via codebookK; library rule ceil(sqrt(n))",
-      "any session override — oracles replay the pinned fixture k",
-      "oracle SQL interpolates the fixture constants; assertOracleSafe " +
-        "fails on any session value",
-      allowedValue = None),
-    Entry(Dedup.SimhashBandsConf, OraclePinned,
-      "rule: 64 / simhashWidthFor(n) — 4x16-bit through n=16384, then 2x32",
-      "any session override — the oracle replays the count-scaled RULE, " +
-        "not the conf; the 2x32 TIER first binds at sf1 (50k docs > 16384)",
-      "x_simhash_pairs oracle replays the integer tier rule from count(*) " +
-        "(SF-independent); assertOracleSafe fails on any session value; " +
-        "the committed sf1 sweep (CORRECTNESS_SF1) verifies the tier " +
-        "switch cross-engine at a scale where it BINDS",
-      allowedValue = None),
-    Entry(Sketches.BloomMConf, OraclePinned,
-      "rule: smallest tier in BLOOM_TIERS with m >= 2*BLOOM_K*n",
-      "any session override — x_bloom's oracle replays the tier rule " +
-        "from count(*) via bloomMCaseSql; tier selection MOVES across " +
-        "the committed SFs (sweeps bind different tiers)",
-      "bloomMCaseSql splice (SF-independent tiering both sides); " +
-        "assertOracleSafe fails on any session value; SketchesSpec's " +
-        "boundary test evaluates the CASE at every tier boundary " +
-        "INCLUDING the top-tier ELSE arm (the bound no fixture reaches)",
-      fragments = Seq(s"ELSE ${Sketches.BLOOM_TIERS.last} END"),
-      allowedValue = None),
-    Entry(LogAnalytics.SketchExactAccuracyConf, OraclePinned,
-      LogAnalytics.SketchExactAccuracyDefault.toString,
-      "a group outgrows the accuracy (exact regime ends; default 2^20 " +
-        "covers the gate fixtures ~50x, so no sweep can reach the end)",
-      "LogAnalyticsSpec asserts max group < accuracy on BOTH gate SFs; " +
-        "l_percentile_sketch shares the exact quantile_disc oracle only " +
-        "inside the regime; CapAuditSpec observes the bound BINDING at " +
-        "accuracy=100 over a 10k-row group (GK rank error within " +
-        "n/accuracy)",
-      allowedValue = Some(LogAnalytics.SketchExactAccuracyDefault.toString)),
-
-    // ── constants: spliced into both engines from one definition ──
+      fragments = Seq(s"pos <= ${PQ.SEMDEDUP_CELL_CAP}",
+        "md5(CAST(vec_id AS VARCHAR))")),
     Entry("PipelineQueries.PROBE_CAP", SpliceCap, PQ.PROBE_CAP.toString,
       "binds from sf0.1 up (2000 embeddings > 500; sf0.001/sf0.01 have " +
         "exactly 500, fully covered) — every committed sf0.1/sf1 sweep " +
@@ -253,6 +179,15 @@ object CapAudit {
       fragments = Seq(s"ELSE ${Sketches.BLOOM_TIERS.last} END")),
 
     // ── exactness-regime bounds (fixture must sit inside the regime) ──
+    Entry("LogAnalytics.SKETCH_EXACT_ACCURACY", ExactnessRegime,
+      LogAnalytics.SKETCH_EXACT_ACCURACY.toString,
+      "a group outgrows the accuracy (exact regime ends; 2^20 covers " +
+        "the gate fixtures ~50x, so no sweep can reach the end)",
+      "LogAnalyticsSpec asserts max group < accuracy on BOTH gate SFs; " +
+        "l_percentile_sketch shares the exact quantile_disc oracle only " +
+        "inside the regime; CapAuditSpec observes the bound BINDING at " +
+        "accuracy=100 over a 10k-row group (GK rank error within " +
+        "n/accuracy)"),
     Entry("LogQueries.TOPK_SKETCH_CAP", ExactnessRegime,
       LogQueries.TOPK_SKETCH_CAP.toString,
       "distinct event_type exceeds the Misra-Gries capacity (exact " +
@@ -275,32 +210,4 @@ object CapAudit {
     */
   def confKeys: Set[String] =
     entries.map(_.id).filter(_.startsWith("spark.graft.")).toSet
-
-  /** Conf keys whose non-default session value diverges the engine from
-    * its oracles, mapped to the (optional) single allowed rendering.
-    */
-  def oraclePinned: Map[String, Option[String]] =
-    entries.collect { case e if e.kind == OraclePinned =>
-      e.id -> e.allowedValue
-    }.toMap
-
-  /** Fail FAST when oracle comparison is active and a session conf
-    * would silently diverge the Spark result from the static oracle SQL
-    * — the generalization of the r14 cellCap lesson. Called by
-    * [[Verify]] before any query is dumped.
-    */
-  def assertOracleSafe(s: SparkSession): Unit = {
-    val bad = oraclePinned.toSeq.sortBy(_._1).flatMap { case (key, allowed) =>
-      s.conf.getOption(key) match {
-        case Some(v) if !allowed.contains(v) =>
-          Some(s"$key=$v (oracles replay ${allowed.getOrElse("the count-scaled rule")})")
-        case _ => None
-      }
-    }
-    require(bad.isEmpty,
-      "oracle-pinned conf overridden while oracle comparison is active — " +
-        "the Spark result would diverge from the static oracle SQL and " +
-        "surface only as a hash mismatch at whatever SF the knob binds: " +
-        bad.mkString("; "))
-  }
 }

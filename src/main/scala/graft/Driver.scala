@@ -31,6 +31,27 @@ object Driver {
     spark
   }
 
+  /** The session confs of a SPARK_GRAFT_CONF value ("k=v;k=v"), which
+    * Bench and Explain set for probes. An entry without `=`, or a
+    * `spark.graft.*` key not in [[CapAudit.confKeys]], is an error: a
+    * probe whose knob is silently dropped times the default it meant to
+    * move.
+    */
+  def parseConf(raw: String): Seq[(String, String)] =
+    raw.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      val eq = kv.indexOf('=')
+      require(eq > 0, s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
+      val key = kv.take(eq).trim
+      require(!key.startsWith("spark.graft.") || CapAudit.confKeys(key),
+        s"SPARK_GRAFT_CONF key '$key' is not a graft conf (known: " +
+          s"${CapAudit.confKeys.toSeq.sorted.mkString(", ")})")
+      key -> kv.drop(eq + 1).trim
+    }
+
+  /** [[parseConf]] of the SPARK_GRAFT_CONF environment variable. */
+  def envConf(): Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_CONF").map(parseConf).getOrElse(Nil)
+
   /** Runs `body` on a daemon thread in job group `name` and waits at most
     * `timeoutSec`, so one hung query cannot stall a whole run. On timeout
     * the group's jobs are cancelled (interrupting their tasks) and the

@@ -20,6 +20,7 @@ object Explain {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
+    val conf = Driver.envConf()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -27,11 +28,7 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
     val runs = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_RUNS", "0").toInt
     val showPlan = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_PLAN", "1") != "0"
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted

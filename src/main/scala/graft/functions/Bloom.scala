@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -18,9 +18,8 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
   * proves exactly that with a deliberately undersized filter) — but the
   * pre-filter does no work. For n = 10^8 at ε = 1% the formula
   * m = −n·ln ε / (ln 2)² gives m ≈ 2^30 bits (= 128 MiB, still flat
-  * whatever the gram bytes) with k = (m/n)·ln 2 ≈ 7; both are session
-  * confs ([[Bloom.MBitsConf]], [[Bloom.KConf]]) so an operator sizes
-  * the filter to the eval suite without a code edit.
+  * whatever the gram bytes) with k = (m/n)·ln 2 ≈ 7; a caller sizes the
+  * filter to its eval suite by passing its own params.
   */
 final case class BloomParams(mBits: Long, k: Int) {
   require(mBits >= 64 && (mBits & (mBits - 1)) == 0,
@@ -73,21 +72,13 @@ final case class BloomParams(mBits: Long, k: Int) {
   * literal).
   */
 object Bloom {
-  /** Session confs sizing the bitmap; defaults match [[Default]]. */
-  val MBitsConf = "spark.graft.bloom.mBits"
-  val KConf = "spark.graft.bloom.k"
-
   /** 2^20 bits (128 KiB) × 5 hashes — ε < 1% up to ~10^5 keys. */
   val Default: BloomParams = BloomParams(1L << 20, 5)
-
-  def params(s: SparkSession): BloomParams = BloomParams(
-    s.conf.get(MBitsConf, Default.mBits.toString).toLong,
-    s.conf.get(KConf, Default.k.toString).toInt)
 
   /** The k bit positions of a gram: xxhash64 seeded by the probe index
     * via an extra hashed column. Both build and probe sides call this,
     * so agreement is by construction. `p` is deliberately NOT defaulted:
-    * a build side sized from conf probed with a forgotten default would
+    * a resized build side probed with a forgotten default would
     * mis-align bit positions and silently drop true overlaps.
     */
   def positions(gram: Column, p: BloomParams): Column =

@@ -19,42 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Session conf selecting how the cross-doc gram dup flag is computed
-    * ([[gramDupFlag]]): `false` (default) = window over the gram
-    * partition (one exchange, fastest when gram frequencies are tame);
-    * `true` = distinct → count → equi-join (AQE-skew-splittable, the
-    * 100 TB plan for Zipfian corpora with hot boilerplate grams).
-    */
-  val GramJoinModeConf = "spark.graft.dedup.gramJoinMode"
-
-  /** Cross-doc duplication flag per gram occurrence: input is
-    * (doc_id, pos, gram) rows, output adds `dup` (int 0/1) = "this gram
-    * occurs in ≥ 2 distinct docs". Two formulations with IDENTICAL
-    * results, selected by [[GramJoinModeConf]]:
-    *
-    *  - window (default): flag each gram row that starts a new doc in
-    *    (doc_id, pos) order with a lag window, sum the flags over the
-    *    gram partition — distinct-doc count without count(DISTINCT)
-    *    (not window-able), and both windows share ONE gram exchange.
-    *    Fastest at tame gram frequencies, but a pathologically hot gram
-    *    (cross-corpus boilerplate: license headers, navigation chrome)
-    *    lands every occurrence in one task, and window execs cannot be
-    *    AQE-split.
-    *  - join (`true`): `distinct(gram, doc_id)` partial-aggregates
-    *    map-side AND spreads a hot gram across doc_id hash partitions,
-    *    `groupBy(gram).count` partial-aggregates again, and the flag
-    *    rejoins on gram — a shuffle join AQE skew-split handles. The
-    *    input is staged ([[Scale.stage]]) because BOTH the dup-gram
-    *    aggregate and the rejoin probe it and their shuffles key
-    *    differently (no exchange reuse possible): without staging the
-    *    corpus tokenize+shingle explode would run twice. Net cost vs
-    *    the window form: one materialization plus one extra shuffle
-    *    (measured slower at sf0.1, which is why it is opt-in), but no
-    *    single-task ceiling: the 100 TB mode for Zipfian corpora.
-    *
-    * Both modes return the same (doc_id, pos, gram, dup) column order —
-    * callers may bind positionally.
-    */
   /** The canonical positional-gram relation per (corpus, gram) — every
     * token of every doc exploded to its `k`-word shingles (a short
     * doc's single whole-text gram included). Deliberately UNSTAGED: the
@@ -70,8 +34,38 @@ object Dedup {
       Text.shinglesNative(Text.tokens(text), k)).as(Seq("pos", "gram")))
   }
 
-  def gramDupFlag(pos: DataFrame): DataFrame =
-    if (pos.sparkSession.conf.get(GramJoinModeConf, "false").toBoolean) {
+  /** Cross-doc duplication flag per gram occurrence: input is
+    * (doc_id, pos, gram) rows, output adds `dup` (int 0/1) = "this gram
+    * occurs in ≥ 2 distinct docs". Two formulations with IDENTICAL
+    * results, selected by `skewSafe`:
+    *
+    *  - window (`false`, the default): flag each gram row that starts
+    *    a new doc in (doc_id, pos) order with a lag window, sum the
+    *    flags over the gram partition — distinct-doc count without
+    *    count(DISTINCT) (not window-able), and both windows share ONE
+    *    gram exchange.
+    *    Fastest at tame gram frequencies, but a pathologically hot gram
+    *    (cross-corpus boilerplate: license headers, navigation chrome)
+    *    lands every occurrence in one task, and window execs cannot be
+    *    AQE-split.
+    *  - join (`true`): `distinct(gram, doc_id)` partial-aggregates
+    *    map-side AND spreads a hot gram across doc_id hash partitions,
+    *    `groupBy(gram).count` partial-aggregates again, and the flag
+    *    rejoins on gram — a shuffle join AQE skew-split handles. The
+    *    input is staged ([[Scale.stage]]) because BOTH the dup-gram
+    *    aggregate and the rejoin probe it and their shuffles key
+    *    differently (no exchange reuse possible): without staging the
+    *    corpus tokenize+shingle explode would run twice. Net cost vs
+    *    the window form: one materialization plus one extra shuffle
+    *    (measured slower at sf0.1, which is why it is not the
+    *    default), but no single-task ceiling: the 100 TB mode for
+    *    Zipfian corpora.
+    *
+    * Both modes return the same (doc_id, pos, gram, dup) column order —
+    * callers may bind positionally.
+    */
+  def gramDupFlag(pos: DataFrame, skewSafe: Boolean = false): DataFrame =
+    if (skewSafe) {
       // stage only the BOUNDED dup-gram set (grams in ≥2 docs), not the
       // corpus-sized gram relation: the codegen'd explode re-runs
       // cheaper than a corpus checkpoint reads back (measured at
@@ -117,14 +111,14 @@ object Dedup {
     * single whole-text gram spans s..s+k−1 ⊇ its tokens, so its
     * every-token-cut-iff-dup semantics ride the same island path.
     *
-    * Skew note: the dup flag is [[gramDupFlag]], so the
-    * [[GramJoinModeConf]] session conf selects the skew-safe
-    * distinct→count→equi-join formulation for Zipfian corpora where a
-    * hot boilerplate gram would single-task the default window form.
+    * Skew note: `skewSafe` passes through to [[gramDupFlag]], selecting
+    * the distinct→count→equi-join formulation for Zipfian corpora where
+    * a hot boilerplate gram would single-task the default window form.
     *
     * Output: (doc_id, kept_text, n_tokens, n_cut).
     */
-  def cutDupSpans(docs: DataFrame, text: Column, k: Int): DataFrame = {
+  def cutDupSpans(docs: DataFrame, text: Column, k: Int,
+                  skewSafe: Boolean = false): DataFrame = {
     require(k >= 2, s"cutDupSpans: k must be >= 2, got $k")
     // token t is cut iff SOME cross-doc-dup gram covers it — which is
     // exactly "t lies in a merged island of the dup gram spans". The
@@ -138,7 +132,7 @@ object Dedup {
     // re-measured −45% at sf1 with identical hashes). A short doc's
     // single whole-text gram spans s..s+k-1 ⊇ its tokens, so the
     // every-token-cut-iff-dup semantics ride the same island path.
-    val dup = gramDupFlag(posGrams(docs, text, k))
+    val dup = gramDupFlag(posGrams(docs, text, k), skewSafe)
     val islands = Scale.stage(mergeIslands(
       dup.where(col("dup") === 1)
         .select(col("doc_id"), (col("pos") + 1).cast("long").as("s"),
@@ -165,14 +159,15 @@ object Dedup {
     * Scale shape: one explode to (doc, pos, gram-text) — linear in
     * corpus tokens; the occurrence count is a whole-partition window
     * over ONE gram-text exchange (default mode — no dup-set join, the
-    * explode lineage runs once; [[GramJoinModeConf]] selects the
-    * skew-safe aggregate+join-back formulation for Zipfian corpora,
-    * hash-proven identical by the `_skewjoin` twins); island merge is
+    * explode lineage runs once; `skewSafe` selects the
+    * aggregate+join-back formulation for Zipfian corpora, hash-proven
+    * identical by the `_skewjoin` twins); island merge is
     * two windows over ONE doc_id exchange. No pair matrix: a gram
     * occurring k times costs k rows, never k².
     */
-  def substrIslands(docs: DataFrame, text: Column, gram: Int): DataFrame =
-    mergeIslands(dupGramSpans(docs, text, gram, nonFirstOnly = false))
+  def substrIslands(docs: DataFrame, text: Column, gram: Int,
+                    skewSafe: Boolean = false): DataFrame =
+    mergeIslands(dupGramSpans(docs, text, gram, nonFirstOnly = false, skewSafe))
 
   /** The ESD CUT itself — dedup, not just measurement: every token
     * covered by a duplicated `gram`-word span whose occurrence is NOT
@@ -189,11 +184,13 @@ object Dedup {
     * marking is a doc_id equi-join with a BETWEEN band against the
     * bounded island set (islands ≤ spans; AQE broadcasts it when
     * small), never a token×token product; the rebuild is the
-    * linededup sorted-struct aggregate on one doc exchange.
+    * linededup sorted-struct aggregate on one doc exchange. `skewSafe`
+    * as in [[substrIslands]].
     */
-  def substrCut(docs: DataFrame, text: Column, gram: Int): DataFrame =
+  def substrCut(docs: DataFrame, text: Column, gram: Int,
+                skewSafe: Boolean = false): DataFrame =
     applyIslandCut(docs, text,
-      mergeIslands(dupGramSpans(docs, text, gram, nonFirstOnly = true)))
+      mergeIslands(dupGramSpans(docs, text, gram, nonFirstOnly = true, skewSafe)))
 
   /** Incremental ESD CUT: remove from the arriving `probes` docs every
     * token covered by a span whose text exists in the kept corpus's
@@ -239,23 +236,6 @@ object Dedup {
           x => x("tok"))).as("kept_text"))
   }
 
-  /** Duplicated-gram spans (doc_id, s, e): every `gram`-word window
-    * whose text occurs ≥ 2 times corpus-wide; with `nonFirstOnly` the
-    * corpus-first occurrence (min (doc_id, s)) of each gram is exempt
-    * (it is the copy that survives a cut).
-    *
-    * The occurrence count — and the first-occurrence struct, same
-    * frame — are whole-partition windows over ONE gram exchange: the
-    * explode lineage runs once and no dup-set join is needed (a
-    * groupBy+join-back formulation re-ran the explode on both sides
-    * and probed every gram through a 100k-string broadcast hash:
-    * measured 15× at 10× data; this shape re-measured ~6×). Skew
-    * bound: the frame is the gram's occurrence count (max 5 on the
-    * fixture); for Zipfian corpora with boilerplate-hot grams,
-    * [[GramJoinModeConf]] selects the skew-safe aggregate+join-back
-    * formulation instead (AQE-splittable, result-identical — the
-    * `_skewjoin` query twins hash-prove it on the real corpus).
-    */
   /** One row per full `gram`-word window: (doc_id, s, gtext), s 1-based.
     * shinglesNative emits ONE whole-doc gram for docs shorter than
     * `gram` words — those are whole-doc exact-dup signals at a different
@@ -345,7 +325,7 @@ object Dedup {
     * feeds the per-doc counts, the rare filter, and both join sides.
     */
   def containmentPairs(docs: DataFrame, text: Column, gram: Int,
-                       dfCap: Int): DataFrame = {
+                       dfCap: Int, skewSafe: Boolean = false): DataFrame = {
     require(dfCap >= 2, s"containmentPairs: dfCap must be >= 2, got $dfCap")
     // ONE corpus lineage, never recomputed. Default mode: per-gram doc
     // frequency via the gramDupFlag lag-flag trick (first row per
@@ -356,15 +336,15 @@ object Dedup {
     // bounded relation is staged for the self-join (a
     // distinct→count→join-back formulation recomputed the corpus
     // explode on every consumer: measured 24× at 10× data; this shape
-    // 1.6×). [[GramJoinModeConf]] selects the skew-safe
-    // aggregate+join-back formulation instead — a Zipfian boilerplate
-    // gram would land its every occurrence in one non-splittable
-    // window task here; the aggregate path partial-aggregates it
-    // map-side and is AQE-splittable (the gramDupFlag trade, the
+    // 1.6×). `skewSafe` selects the aggregate+join-back formulation
+    // instead — a Zipfian boilerplate gram would land its every
+    // occurrence in one non-splittable window task here; the
+    // aggregate path partial-aggregates it map-side and is
+    // AQE-splittable (the gramDupFlag trade, the
     // `_skewjoin` twin hash-proves mode-invariance), at the cost of
     // staging the distinct gram relation for its three consumers.
     val k =
-      if (docs.sparkSession.conf.get(GramJoinModeConf, "false").toBoolean) {
+      if (skewSafe) {
         val g = Scale.stage(
           explodeGrams(docs, text, gram).select("doc_id", "gtext").distinct())
         val na = g.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
@@ -407,14 +387,14 @@ object Dedup {
     * session stage-memo and then read a checkpoint thousands of times
     * smaller than the corpus.
     */
-  private def dupOccurrences(docs: DataFrame, text: Column,
-                             gram: Int): DataFrame = {
+  private def dupOccurrences(docs: DataFrame, text: Column, gram: Int,
+                             skewSafe: Boolean): DataFrame = {
     val grams = explodeGrams(docs, text, gram)
     val isFirst = (col("doc_id") === col("fst.doc_id") &&
       col("s") === col("fst.s")).as("is_first")
     val rel =
-      if (docs.sparkSession.conf.get(GramJoinModeConf, "false").toBoolean) {
-        // skew-safe formulation (the [[GramJoinModeConf]] escape hatch,
+      if (skewSafe) {
+        // skew-safe formulation (the Zipfian escape hatch,
         // result-identical — the _skewjoin twins hash-prove it): the
         // per-gram stats aggregate once (map-side partials absorb a hot
         // gram) and join back, so no window ever sees a Zipfian gram's
@@ -441,9 +421,26 @@ object Dedup {
     Scale.stage(rel)
   }
 
+  /** Duplicated-gram spans (doc_id, s, e): every `gram`-word window
+    * whose text occurs ≥ 2 times corpus-wide; with `nonFirstOnly` the
+    * corpus-first occurrence (min (doc_id, s)) of each gram is exempt
+    * (it is the copy that survives a cut).
+    *
+    * The occurrence count — and the first-occurrence struct, same
+    * frame — are whole-partition windows over ONE gram exchange: the
+    * explode lineage runs once and no dup-set join is needed (a
+    * groupBy+join-back formulation re-ran the explode on both sides
+    * and probed every gram through a 100k-string broadcast hash:
+    * measured 15× at 10× data; this shape re-measured ~6×). Skew
+    * bound: the frame is the gram's occurrence count (max 5 on the
+    * fixture); for Zipfian corpora with boilerplate-hot grams,
+    * `skewSafe` selects the aggregate+join-back formulation instead
+    * (AQE-splittable, result-identical — the `_skewjoin` query twins
+    * hash-prove it on the real corpus).
+    */
   private def dupGramSpans(docs: DataFrame, text: Column, gram: Int,
-                           nonFirstOnly: Boolean): DataFrame = {
-    val occ = dupOccurrences(docs, text, gram)
+                           nonFirstOnly: Boolean, skewSafe: Boolean): DataFrame = {
+    val occ = dupOccurrences(docs, text, gram, skewSafe)
     val dupOnly = if (nonFirstOnly) occ.where(!col("is_first")) else occ
     dupOnly.select(col("doc_id"), col("s"), (col("s") + (gram - 1)).as("e"))
   }
@@ -624,54 +621,40 @@ object Dedup {
   def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
-  /** Session conf overriding the SimHash band count — the recall/cost
-    * knob of [[simhashCandidates]]. Candidate volume is BIRTHDAY-BOUND:
-    * random (dissimilar) signatures collide on a width-w band at rate
-    * n²·nBands/2^w, so a fixed width saturates as the corpus grows
-    * (the full-suite ×10 probe measured x_simhash_pairs at 24× warm —
-    * 16-bit bands over 50k docs). Production retunes with n: fewer,
-    * WIDER bands (w ≳ log2(n) + margin) trade recall (the pigeonhole
-    * guarantee covers hamming < nBands) for bounded accidental
-    * collisions — the Manku et al. web-crawl dedup design decision.
-    */
-  val SimhashBandsConf = "spark.graft.dedup.simhashBands"
-
   /** Band-width rule for a 64-bit SimHash over an `n`-doc corpus: the
-    * smallest width w ∈ {16, 32, 64} with 2^w ≥ 4n. Under it the
-    * expected ACCIDENTAL candidate volume (random signatures colliding
-    * on a band, the birthday term) is nBands·n²/2^(w+1) ≤ n/2 at every
-    * tier — linear in the corpus by construction, so the default plan
-    * survives any scale-up without a conf. The recall trade per width
+    * smallest width w ∈ {16, 32, 64} with 2^w ≥ 4n. Candidate volume is
+    * BIRTHDAY-BOUND: random (dissimilar) signatures collide on a width-w
+    * band at rate n²·nBands/2^w, so a fixed width saturates as the
+    * corpus grows (the full-suite ×10 probe measured x_simhash_pairs at
+    * 24× warm — 16-bit bands over 50k docs). Under this rule the
+    * expected ACCIDENTAL candidate volume is nBands·n²/2^(w+1) ≤ n/2 at
+    * every tier — linear in the corpus by construction, so the plan
+    * survives any scale-up unchanged. The recall trade per width
     * (the Manku et al. design decision — one 64-bit signature only
     * subdivides so many ways): w=16 → 4 bands, pigeonhole GUARANTEES
     * every pair at hamming ≤ 3 and catches most ≤ 12; w=32 → 2 bands,
     * guarantee drops to hamming ≤ 1 (near-identical docs — SimHash
     * near-dups concentrate there, and anything hash-equal on either
     * half still surfaces); w=64 → exact-signature match only. A recall-
-    * critical corpus at n > 16384 should pin [[SimhashBandsConf]] to 4
-    * and pay the quadratic tail knowingly, or move to the MinHash LSH
-    * path whose signature width grows with permutations.
+    * critical corpus at n > 16384 should call [[simhashCandidates]] with
+    * nBands = 4 and pay the quadratic tail knowingly, or move to the
+    * MinHash LSH path whose signature width grows with permutations.
     */
   def simhashWidthFor(n: Long): Int =
     if (4L * n <= (1L << 16)) 16
     else if (BigInt(4) * BigInt(n) <= (BigInt(1) << 32)) 32
     else 64
 
-  /** Band COUNT for `docs` under [[simhashWidthFor]]: the
-    * [[SimhashBandsConf]] session override when set, else 64/w with w
+  /** Band COUNT for `docs` under [[simhashWidthFor]]: 64/w with w
     * scaled from the corpus count — a one-row driver artifact, memoized
-    * per session under the stage-memo contract (the
-    * [[graft.operators.Knn.codebookSize]] discipline; sessions without
-    * the opt-in memo conf pay a metadata-cheap count() per plan build —
-    * pin the conf if even that matters).
+    * per session under the stage-memo contract (sessions without the
+    * opt-in memo conf pay a metadata-cheap count() per plan build).
     */
-  def simhashBands(docs: DataFrame): Int =
-    docs.sparkSession.conf.getOption(SimhashBandsConf).map(_.toInt)
-      .getOrElse {
-        val n = Scale.memoArtifact(docs, "simhash_n")(
-          java.lang.Long.valueOf(docs.count()))
-        64 / simhashWidthFor(n.longValue())
-      }
+  def simhashBands(docs: DataFrame): Int = {
+    val n = Scale.memoArtifact(docs, "simhash_n")(
+      java.lang.Long.valueOf(docs.count()))
+    64 / simhashWidthFor(n.longValue())
+  }
 
   /** SimHash near-dup pipeline: cut each 64-bit signature into `nBands`
     * equal bit-bands; docs sharing ANY band become candidates (a pair
@@ -679,7 +662,7 @@ object Dedup {
     * pigeonhole); only candidates pay the exact Hamming verification.
     * Same scale shape as the MinHash path: band equi-join, never the
     * pair matrix. Size the bands with the corpus — see
-    * [[SimhashBandsConf]].
+    * [[simhashWidthFor]].
     */
   def simhashCandidates(docs: DataFrame, text: Column, nBands: Int,
                         maxHamming: Int): DataFrame = {

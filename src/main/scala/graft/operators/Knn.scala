@@ -449,31 +449,6 @@ object Knn {
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
     (DataFrame, Int)]()
 
-  /** Session conf overriding the codebook size `k` — the scale knob of
-    * the IVF family. Declared queries pin their fixture k as the
-    * default (oracle replay needs a constant) but read this conf first,
-    * so a probe or a production session can retune k with the corpus
-    * without touching the plans.
-    */
-  val CodebookKConf = "spark.graft.ivf.k"
-
-  /** Codebook-size rule for library callers: the [[CodebookKConf]]
-    * override when set, else ceil(√n) — the SemDeDup cell discipline.
-    * With k ~ √n, cells stay O(√n), so the serving path's per-probe
-    * work (nprobe·|cell|) and any within-cell quadratic term grow as
-    * √n instead of n/k-with-fixed-k (the r9 100×-probe finding: fixed
-    * k=8 made x_ivfknn_trained's warm serving 4.3× at 100× data from
-    * cell growth alone). The corpus count is a one-row driver
-    * artifact, memoized per session under the stage-memo contract.
-    */
-  def codebookSize(vectors: DataFrame): Int =
-    vectors.sparkSession.conf.getOption(CodebookKConf).map(_.toInt)
-      .getOrElse {
-        val n = Scale.memoArtifact(vectors, "codebook_n")(
-          java.lang.Long.valueOf(vectors.count()))
-        math.max(1, math.ceil(math.sqrt(n.doubleValue())).toInt)
-      }
-
   def kmeansTrain(vectors: DataFrame, seed: DataFrame, dim: Int,
                   maxRounds: Int): (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")

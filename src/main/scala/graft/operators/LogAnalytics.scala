@@ -159,20 +159,18 @@ object LogAnalytics {
     */
   val ApproxPercentileAccuracy = 10000
 
-  /** Session conf backing the EXACT-REGIME sketch accuracy (the
-    * l_percentile_sketch surface). Contract, like the semdedup cellCap
-    * one: the configured accuracy MUST exceed the largest group's row
-    * count — that is what keeps the Greenwald–Khanna summary
-    * uncompressed, hence exact, hence able to share the exact twin's
-    * `quantile_disc` oracle. A corpus whose largest group outgrows the
-    * setting must raise it (the sketch stays correct-as-a-sketch either
-    * way; only the EXACTNESS claim, and with it the shared oracle,
-    * needs the bound). Default 2^20 covers sf0.1's ~20k-row groups
-    * ~50×; LogQueriesSpec asserts the bound against the gate fixture so
-    * a larger fixture fails loudly instead of hash-mismatching.
+  /** The EXACT-REGIME sketch accuracy (the l_percentile_sketch
+    * surface). It MUST exceed the largest group's row count — that is
+    * what keeps the Greenwald–Khanna summary uncompressed, hence exact,
+    * hence able to share the exact twin's `quantile_disc` oracle. A
+    * corpus whose largest group outgrows it needs a larger constant
+    * (the sketch stays correct-as-a-sketch either way; only the
+    * EXACTNESS claim, and with it the shared oracle, needs the bound).
+    * 2^20 covers sf0.1's ~20k-row groups ~50×; LogAnalyticsSpec asserts
+    * the bound against the gate fixtures so a larger fixture fails
+    * loudly instead of hash-mismatching.
     */
-  val SketchExactAccuracyConf = "spark.graft.percentile.sketch.accuracy"
-  val SketchExactAccuracyDefault: Int = 1 << 20
+  val SKETCH_EXACT_ACCURACY: Int = 1 << 20
 
   // the one grouped-percentile shape both twins share: detRound4 (not
   // round(): cross-engine rounding convention — engine round() semantics
@@ -185,30 +183,16 @@ object LogAnalytics {
     events.groupBy(dim.as("dim")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Session conf selecting the exact-percentile plan ([[percentiles]]):
-    * `buffer` (default) = Spark's `percentile` aggregate, whose merge
-    * buffer holds every distinct value of a group in memory on one
-    * reducer — fastest at bounded group volume; `counts` =
-    * [[percentilesByCounts]], the 100 TB plan for discrete-ish metrics.
-    * Read at PLAN BUILD time (the [[graft.operators.Dedup.GramJoinModeConf]]
-    * discipline), so callers may set it around DataFrame construction
-    * and restore immediately.
-    */
-  val ExactPercentileModeConf = "spark.graft.percentile.exactMode"
-
   /** Exact interpolated percentiles of `v` per dimension (DuckDB
-    * `quantile_cont` twin). The default plan holds all values per group
-    * in the aggregate's merge buffer — fine for bounded dims; at 100 TB
-    * pick by value type: discrete-ish metrics (integers, fixed-decimal
-    * latencies) → `counts` mode via [[ExactPercentileModeConf]] (still
-    * exact); continuous doubles → `percentile_approx`
-    * ([[percentilesApprox]]).
+    * `quantile_cont` twin). Spark's `percentile` aggregate holds every
+    * value of a group in its merge buffer on one reducer — fastest at
+    * bounded group volume; at 100 TB pick by value type: discrete-ish
+    * metrics (integers, fixed-decimal latencies) →
+    * [[percentilesByCounts]] (still exact); continuous doubles →
+    * `percentile_approx` ([[percentilesApprox]]).
     */
   def percentiles(events: DataFrame, dim: Column, v: Column, ps: Seq[Double]): DataFrame =
-    if (events.sparkSession.conf.get(ExactPercentileModeConf, "buffer") == "counts")
-      percentilesByCounts(events, dim, v, ps)
-    else
-      pctByDim(events, dim, ps, p => percentile(v, lit(p)))
+    pctByDim(events, dim, ps, p => percentile(v, lit(p)))
 
   /** EXACT interpolated percentiles from value COUNTS — result-identical
     * to [[percentiles]] (same lerp, bit-for-bit), different scale shape.

@@ -83,11 +83,6 @@ object Sketches {
     */
   val BLOOM_TIERS: Seq[Int] = (14 to 24).map(1 << _)
 
-  /** Session override for the Bloom bit count (else scaled from the
-    * insert count — see [[BLOOM_TIERS]]).
-    */
-  val BloomMConf = "spark.graft.bloom.m"
-
   /** Smallest tier with m ≥ 2·k·n; the top tier past that. */
   def bloomMFor(n: Long): Int =
     BLOOM_TIERS.find(m => m.toLong >= 2L * BLOOM_K * n)

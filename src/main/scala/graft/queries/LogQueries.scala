@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.LogAnalytics
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** §2.3-B — log-analytics queries over `events`, each with a DuckDB oracle.
@@ -61,8 +61,12 @@ object LogQueries {
       .orderBy("event_type")
 
   def lPercentile(s: SparkSession, dir: String): DataFrame =
-    LogAnalytics.percentiles(Tables.events(s, dir), col("event_type"), col("value"),
-        Seq(0.5, 0.9, 0.99))
+    lPercentileBy(LogAnalytics.percentiles, s, dir)
+
+  private def lPercentileBy(
+      exact: (DataFrame, Column, Column, Seq[Double]) => DataFrame,
+      s: SparkSession, dir: String): DataFrame =
+    exact(Tables.events(s, dir), col("event_type"), col("value"), Seq(0.5, 0.9, 0.99))
       .withColumnRenamed("dim", "event_type")
       .orderBy("event_type")
 
@@ -95,11 +99,9 @@ object LogQueries {
   def lPercentileSketch(s: SparkSession, dir: String): DataFrame =
     LogAnalytics.percentilesApprox(Tables.events(s, dir), col("event_type"),
         col("value"), Seq(0.5, 0.9, 0.99),
-        // conf-backed (like cellCap / Bloom m,k): the exact-regime claim
-        // holds only while accuracy exceeds the largest group — see the
-        // SketchExactAccuracyConf contract
-        accuracy = s.conf.get(LogAnalytics.SketchExactAccuracyConf,
-          LogAnalytics.SketchExactAccuracyDefault.toString).toInt)
+        // the exact-regime claim holds only while accuracy exceeds the
+        // largest group — see SKETCH_EXACT_ACCURACY
+        accuracy = LogAnalytics.SKETCH_EXACT_ACCURACY)
       .withColumnRenamed("dim", "event_type")
       .orderBy("event_type")
 
@@ -110,15 +112,9 @@ object LogQueries {
     * buffer. Declared as a query twin SHARING [[lPercentile]]'s oracle —
     * the correctness gate hash-proves the two exact modes
     * result-identical on the real corpus (the `_skewjoin` discipline).
-    * The conf is read at plan build time, so restoring it after
-    * construction keeps the counts shape in the lazy plan.
     */
-  def lPercentileCounts(s: SparkSession, dir: String): DataFrame = {
-    val prev = s.conf.get(LogAnalytics.ExactPercentileModeConf, "buffer")
-    s.conf.set(LogAnalytics.ExactPercentileModeConf, "counts")
-    try lPercentile(s, dir)
-    finally s.conf.set(LogAnalytics.ExactPercentileModeConf, prev)
-  }
+  def lPercentileCounts(s: SparkSession, dir: String): DataFrame =
+    lPercentileBy(LogAnalytics.percentilesByCounts, s, dir)
 
   def lDedup(s: SparkSession, dir: String): DataFrame =
     LogAnalytics.dedupKeepFirst(Tables.events(s, dir),

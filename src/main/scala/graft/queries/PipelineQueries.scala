@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{Text, Vectors}
+import graft.functions.{Bloom, BloomOr, BloomParams, Text, Vectors}
 import graft.operators.{Dedup, Knn, Sampling, Sketches, Stats}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -574,7 +574,7 @@ object PipelineQueries {
     * fixture SFs — then 2×32, bounding accidental collisions to ≤ n/2
     * pairs at any scale); the DuckDB oracle replays the same integer
     * rule from count(*), so the hash match holds at every SF without a
-    * pinned constant. [[Dedup.SimhashBandsConf]] still overrides.
+    * pinned constant.
     */
   def xSimhashPairs(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashCandidates(Tables.documents(s, dir), col("text"),
@@ -1196,14 +1196,12 @@ object PipelineQueries {
     val byGram = parityGramCounts(s, dir)
     def half(c: String) = byGram.where(col(c) > 0).select("gram")
     val (ga, gb) = (half("c0"), half("c1"))
-    // bit count scaled from the INSERT count (conf-overridable), the
-    // simhashBands discipline — the oracle replays the same tiering
-    // from count(*), so the match is SF-independent
-    val m = s.conf.getOption(Sketches.BloomMConf).map(_.toInt).getOrElse {
-      val n = graft.operators.Scale.memoArtifact(ga, "bloom_n")(
-        java.lang.Long.valueOf(ga.count()))
-      Sketches.bloomMFor(n.longValue())
-    }
+    // bit count scaled from the INSERT count, the simhashBands
+    // discipline — the oracle replays the same tiering from count(*),
+    // so the match is SF-independent
+    val n = graft.operators.Scale.memoArtifact(ga, "bloom_n")(
+      java.lang.Long.valueOf(ga.count()))
+    val m = Sketches.bloomMFor(n.longValue())
     val bits = Sketches.bloomBits(ga, col("gram"), m)
     val maybe = Sketches.bloomMaybe(gb, col("gram"), bits, m)
       .withColumnRenamed("item", "gram")
@@ -2046,19 +2044,6 @@ object PipelineQueries {
   val KMEANS_K = 8
   val IVF_NPROBE = 2
 
-  /** Codebook size rule shared by the IVF families: the
-    * [[Knn.CodebookKConf]] session override when set (the scale probe
-    * retunes k ~ √n with the corpus — see [[Knn.codebookSize]]), else
-    * the pinned fixture default the DuckDB oracles replay.
-    */
-  private def codebookK(s: SparkSession, fixtureDefault: Int): Int =
-    s.conf.getOption(Knn.CodebookKConf).map(_.toInt).getOrElse(fixtureDefault)
-
-  private def kmeansK(s: SparkSession): Int = codebookK(s, KMEANS_K)
-
-  /** Same rule for the fixture-codebook IVF serving family. */
-  private def ivfFixtureK(s: SparkSession): Int = codebookK(s, IVF_K)
-
   /** IVF ANN with nprobe=2 — the recall lever over [[xIvfknn]]: each
     * bounded-workload probe ([[PROBE_CAP]]) searches its two nearest
     * cells, candidates stay under their home cell; fan-out linear in
@@ -2083,7 +2068,7 @@ object PipelineQueries {
     */
   def xIvfTrain(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val seed = emb.where(col("vec_id") < kmeansK(s))
+    val seed = emb.where(col("vec_id") < KMEANS_K)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
     // the refined codebook is k-bounded and consumed twice (the
     // re-assignment pass and the norm join) — unstaged, the whole
@@ -2109,7 +2094,7 @@ object PipelineQueries {
     */
   def xIvfTrain2(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val seed = emb.where(col("vec_id") < kmeansK(s))
+    val seed = emb.where(col("vec_id") < KMEANS_K)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
     val (trained, _) = Knn.kmeansTrain(emb, seed, DIM, KMEANS_ROUNDS)
     Knn.ivfAssign(emb, trained, DIM)
@@ -2143,7 +2128,7 @@ object PipelineQueries {
   def xIndexHealth(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val base = emb.where(col("vec_id") % 4 =!= 0)
-    val seed = base.orderBy("vec_id").limit(kmeansK(s))
+    val seed = base.orderBy("vec_id").limit(KMEANS_K)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
     val (trained, _) = Knn.kmeansTrain(base, seed, DIM, KMEANS_ROUNDS)
     Knn.indexHealth(base, emb, trained, DIM)
@@ -2151,7 +2136,7 @@ object PipelineQueries {
 
   def xIvfknnTrained(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val seed = emb.where(col("vec_id") < kmeansK(s))
+    val seed = emb.where(col("vec_id") < KMEANS_K)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
     val (trained, _) = Knn.kmeansTrain(emb, seed, DIM, KMEANS_ROUNDS)
     Knn.ivfSearch(emb.where(col("vec_id") < PROBE_CAP), emb, trained,
@@ -2174,7 +2159,7 @@ object PipelineQueries {
     */
   def xCoreset(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val seed = emb.where(col("vec_id") < kmeansK(s))
+    val seed = emb.where(col("vec_id") < KMEANS_K)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
     val (trained, _) = Knn.kmeansTrain(emb, seed, DIM, KMEANS_ROUNDS)
     val cent = broadcast(trained.select(col("cent_id").as("cell"),
@@ -2208,28 +2193,14 @@ object PipelineQueries {
 
   /** Per-cell candidate cap for the semantic-dedup pair join
     * ([[Knn.cellPairs]]) — bounds a hot cell's pair volume to
-    * |cell|·cap instead of |cell|². Far above every fixture cell size
-    * (≤ ~300 vectors per cell at sf0.1), so the capped output equals
-    * the uncapped full pair set at every tested scale; at 100 TB it is
-    * the skew backstop, the same role [[LSH_BUCKET_CAP]] plays in the
-    * LSH tier.
-    *
-    * CONTRACT WITH THE ORACLE: the DuckDB twins of x_semdedup /
-    * x_curate_semantic / x_semdedup_probe / x_semdedup_incremental
-    * replay the UNCAPPED full pair (or probe-match) set, so the
-    * default must stay above the largest fixture cell or the hash
-    * compare diverges. A bigger fixture (or a shifted embedding
-    * distribution) lifts it via the session conf rather than a code
-    * edit — the [[graft.operators.Dedup.GramJoinModeConf]] discipline.
+    * |cell|·cap instead of |cell|². Far above every gate-fixture cell
+    * size (≤ ~300 vectors per cell at sf0.1); cells outgrow it around
+    * sf1, where it is the skew backstop, the same role
+    * [[LSH_BUCKET_CAP]] plays in the LSH tier. [[capIdsSql]] splices
+    * the same md5-ordered cap into the family's oracles, so the Spark
+    * plan and the DuckDB twin agree at every scale.
     */
-  val SemdedupCellCapConf = "spark.graft.semdedup.cellCap"
-  /** The declared default, spliced into the family's oracles by
-    * [[capIdsSql]] — a conf override therefore moves the QUERY only and
-    * breaks the hash compare, exactly like the other conf-backed knobs.
-    */
-  val SemdedupCellCapDefault = 1024
-  def semdedupCellCap(s: SparkSession): Int =
-    s.conf.get(SemdedupCellCapConf, SemdedupCellCapDefault.toString).toInt
+  val SEMDEDUP_CELL_CAP = 1024
 
   /** SEMANTIC dedup end-to-end — the embedding-space sibling of
     * [[xCurateFuzzy]]'s text pipeline, composed from verified parts in
@@ -2237,7 +2208,7 @@ object PipelineQueries {
     * convergence-checked Lloyd rounds), assign every vector to its home
     * cell, pair vectors WITHIN a cell above cosine [[SEMDEDUP_TAU]]
     * ([[Knn.cellPairs]]: equi-join on the cell key with a
-    * [[semdedupCellCap]] per-cell candidate bound — never the n² pair
+    * [[SEMDEDUP_CELL_CAP]] per-cell candidate bound — never the n² pair
     * matrix, even on a hot cell; the SemDeDup-style shape where the
     * codebook's k grows ~√n so cells stay bounded and the within-cell
     * quadratic term is O(n) total), close the pairs transitively
@@ -2251,11 +2222,11 @@ object PipelineQueries {
     */
   def xSemdedup(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val seed = emb.where(col("vec_id") < kmeansK(s))
+    val seed = emb.where(col("vec_id") < KMEANS_K)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
     val (trained, _) = Knn.kmeansTrain(emb, seed, DIM, KMEANS_ROUNDS)
     val pairs = Knn.cellPairs(Knn.ivfAssign(emb, trained, DIM),
-      SEMDEDUP_TAU, semdedupCellCap(s))
+      SEMDEDUP_TAU, SEMDEDUP_CELL_CAP)
     Dedup.dupClusters(emb.select(col("vec_id").as("doc_id")), pairs)
       .select(col("doc_id").as("vec_id"), col("cluster"),
         (col("doc_id") === col("cluster")).cast("bigint").as("kept"))
@@ -2290,11 +2261,11 @@ object PipelineQueries {
     */
   def xSemdedupProbe(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val seed = emb.where(col("vec_id") < kmeansK(s))
+    val seed = emb.where(col("vec_id") < KMEANS_K)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
     val (trained, _) = Knn.kmeansTrain(emb, seed, DIM, KMEANS_ROUNDS)
     val pairs = Knn.cellPairsProbed(emb, trained, DIM,
-      SEMDEDUP_PROBE_TAU, IVF_NPROBE, semdedupCellCap(s))
+      SEMDEDUP_PROBE_TAU, IVF_NPROBE, SEMDEDUP_CELL_CAP)
     Dedup.dupClusters(emb.select(col("vec_id").as("doc_id")), pairs)
       .select(col("doc_id").as("vec_id"), col("cluster"),
         (col("doc_id") === col("cluster")).cast("bigint").as("kept"))
@@ -2319,11 +2290,11 @@ object PipelineQueries {
     val emb = Tables.embeddings(s, dir)
     val base = emb.where(col("vec_id") % 4 =!= 0)
     val delta = emb.where(col("vec_id") % 4 === 0)
-    val seed = base.orderBy("vec_id").limit(kmeansK(s))
+    val seed = base.orderBy("vec_id").limit(KMEANS_K)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
     val (trained, _) = Knn.kmeansTrain(base, seed, DIM, KMEANS_ROUNDS)
     Knn.probeCellIndex(delta, Knn.ivfAssign(base, trained, DIM), trained,
-        DIM, SEMDEDUP_PROBE_TAU, IVF_NPROBE, semdedupCellCap(s))
+        DIM, SEMDEDUP_PROBE_TAU, IVF_NPROBE, SEMDEDUP_CELL_CAP)
       .orderBy("vec_id")
   }
 
@@ -2565,7 +2536,7 @@ object PipelineQueries {
   }
 
   private def ivfCentroids(emb: DataFrame): DataFrame =
-    emb.where(col("vec_id") < ivfFixtureK(emb.sparkSession))
+    emb.where(col("vec_id") < IVF_K)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
 
   /** IVF cell occupancy — the codebook-assignment half of the IVF index
@@ -2636,8 +2607,8 @@ object PipelineQueries {
   /** Bloom-filtered decontamination — the result-identical scale twin of
     * [[xDecontam]]. Same eval slice, same overlap count, but corpus
     * grams are pre-filtered through a fixed-size Bloom bitmap
-    * ([[graft.functions.Bloom]]; m and k are session confs, default
-    * 2^20 bits = 128 KiB) before the exact equi-join. At 100 TB the
+    * ([[graft.functions.Bloom]], sized by `bp`; the declared query uses
+    * [[Bloom.Default]], 2^20 bits = 128 KiB) before the exact equi-join. At 100 TB the
     * difference is the broadcast budget: the distinct eval gram set can
     * be multi-GB, while the bitmap is m/8 bytes whatever the grams
     * weigh — sized by the ε ≈ (1 − e^(−kn/m))^k formula (see
@@ -2651,10 +2622,8 @@ object PipelineQueries {
     * shares x_decontam's oracle, and the correctness gate itself proves
     * the equivalence on the real corpus.
     */
-  def xDecontamBloom(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.{Bloom, BloomOr}
+  def xDecontamBloom(s: SparkSession, dir: String, bp: BloomParams): DataFrame = {
     graft.expressions.WordShingles.register(s)
-    val bp = Bloom.params(s)
     val docs = Tables.documents(s, dir)
     def grams(d: DataFrame) = d.select(col("doc_id"),
       explode(Text.shinglesNative(Text.tokens(col("text")), 4)).as("gram"))
@@ -3348,16 +3317,22 @@ object PipelineQueries {
     * of such grams (a long run ≈ a long copied substring — the span a
     * substring-dedup pass would cut). Scale shape, with NO joins in the
     * default mode: one corpus shingle explode (native), then the
-    * [[Dedup.gramDupFlag]] dup flag (ONE gram exchange by default; the
-    * `spark.graft.dedup.gramJoinMode` conf swaps in the
-    * AQE-skew-splittable distinct→count→equi-join for Zipfian corpora),
+    * [[Dedup.gramDupFlag]] dup flag (ONE gram exchange by default;
+    * `skewSafe` swaps in the AQE-skew-splittable
+    * distinct→count→equi-join for Zipfian corpora),
     * then one exchange back to doc order where gaps-and-islands
     * run-length groups and two bounded aggregates finish.
+    *
+    * `skewSafe = true` is the declared `_skewjoin` twin. Each of the five
+    * twins (this one, x_dedup_cut, x_substr_spans, x_substr_cut and
+    * x_containment) shares its base's oracle, so the correctness gate
+    * proves the two modes result-identical on the real corpus — the
+    * 100 TB Zipfian-gram escape hatch, hash-verified.
     */
-  def xDupgrams(s: SparkSession, dir: String): DataFrame = {
+  def xDupgrams(s: SparkSession, dir: String, skewSafe: Boolean): DataFrame = {
     // the ONE staged 4-gram relation the cut/dupgrams family shares
     val pos = Dedup.posGrams(Tables.documents(s, dir), col("text"), 4)
-    val flagged = Dedup.gramDupFlag(pos)
+    val flagged = Dedup.gramDupFlag(pos, skewSafe)
       .withColumn("dup", col("dup").cast("bigint"))
     // gaps-and-islands: consecutive positions with the same dup flag
     // form one island; its row count is the run length
@@ -3386,9 +3361,10 @@ object PipelineQueries {
     * Invariants (spec + oracle): every token appears exactly once
     * (n_tokens = the doc's token count), kept ⊎ cut partitions the
     * positions, and kept_text is the in-order join of uncut tokens.
+    * `skewSafe` as in [[xDupgrams]].
     */
-  def xDedupCut(s: SparkSession, dir: String): DataFrame =
-    Dedup.cutDupSpans(Tables.documents(s, dir), col("text"), 4)
+  def xDedupCut(s: SparkSession, dir: String, skewSafe: Boolean): DataFrame =
+    Dedup.cutDupSpans(Tables.documents(s, dir), col("text"), 4, skewSafe)
       .orderBy("doc_id")
 
   /** ExactSubstr gram width: 6 words — wide enough that a duplicated
@@ -3402,10 +3378,10 @@ object PipelineQueries {
     * island with its word positions and length — the span-level ESD
     * artifact (occurrence-based, so within-doc self-repeats flag too),
     * complementing the cross-doc measurement (x_dupgrams) and cut
-    * (x_dedup_cut) twins.
+    * (x_dedup_cut) twins. `skewSafe` as in [[xDupgrams]].
     */
-  def xSubstrSpans(s: SparkSession, dir: String): DataFrame =
-    Dedup.substrIslands(Tables.documents(s, dir), col("text"), ESD_GRAM)
+  def xSubstrSpans(s: SparkSession, dir: String, skewSafe: Boolean): DataFrame =
+    Dedup.substrIslands(Tables.documents(s, dir), col("text"), ESD_GRAM, skewSafe)
       .withColumn("len", col("e") - col("s") + 1)
       .orderBy("doc_id", "s")
 
@@ -3413,35 +3389,14 @@ object PipelineQueries {
     * of every duplicated 6-word span survives, every other copy's
     * tokens are removed, documents rebuilt in order — keep-one
     * substring dedup, vs x_dedup_cut's remove-all-copies variant.
+    * `skewSafe` as in [[xDupgrams]].
     */
-  def xSubstrCut(s: SparkSession, dir: String): DataFrame =
-    Dedup.substrCut(Tables.documents(s, dir), col("text"), ESD_GRAM)
+  def xSubstrCut(s: SparkSession, dir: String, skewSafe: Boolean): DataFrame =
+    Dedup.substrCut(Tables.documents(s, dir), col("text"), ESD_GRAM, skewSafe)
       .withColumn("cut_ratio", detRound4(col("n_cut") / col("n_tokens")))
       .select(col("doc_id"), col("n_tokens"), col("n_cut"),
         col("cut_ratio"), col("kept_text"))
       .orderBy("doc_id")
-
-  /** Build `q` with [[Dedup.GramJoinModeConf]] active — the
-    * AQE-skew-splittable distinct→count→equi-join dup flag instead of
-    * the gram-partitioned window. The conf is read at PLAN BUILD time
-    * ([[Dedup.gramDupFlag]]), so restoring it after construction is
-    * safe: the returned lazy plan keeps the join shape. Declared as
-    * `_skewjoin` query twins sharing the default mode's oracles, so the
-    * CORRECTNESS gate proves the two modes result-identical on the real
-    * corpus — the 100 TB Zipfian-gram escape hatch, hash-verified. */
-  private def withGramJoinMode(s: SparkSession)(q: => DataFrame): DataFrame = {
-    val prev = s.conf.get(Dedup.GramJoinModeConf, "false")
-    s.conf.set(Dedup.GramJoinModeConf, "true")
-    try q finally s.conf.set(Dedup.GramJoinModeConf, prev)
-  }
-
-  /** [[xDedupCut]] under the skew-safe join-mode dup flag. */
-  def xDedupCutSkewjoin(s: SparkSession, dir: String): DataFrame =
-    withGramJoinMode(s)(xDedupCut(s, dir))
-
-  /** [[xDupgrams]] under the skew-safe join-mode dup flag. */
-  def xDupgramsSkewjoin(s: SparkSession, dir: String): DataFrame =
-    withGramJoinMode(s)(xDupgrams(s, dir))
 
   /** Incremental ESD: duplicated-span islands of an arriving delta
     * (every fourth doc) against the kept corpus's STORED distinct-gram
@@ -3576,13 +3531,13 @@ object PipelineQueries {
     // base's stored cell index — gate first, probe less
     val emb = Tables.embeddings(s, dir)
     val base = emb.where(col("vec_id") % 4 =!= 0)
-    val seed = base.orderBy("vec_id").limit(kmeansK(s))
+    val seed = base.orderBy("vec_id").limit(KMEANS_K)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
     val (trained, _) = Knn.kmeansTrain(base, seed, DIM, KMEANS_ROUNDS)
     val probes = emb.where(col("vec_id") % 4 === 0)
       .join(clean.select(col("doc_id").as("vec_id")), "vec_id")
     val dupIds = Knn.probeCellIndex(probes, Knn.ivfAssign(base, trained, DIM),
-        trained, DIM, SEMDEDUP_PROBE_TAU, IVF_NPROBE, semdedupCellCap(s))
+        trained, DIM, SEMDEDUP_PROBE_TAU, IVF_NPROBE, SEMDEDUP_CELL_CAP)
       .select(col("vec_id").as("doc_id"))
     val kept = clean.join(broadcast(dupIds), Seq("doc_id"), "left_anti")
     Sampling.chunked(kept.select("doc_id", "text"), col("text"), CHUNK_BUDGET)
@@ -3597,27 +3552,16 @@ object PipelineQueries {
 
   /** Asymmetric containment pairs ([[Dedup.containmentPairs]]):
     * C(a→b) = shared rare 6-grams / grams(a) — the quoted-inside
-    * detector Jaccard dilutes; pairs at ≥ [[CONT_MIN]].
+    * detector Jaccard dilutes; pairs at ≥ [[CONT_MIN]]. `skewSafe` as
+    * in [[xDupgrams]].
     */
-  def xContainment(s: SparkSession, dir: String): DataFrame =
+  def xContainment(s: SparkSession, dir: String, skewSafe: Boolean): DataFrame =
     Dedup.containmentPairs(Tables.documents(s, dir).select("doc_id", "text"),
-        col("text"), ESD_GRAM, CONT_DF_CAP)
+        col("text"), ESD_GRAM, CONT_DF_CAP, skewSafe)
       .where(col("containment") >= CONT_MIN)
       .withColumn("containment", detRound4(col("containment")))
       .select(col("doc_a"), col("doc_b"), col("shared"), col("containment"))
       .orderBy("doc_a", "doc_b")
-
-  /** [[xContainment]] under the skew-safe aggregate+join-back mode. */
-  def xContainmentSkewjoin(s: SparkSession, dir: String): DataFrame =
-    withGramJoinMode(s)(xContainment(s, dir))
-
-  /** [[xSubstrSpans]] under the skew-safe aggregate+join-back spans. */
-  def xSubstrSpansSkewjoin(s: SparkSession, dir: String): DataFrame =
-    withGramJoinMode(s)(xSubstrSpans(s, dir))
-
-  /** [[xSubstrCut]] under the skew-safe aggregate+join-back spans. */
-  def xSubstrCutSkewjoin(s: SparkSession, dir: String): DataFrame =
-    withGramJoinMode(s)(xSubstrCut(s, dir))
 
   /** Per-doc KEYWORD extraction — top-3 tf-idf terms per document (the
     * doc-level sibling of the corpus-level [[xTfidf]]): one corpus
@@ -4315,7 +4259,7 @@ object PipelineQueries {
     * gated docs' embeddings assigned to fixture-codebook cells
     * ([[Knn.ivfAssign]], centroids broadcast) → within-cell cosine >
     * [[SEMDEDUP_TAU]] pairs over ONE reused cell exchange with the
-    * [[semdedupCellCap]] per-cell candidate bound ([[Knn.cellPairs]],
+    * [[SEMDEDUP_CELL_CAP]] per-cell candidate bound ([[Knn.cellPairs]],
     * the [[xSemdedup]] shape — never the pair matrix, even on a hot
     * cell) → connected components → keep the cluster-minimum doc →
     * deterministic 80% split → context-window chunking. What text
@@ -4339,7 +4283,7 @@ object PipelineQueries {
     val emb = Tables.embeddings(s, dir)
     val gated = emb.join(quality.select(col("doc_id").as("vec_id")), "vec_id")
     val pairs = Knn.cellPairs(Knn.ivfAssign(gated, ivfCentroids(emb), DIM),
-      SEMDEDUP_TAU, semdedupCellCap(s))
+      SEMDEDUP_TAU, SEMDEDUP_CELL_CAP)
     val clusters = Dedup.dupClusters(quality, pairs)
     val keep = quality
       .join(clusters.where(col("doc_id") === col("cluster")).select("doc_id"),
@@ -4753,7 +4697,7 @@ object PipelineQueries {
     "x_ivfknn2"     -> xIvfknn2 _,
     "x_regex_tokens" -> xRegexTokens _,
     "x_decontam"    -> xDecontam _,
-    "x_decontam_bloom" -> xDecontamBloom _,
+    "x_decontam_bloom" -> (xDecontamBloom(_, _, Bloom.Default)),
     "x_contam_sweep" -> xContamSweep _,
     "x_pq"          -> xPq _,
     "x_pq_recall"   -> xPqRecall _,
@@ -4769,17 +4713,17 @@ object PipelineQueries {
     "x_bpe_train"   -> xBpeTrain _,
     "x_bpe_apply"   -> xBpeApply _,
     "x_bpe_fertility" -> xBpeFertility _,
-    "x_dupgrams"    -> xDupgrams _,
-    "x_dedup_cut"   -> xDedupCut _,
-    "x_substr_spans" -> xSubstrSpans _,
-    "x_substr_cut"  -> xSubstrCut _,
-    "x_dupgrams_skewjoin"  -> xDupgramsSkewjoin _,
-    "x_dedup_cut_skewjoin" -> xDedupCutSkewjoin _,
-    "x_substr_spans_skewjoin" -> xSubstrSpansSkewjoin _,
-    "x_substr_cut_skewjoin" -> xSubstrCutSkewjoin _,
+    "x_dupgrams"    -> (xDupgrams(_, _, skewSafe = false)),
+    "x_dedup_cut"   -> (xDedupCut(_, _, skewSafe = false)),
+    "x_substr_spans" -> (xSubstrSpans(_, _, skewSafe = false)),
+    "x_substr_cut"  -> (xSubstrCut(_, _, skewSafe = false)),
+    "x_dupgrams_skewjoin"  -> (xDupgrams(_, _, skewSafe = true)),
+    "x_dedup_cut_skewjoin" -> (xDedupCut(_, _, skewSafe = true)),
+    "x_substr_spans_skewjoin" -> (xSubstrSpans(_, _, skewSafe = true)),
+    "x_substr_cut_skewjoin" -> (xSubstrCut(_, _, skewSafe = true)),
     "x_substr_incremental" -> xSubstrIncremental _,
-    "x_containment" -> xContainment _,
-    "x_containment_skewjoin" -> xContainmentSkewjoin _,
+    "x_containment" -> (xContainment(_, _, skewSafe = false)),
+    "x_containment_skewjoin" -> (xContainment(_, _, skewSafe = true)),
     "x_curate_exact" -> xCurateExact _,
     "x_dedup_incremental"  -> xDedupIncremental _,
     "x_curate_incremental" -> xCurateIncremental _,
@@ -5031,7 +4975,7 @@ object PipelineQueries {
   /** The md5-ordered per-cell cap id set — the exact replay of
     * [[graft.operators.Knn]]'s `cappedCells` / `cellPairs` candidate
     * flag (row_number per cell over (md5(vec_id), vec_id), kept while
-    * ≤ [[SemdedupCellCapDefault]]) over an assignment CTE exposing
+    * ≤ [[SEMDEDUP_CELL_CAP]]) over an assignment CTE exposing
     * (vec_id, cell). Every semdedup-family oracle splices this so the
     * declared cellCap binds identically in both engines: the cap first
     * BINDS around sf1 (cells outgrow 1024), so the gate SFs alone can
@@ -5046,7 +4990,7 @@ object PipelineQueries {
     s"""$out AS MATERIALIZED (SELECT vec_id FROM (
       |  SELECT vec_id, row_number() OVER (PARTITION BY cell
       |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS pos
-      |  FROM $src) WHERE pos <= $SemdedupCellCapDefault)""".stripMargin
+      |  FROM $src) WHERE pos <= $SEMDEDUP_CELL_CAP)""".stripMargin
 
   /** Shared WITH-prefix of the fixed-codebook IVF oracles. */
   private def ivfAsgnPrefix: String =

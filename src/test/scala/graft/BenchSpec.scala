@@ -65,4 +65,17 @@ class BenchSpec extends SparkSpec {
     assert(json.get("queries").get("a").asDouble == 2.0)
     assert(json.get("queries_warm").get("b").asDouble == 0.3)
   }
+
+  test("SPARK_GRAFT_CONF: an entry without '=' fails and names the entry") {
+    val e = intercept[IllegalArgumentException](
+      Driver.parseConf("spark.graft.stage.memo=true;spark.graft.hq.memo"))
+    assert(e.getMessage.contains("'spark.graft.hq.memo'"), e.getMessage)
+  }
+
+  test("SPARK_GRAFT_CONF: an unknown spark.graft.* key fails and names the key") {
+    val e = intercept[IllegalArgumentException](Driver.parseConf("spark.graft.ivf.k=32"))
+    assert(e.getMessage.contains("'spark.graft.ivf.k'"), e.getMessage)
+    assert(Driver.parseConf(" spark.graft.stage.memo = true ;spark.sql.x=a=b;") ==
+      Seq("spark.graft.stage.memo" -> "true", "spark.sql.x" -> "a=b"))
+  }
 }

@@ -3,12 +3,12 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{Dedup, Drift, Knn, LogAnalytics}
+import graft.operators.{Drift, Knn, LogAnalytics}
 import graft.queries.{LogQueries, PipelineQueries => PQ}
 import org.apache.spark.sql.functions._
 
 /** The round-15 industrialization of the r14 sf1-sweep lesson: EVERY
-  * conf-backed knob and scale cap must carry a registered defense
+  * session conf and scale cap must carry a registered defense
   * ([[CapAudit]]) — an oracle splice, a binding-scale test, a
   * rows-invariance proof, or an exactness-regime fixture assert — and
   * the registry itself must be stale-proof:
@@ -20,9 +20,7 @@ import org.apache.spark.sql.functions._
   *  - RETUNING a registered bound without touching its audit fails the
   *    hardcoded value pins below (the CapReplaySpec discipline);
   *  - deleting an oracle splice fails the per-entry fragment asserts
-  *    (the exact shape of the r14 semdedup bug);
-  *  - overriding an oracle-pinned conf under Verify now fails FAST
-  *    ([[CapAudit.assertOracleSafe]]) instead of as a late hash-red.
+  *    (the exact shape of the r14 semdedup bug).
   */
 class CapAuditSpec extends SparkSpec {
   import spark.implicits._
@@ -88,6 +86,7 @@ class CapAuditSpec extends SparkSpec {
 
   test("registered bounds carry their audited values (retune forces audit)") {
     val pinned = Map(
+      "PipelineQueries.SEMDEDUP_CELL_CAP" -> "1024",
       "PipelineQueries.PROBE_CAP" -> "500",
       "PipelineQueries.PQ_PROBE_CAP" -> "2000",
       "PipelineQueries.KNN_CAP" -> "100",
@@ -102,10 +101,7 @@ class CapAuditSpec extends SparkSpec {
       "LogQueries.SLO_BUDGET" -> "0.21",
       "LogQueries.TOPK_SKETCH_CAP" -> "1024",
       "Drift.REF_K" -> "1024",
-      (PQ.SemdedupCellCapConf: String) -> "1024",
-      (LogAnalytics.SketchExactAccuracyConf: String) -> "1048576",
-      (graft.functions.Bloom.MBitsConf: String) -> "1048576",
-      (graft.functions.Bloom.KConf: String) -> "5")
+      "LogAnalytics.SKETCH_EXACT_ACCURACY" -> "1048576")
     val byId = CapAudit.entries.map(e => e.id -> e.value).toMap
     pinned.foreach { case (id, want) =>
       assert(byId.contains(id), s"audit entry vanished: $id")
@@ -121,7 +117,7 @@ class CapAuditSpec extends SparkSpec {
   // ── splice asserts: every registered fragment must survive in the
   //    declared oracle SQL (deleting a splice == the r14 semdedup bug) ──
 
-  test("every SpliceCap/OraclePinned fragment appears in some oracle") {
+  test("every SpliceCap fragment appears in some oracle") {
     val oracles = SparkEntry.oracleSql.values.toSeq
     CapAudit.entries.filter(_.fragments.nonEmpty).foreach { e =>
       e.fragments.foreach { f =>
@@ -133,13 +129,13 @@ class CapAuditSpec extends SparkSpec {
   }
 
   // ── shared-oracle twins: the rows-invariance evidence for the
-  //    mode confs is that both modes hash against ONE oracle ──
+  //    alternative plans is that both hash against ONE oracle ──
 
   test("rows-invariant mode twins share their exact oracle verbatim") {
     val twins = Seq(
-      ("l_percentile_counts", "l_percentile", "percentile.exactMode"),
+      ("l_percentile_counts", "l_percentile", "percentilesByCounts"),
       ("l_topk_sketch", "l_topk", "TOPK_SKETCH_CAP exact regime"),
-      ("x_decontam_bloom", "x_decontam", "bloom.mBits/k zero-FN"))
+      ("x_decontam_bloom", "x_decontam", "Bloom zero-FN pre-filter"))
     twins.foreach { case (twin, base, knob) =>
       assert(SparkEntry.oracleSql.contains(twin) &&
         SparkEntry.oracleSql.contains(base), s"twin pair missing: $twin/$base")
@@ -160,48 +156,6 @@ class CapAuditSpec extends SparkSpec {
         assert(Files.exists(p),
           s"${e.id}: evidence cites $name but $p does not exist")
       }
-    }
-  }
-
-  // ── fail-fast guard: oracle-pinned conf overrides must throw ──
-
-  test("assertOracleSafe rejects every oracle-pinned override, names the key") {
-    def withConf(k: String, v: String)(body: => Unit): Unit = {
-      val prev = spark.conf.getOption(k)
-      spark.conf.set(k, v)
-      try body finally prev match {
-        case Some(p) => spark.conf.set(k, p)
-        case None => spark.conf.unset(k)
-      }
-    }
-    CapAudit.assertOracleSafe(spark) // clean session passes
-    val divergent = Map(
-      PQ.SemdedupCellCapConf -> "2048",
-      Knn.CodebookKConf -> "32",
-      Dedup.SimhashBandsConf -> "4",
-      graft.operators.Sketches.BloomMConf -> "16384",
-      LogAnalytics.SketchExactAccuracyConf -> "4096")
-    assert(divergent.keySet == CapAudit.oraclePinned.keySet,
-      "oracle-pinned conf set changed — extend this test's divergent map")
-    divergent.foreach { case (k, v) =>
-      withConf(k, v) {
-        val e = intercept[IllegalArgumentException](
-          CapAudit.assertOracleSafe(spark))
-        assert(e.getMessage.contains(k),
-          s"guard must NAME the offending key $k: ${e.getMessage}")
-      }
-    }
-    // explicit-default settings are harmless and allowed
-    withConf(PQ.SemdedupCellCapConf, PQ.SemdedupCellCapDefault.toString) {
-      CapAudit.assertOracleSafe(spark)
-    }
-    withConf(LogAnalytics.SketchExactAccuracyConf,
-      LogAnalytics.SketchExactAccuracyDefault.toString) {
-      CapAudit.assertOracleSafe(spark)
-    }
-    // rule-defaulted knobs have NO safe session value
-    withConf(Knn.CodebookKConf, "8") {
-      intercept[IllegalArgumentException](CapAudit.assertOracleSafe(spark))
     }
   }
 
@@ -275,10 +229,11 @@ class CapAuditSpec extends SparkSpec {
   }
 
   // ── binding test: the GK sketch accuracy beyond the exact regime —
-  //    the default 2^20 covers every committed fixture ~50x, so no
-  //    sweep can observe the regime END. Force it: one 10k-value group
-  //    at accuracy 100 compresses (n >> accuracy) and the estimate
-  //    must stay inside the documented rank bound n/accuracy ──
+  //    SKETCH_EXACT_ACCURACY (2^20) covers every committed fixture
+  //    ~50x, so no sweep can observe the regime END. Force it: one
+  //    10k-value group at accuracy 100 compresses (n >> accuracy) and
+  //    the estimate must stay inside the documented rank bound
+  //    n/accuracy ──
 
   test("percentile sketch accuracy binds: 10k-row group at accuracy 100 stays in the GK rank bound") {
     val n = 10000

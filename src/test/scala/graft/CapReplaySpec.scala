@@ -6,7 +6,7 @@ import graft.queries.PipelineQueries
 import org.apache.spark.sql.functions._
 
 /** The round-14 sf1 sweep found the one bug class the sf0.01/sf0.1
-  * gates structurally cannot see: a conf-backed bound (semdedupCellCap)
+  * gates structurally cannot see: a scale bound (SEMDEDUP_CELL_CAP)
   * that only BINDS at larger fixtures, whose Spark-side selection was
   * capped while the oracle joined the uncapped relation. This spec pins
   * both halves at a scale where the cap binds IN-SUITE:
@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *    in `cappedCells`' ordering (e.g. to plain vec_id order) fails
   *    here immediately instead of at the next sf1 sweep;
   *  - the five semdedup-family oracles carry the `capIdsSql` replay —
-  *    removing the splice (or changing the default without moving the
-  *    oracles) fails the suite, not the driver's gate months later.
+  *    removing the splice fails the suite, not the driver's gate
+  *    months later.
   */
 class CapReplaySpec extends SparkSpec {
   import spark.implicits._
@@ -85,7 +85,7 @@ class CapReplaySpec extends SparkSpec {
       "x_curate_semantic", "x_curate_semantic_incremental")
     keys.foreach { k =>
       val sql = SparkEntry.oracleSql(k)
-      assert(sql.contains(s"pos <= ${PipelineQueries.SemdedupCellCapDefault}"),
+      assert(sql.contains(s"pos <= ${PipelineQueries.SEMDEDUP_CELL_CAP}"),
         s"$k oracle lost the cellCap replay (capIdsSql splice)")
       assert(sql.contains("md5(CAST(vec_id AS VARCHAR))"),
         s"$k oracle cap must use the md5 order, or sf1+ diverges")

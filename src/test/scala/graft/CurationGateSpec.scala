@@ -25,7 +25,7 @@ class CurationGateSpec extends SparkSpec {
     import graft.functions.{Bloom, BloomOr}
     // result-identical to the exact gate (the shared-oracle contract)
     val exact = PipelineQueries.xDecontam(spark, dir).collect().toSeq
-    val bloom = PipelineQueries.xDecontamBloom(spark, dir).collect().toSeq
+    val bloom = PipelineQueries.xDecontamBloom(spark, dir, Bloom.Default).collect().toSeq
     assert(exact == bloom, "bloom pre-filter must not change the result")
 
     // no false negatives at the bloom layer: every inserted gram probes true
@@ -53,33 +53,23 @@ class CurationGateSpec extends SparkSpec {
     evalGrams.unpersist()
   }
 
-  test("bloom sizing is conf-backed; an undersized filter degrades to " +
-    "pass-through, never a wrong answer") {
+  test("resized or saturated bloom filters keep the exact answer") {
     import graft.functions.{Bloom, BloomParams}
     val exact = PipelineQueries.xDecontam(spark, dir).collect().toSeq
 
     // non-default LARGER size: still bit-identical, still prunes
-    spark.conf.set(Bloom.MBitsConf, (1L << 22).toString)
-    spark.conf.set(Bloom.KConf, "7")
-    try {
-      assert(Bloom.params(spark) == BloomParams(1L << 22, 7))
-      val big = PipelineQueries.xDecontamBloom(spark, dir).collect().toSeq
-      assert(big == exact, "resized filter must not change the result")
+    val big = PipelineQueries.xDecontamBloom(spark, dir, BloomParams(1L << 22, 7))
+      .collect().toSeq
+    assert(big == exact, "resized filter must not change the result")
 
-      // pathologically UNDERSIZED: 2^8 bits saturates on hundreds of
-      // grams (ε ~ 1) — the pre-filter passes everything through and
-      // the exact join still restores the identical answer
-      spark.conf.set(Bloom.MBitsConf, (1L << 8).toString)
-      spark.conf.set(Bloom.KConf, "5")
-      val saturated = Bloom.params(spark)
-      assert(saturated.expectedFp(500L) > 0.99,
-        "2^8 bits on 500 keys should be saturated by the ε formula")
-      val small = PipelineQueries.xDecontamBloom(spark, dir).collect().toSeq
-      assert(small == exact, "saturated filter must degrade to pass-through")
-    } finally {
-      spark.conf.unset(Bloom.MBitsConf)
-      spark.conf.unset(Bloom.KConf)
-    }
+    // pathologically UNDERSIZED: 2^8 bits saturates on hundreds of
+    // grams (ε ~ 1) — the pre-filter passes everything through and
+    // the exact join still restores the identical answer
+    val saturated = BloomParams(1L << 8, 5)
+    assert(saturated.expectedFp(500L) > 0.99,
+      "2^8 bits on 500 keys should be saturated by the ε formula")
+    val small = PipelineQueries.xDecontamBloom(spark, dir, saturated).collect().toSeq
+    assert(small == exact, "saturated filter must degrade to pass-through")
 
     // sizing maths: the scaladoc's 10^8-gram case really is saturated at
     // the default size, and the formula-sized filter is not

@@ -483,8 +483,7 @@ class DedupSpec extends SparkSpec {
       "unrelated doc must not survive band + Hamming filter")
   }
 
-  test("simhash band width scales with the corpus: 2^w >= 4n tiers, conf override, " +
-    "1-band masking correct") {
+  test("simhash band width scales with the corpus; 1-band masking correct") {
     // the tier rule, pinned at its exact boundaries: 4 bands (w=16)
     // through n = 16384, 2 bands (w=32) through n = 2^30, then 1
     assert(Dedup.simhashWidthFor(1L) == 16)
@@ -492,11 +491,8 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.simhashWidthFor(16385L) == 32)
     assert(Dedup.simhashWidthFor(1L << 30) == 32, "4n = 2^32 is the last 32-bit n")
     assert(Dedup.simhashWidthFor((1L << 30) + 1) == 64)
-    // the DataFrame wrapper counts the corpus; the conf overrides it
+    // the DataFrame wrapper counts the corpus
     assert(Dedup.simhashBands(docs) == 4, s"${docs.count()} docs sit in the 16-bit tier")
-    spark.conf.set(Dedup.SimhashBandsConf, "2")
-    try assert(Dedup.simhashBands(docs) == 2, "conf override wins")
-    finally spark.conf.unset(Dedup.SimhashBandsConf)
     // nBands = 1 (width 64) is the whole signature: 1L << 64 wraps to 1
     // in JVM shift semantics, so the mask needs its special case — the
     // exact-dup pair must still collide and verify at Hamming 0
@@ -775,29 +771,24 @@ class DedupSpec extends SparkSpec {
     val hot = "hot boiler plate gram"
     val docs = (0 until 60).map(i =>
       (i.toLong, s"u${i}a u${i}b $hot u${i}c u${i}d")).toDF("doc_id", "text")
-    def runCut() = Dedup.cutDupSpans(docs, col("text"), 4)
+    def runCut(skewSafe: Boolean = false) = Dedup.cutDupSpans(docs, col("text"), 4, skewSafe)
       .as[(Long, String, Long, Long)].collect().sortBy(_._1).toSeq
     val defaultMode = runCut()
     // the hot 4-gram's 4 tokens are cut everywhere, unique flanks survive
     assert(defaultMode.forall { case (_, kept, n, cut) =>
       n == 8L && cut == 4L && kept.split(" ").length == 4 })
-    spark.conf.set(Dedup.GramJoinModeConf, "true")
-    try {
-      assert(runCut() == defaultMode,
-        "join mode must produce byte-identical cut output")
-      // plan shape: the dup flag must join back against the staged
-      // bounded dup-gram set with NO window over the gram partition —
-      // the whole point of the skew-safe mode (the partial aggregate
-      // that builds the set runs behind the Scale.stage leaf)
-      val pos = docs.select(col("doc_id"), posexplode(
-        Text.shinglesNative(Text.tokens(col("text")), 4)).as(Seq("pos", "gram")))
-      val plan = Dedup.gramDupFlag(pos).queryExecution.executedPlan.toString
-      assert(!plan.contains("Window"), s"join mode must not plan a window:\n$plan")
-      assert(plan.contains("Join"), s"join mode must join the dup set back:\n$plan")
-    } finally spark.conf.set(Dedup.GramJoinModeConf, "false")
-    // window mode really is the window plan (the modes differ)
+    assert(runCut(skewSafe = true) == defaultMode,
+      "join mode must produce byte-identical cut output")
+    // plan shape: the dup flag must join back against the staged
+    // bounded dup-gram set with NO window over the gram partition —
+    // the whole point of the skew-safe mode (the partial aggregate
+    // that builds the set runs behind the Scale.stage leaf)
     val pos = docs.select(col("doc_id"), posexplode(
       Text.shinglesNative(Text.tokens(col("text")), 4)).as(Seq("pos", "gram")))
+    val plan = Dedup.gramDupFlag(pos, skewSafe = true).queryExecution.executedPlan.toString
+    assert(!plan.contains("Window"), s"join mode must not plan a window:\n$plan")
+    assert(plan.contains("Join"), s"join mode must join the dup set back:\n$plan")
+    // window mode really is the window plan (the modes differ)
     assert(Dedup.gramDupFlag(pos).queryExecution.executedPlan.toString.contains("Window"))
   }
 

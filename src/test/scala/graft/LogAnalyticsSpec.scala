@@ -123,19 +123,10 @@ class LogAnalyticsSpec extends SparkSpec {
     // duplicates before the exchange
     assert(plan.contains("HashAggregate") && plan.contains("partial_count"),
       s"expected a map-side partial count over (dim, value):\n$plan")
-    // conf routing: percentiles() itself swaps plans at build time
-    val prev = spark.conf.get(LogAnalytics.ExactPercentileModeConf, "buffer")
-    spark.conf.set(LogAnalytics.ExactPercentileModeConf, "counts")
-    val routed = try {
-      LogAnalytics.percentiles(df, col("dim"), col("v"), Seq(0.5))
-        .queryExecution.executedPlan.toString
-    } finally spark.conf.set(LogAnalytics.ExactPercentileModeConf, prev)
-    assert(!routed.contains("percentile("),
-      "ExactPercentileModeConf=counts must route percentiles() to the counts plan")
   }
 
   test("sketch exact-regime accuracy bound holds on the gate fixtures") {
-    // the SketchExactAccuracyConf contract: l_percentile_sketch's shared
+    // the SKETCH_EXACT_ACCURACY contract: l_percentile_sketch's shared
     // quantile_disc oracle is valid only while accuracy exceeds every
     // event_type group's row count. Assert it against BOTH driver
     // scales so a grown fixture fails HERE, loudly, instead of as a
@@ -144,10 +135,10 @@ class LogAnalyticsSpec extends SparkSpec {
       val maxGroup = Tables.events(spark, s"/root/testdata/$sf")
         .groupBy("event_type").count()
         .agg(max("count")).as[Long].collect().head
-      assert(maxGroup < LogAnalytics.SketchExactAccuracyDefault,
+      assert(maxGroup < LogAnalytics.SKETCH_EXACT_ACCURACY,
         s"$sf largest event_type group ($maxGroup) must stay below the " +
-          s"exact-regime accuracy (${LogAnalytics.SketchExactAccuracyDefault}) " +
-          "— raise spark.graft.percentile.sketch.accuracy")
+          s"exact-regime accuracy (${LogAnalytics.SKETCH_EXACT_ACCURACY}) " +
+          "— raise LogAnalytics.SKETCH_EXACT_ACCURACY")
     }
   }
 

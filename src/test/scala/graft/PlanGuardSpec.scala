@@ -536,4 +536,49 @@ class PlanGuardSpec extends AnyFunSuite {
       row_number().over(Window.partitionBy("shard").orderBy("event_id")))
     assert(windowFlags(df).isEmpty)
   }
+
+  // ---- the declared mode twins must really plan their mode: each
+  // shares its base's oracle, so a twin that stopped passing its mode
+  // would still hash green while testing nothing ----
+
+  /** Partition column names of every Window in `plan`, seen through
+    * staged leaves into their captured pre-stage lineage. */
+  private def windowPartitions(plan: SparkPlan): Seq[Set[String]] = {
+    val out = Seq.newBuilder[Set[String]]
+    def walkL(p: logical.LogicalPlan): Unit = p.foreach {
+      case rdd: LogicalRDD =>
+        graft.operators.Scale.capturedLineage(rdd.rdd.id).foreach(walkL)
+      case w: logical.Window => out += partitionColNames(w.partitionSpec)
+      case _ => ()
+    }
+    plan.foreach {
+      case w: WindowExecBase => out += partitionColNames(w.partitionSpec)
+      case r: RDDScanExec =>
+        graft.operators.Scale.capturedLineage(r.rdd.id).foreach(walkL)
+      case _ => ()
+    }
+    out.result()
+  }
+
+  test("declared mode twins plan their mode (skewjoin, percentile counts)") {
+    val dir = "/root/testdata/sf0.001"
+    def plan(q: String): SparkPlan =
+      SparkEntry.queries(q)(session, dir).queryExecution.executedPlan
+    def gramWindows(q: String): Int =
+      windowPartitions(plan(q)).count(cols => cols("gram") || cols("gtext"))
+    val bases = Seq("x_dupgrams", "x_dedup_cut", "x_substr_spans",
+      "x_substr_cut", "x_containment")
+    assert(SparkEntry.queries.keySet.filter(_.endsWith("_skewjoin")) ==
+      bases.map(_ + "_skewjoin").toSet, "extend this test with the new twin")
+    bases.foreach { base =>
+      assert(gramWindows(base) > 0,
+        s"$base no longer plans a gram-partitioned window; the twin check is vacuous")
+      assert(gramWindows(base + "_skewjoin") == 0,
+        s"${base}_skewjoin plans a gram-partitioned window: it is not in skew-safe mode")
+    }
+    assert(plan("l_percentile").toString.contains("percentile("),
+      "l_percentile no longer plans the percentile aggregate; the twin check is vacuous")
+    assert(!plan("l_percentile_counts").toString.contains("percentile("),
+      "l_percentile_counts plans the percentile merge buffer, not the counts plan")
+  }
 }
