@@ -10,7 +10,8 @@ package graft
   * Every entry carries one of four defenses:
   *
   *  - [[RowsInvariant]] — a session conf that selects between plans with
-  *    IDENTICAL output rows (staging, memoization, checkpoint flavor).
+  *    IDENTICAL output rows. There are three: the session memo, lineage
+  *    capture for plan audits, and the checkpoint flavor.
   *    Any setting is oracle-safe; the evidence is a result-identity
   *    proof in a spec. No session conf may change output rows: a bound
   *    the oracles must replay is a constant or a count-scaled rule.
@@ -68,28 +69,17 @@ object CapAudit {
 
   val entries: Seq[Entry] = Seq(
     // ── session confs: rows-invariant (any setting is oracle-safe) ──
-    Entry(Scale.StageMemoConf, RowsInvariant, "false",
-      "never — staging/memoization only changes WHERE a relation is computed",
-      "ScaleSpec (memo on/off identity); Verify/Bench run memo=true against " +
-        "the same oracles the memo-off suite passes"),
-    Entry(Scale.StageMemoBudgetConf, RowsInvariant, "auto",
-      "never — LRU retention bound on the memo's pinned checkpoint " +
-        "blocks; an evicted entry RECOMPUTES on next staging, rows " +
-        "identical (round-16 sf10 lesson: unbounded retention pinned " +
-        "~16 GB on a 16 GB heap and starved later queries' sorts)",
-      "ScaleSpec budget-eviction test (tiny budget forces re-staging, " +
-        "same rows); the r16 sf10 records before/after the bound"),
+    Entry(Scale.MemoConf, RowsInvariant, "false",
+      "never — the session memo (staged subtrees, collected artifacts, " +
+        "codebooks, compiled pipe queries) only changes WHERE and HOW " +
+        "OFTEN a result is computed; its budget evicts staged entries, " +
+        "which recompute with identical rows",
+      "ScaleSpec (memo on/off identity, budget eviction), HumioQuerySpec " +
+        "plan-memo test; Verify/Bench run memo=true against the same " +
+        "oracles the memo-off suite passes"),
     Entry(Scale.StageCaptureConf, RowsInvariant, "false",
       "never — lineage capture writes side artifacts, not query rows",
       "ScaleSpec"),
-    Entry(graft.query.HumioQuery.PlanMemoConf, RowsInvariant, "false",
-      "never — caches the COMPILED pipeline Dataset per (session, input " +
-        "plan, query text, tables, tz/ansi); every execution still " +
-        "computes from the sources, only parse/analysis/planning are " +
-        "shared (the stage-memo contract at the DSL layer)",
-      "HumioQuerySpec memo-identity test (memo on/off same rows, " +
-        "key-sensitivity on input/query/tables); Verify/Bench run " +
-        "hq.memo=true against the same oracles the memo-off suite passes"),
     Entry(Scale.ReliableCheckpointConf, RowsInvariant, "false",
       "never — checkpoint flavor, rows unchanged",
       "ScaleSpec"),

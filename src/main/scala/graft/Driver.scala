@@ -4,17 +4,18 @@ import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.AtomicReference
 
-/** What the driver-contract mains (Bench, Verify, EntrySmoke) share: one
-  * session definition, so the bench times the configuration the
-  * correctness dump checks, and one per-query watchdog.
+/** What the driver-contract mains (Bench, Verify, EntrySmoke) and the
+  * tools share: one session definition, so the bench times the
+  * configuration the correctness dump checks, and one per-query watchdog.
   */
 object Driver {
 
   /** local[cpus] with `cpus` shuffle partitions (SPARK_GRAFT_CPUS,
-    * default 4), UTC, no UI, and both session memos on: the mains read
-    * only the read-only fixtures and exit after a bounded query list,
-    * the regime [[graft.operators.Scale.StageMemoConf]] and
-    * [[graft.query.HumioQuery.PlanMemoConf]] are sound in.
+    * default 4), UTC, no UI, constraint propagation off, and the session
+    * memo ([[graft.operators.Scale.MemoConf]]) on: the mains read only
+    * the read-only fixtures and exit after a bounded query list, the
+    * regime the memo is sound in. The tools (Explain, RowCount) use it
+    * too, so they time and count in the configuration Bench runs.
     */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -24,8 +25,7 @@ object Driver {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.constraintPropagation.enabled", "false")
-      .config(graft.operators.Scale.StageMemoConf, "true")
-      .config(graft.query.HumioQuery.PlanMemoConf, "true")
+      .config(graft.operators.Scale.MemoConf, "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

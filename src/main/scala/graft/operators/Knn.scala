@@ -431,24 +431,6 @@ object Knn {
     * assignment pass + a k·dim-sized aggregate, both map-side-partial,
     * so rounds scale linearly in data with no driver involvement.
     */
-  // Session-scoped memo of TRAINED codebooks keyed by their true inputs:
-  // canonical plans + output schemas of (vectors, seed), dim, maxRounds,
-  // and the execution-time conf key. The per-round Scale.stage memo
-  // already dedupes canonically identical refinement chains ACROSS the
-  // queries that train on the same corpus; this artifact-level memo
-  // additionally skips the per-round convergence-probe JOBS on a repeat
-  // call (two k-row count() actions per training — pure job-scheduling
-  // overhead once the chain is staged) and covers trainings whose
-  // chains are unique in the session (x_semdedup_incremental's
-  // base-only codebook). Same opt-in (Scale.StageMemoConf) and
-  // soundness contract (immutable sources, stable confs) as the stage
-  // memo; stopped sessions' entries are swept on access.
-  private val codebookMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    (DataFrame, Int)]()
-
   def kmeansTrain(vectors: DataFrame, seed: DataFrame, dim: Int,
                   maxRounds: Int): (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
@@ -475,24 +457,13 @@ object Knn {
       }
       (cents, round)
     }
-    val s = vectors.sparkSession
-    val vAnalyzed = vectors.queryExecution.analyzed
-    val sAnalyzed = seed.queryExecution.analyzed
-    val memoSafe = !vectors.isStreaming && !seed.isStreaming &&
-      s.conf.get(Scale.StageMemoConf, "false").toBoolean &&
-      Scale.planDeterministic(vAnalyzed) && Scale.planDeterministic(sAnalyzed)
-    if (!memoSafe) doTrain()
-    else {
-      codebookMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-      def schemaKey(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-        p.output.map(a => s"${a.name}:${a.dataType.catalogString}:${a.nullable}")
-          .mkString(",")
-      val meta = s"dim=$dim;rounds=$maxRounds;${Scale.memoConfKey(s)};" +
-        s"${schemaKey(vAnalyzed)}|${schemaKey(sAnalyzed)}"
-      codebookMemo.computeIfAbsent(
-        (s, meta, vAnalyzed.canonicalized, sAnalyzed.canonicalized),
-        _ => doTrain())
-    }
+    // memoized on (vectors, seed): the per-round stage memo already
+    // shares canonically identical refinement chains ACROSS the queries
+    // that train on the same corpus; this entry also skips the per-round
+    // convergence-probe JOBS on a repeat call, and covers trainings whose
+    // chains are unique in the session (x_semdedup_incremental's
+    // base-only codebook)
+    Scale.memoized(s"kmeans;dim=$dim;rounds=$maxRounds", Seq(vectors, seed))(doTrain())
   }
 
   /** Within-cell cosine-similar pairs — the pair-generation stage of
@@ -1011,7 +982,7 @@ object Knn {
 
   /** ONE function instance per (dim, iters): typed mapPartitions plans
     * embed the closure by reference, and plan-memo equality (the
-    * [[Scale.StageMemoConf]] contract) needs two builds of the same
+    * [[Scale.MemoConf]] contract) needs two builds of the same
     * rounds to compare EQUAL — the TopKByScore sharing lesson.
     */
   private def powerRoundsFn(dim: Int, iters: Int)

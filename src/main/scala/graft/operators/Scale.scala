@@ -2,7 +2,8 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -76,186 +77,161 @@ object Scale {
   /** Session conf selecting how iterative-loop stages materialize. */
   val ReliableCheckpointConf = "spark.graft.checkpoint.reliable"
 
-  /** Session conf (default FALSE) enabling the staged-subtree memo.
+  /** Session conf (default FALSE) enabling the session memo. Every
+    * plan-keyed session cache goes through [[memoized]], which owns the
+    * whole policy: [[stage]]'s staged subtrees, [[memoArtifact]]'s
+    * collected artifacts, [[Knn.kmeansTrain]]'s codebooks and
+    * [[graft.query.HumioQuery.run]]'s compiled pipelines.
     *
     * OFF by default because the memo's soundness contract is real:
-    * sources must be immutable for the session's lifetime (a staged
-    * plan over a table that is later overwritten would serve the OLD
-    * checkpoint — plan canonicalization cannot see data change),
-    * result-affecting session confs must be stable too (the key folds
-    * in the session time zone and ANSI mode — the two that change what
-    * identical plans compute — but not every conceivable conf; a
-    * session that flips other semantics-bearing confs mid-run must not
-    * enable the memo), and entries live until their session stops
-    * (stopped sessions' entries are swept on the next stage() call).
-    * The driver-contract mains
-    * (Bench / Verify / EntrySmoke) opt in: they read only the
-    * read-only test fixtures, run a bounded query list, and exit — the
-    * exact regime where "identical lineage computes once per session"
-    * is free speed with no staleness surface. General sessions (specs
-    * that drop/rewrite tables mid-run, long-lived drivers) keep the
-    * always-restage behavior.
+    * sources must be immutable for the session's lifetime (an entry over
+    * a table that is later overwritten would serve the OLD result — plan
+    * canonicalization cannot see data change), and result-affecting
+    * session confs must be stable too (the key folds in the session time
+    * zone and ANSI mode — the two that change what identical plans
+    * compute — but not every conceivable conf; a session that flips other
+    * semantics-bearing confs mid-run must not enable the memo). Entries
+    * live until their session stops, staged ones until [[stage]]'s
+    * budget forgets them. The driver-contract mains (Bench /
+    * Verify / EntrySmoke, through [[graft.Driver.session]]) opt in: they
+    * read only the read-only fixtures, run a bounded query list, and exit
+    * — the regime where "identical lineage computes once per session" is
+    * free speed with no staleness surface. Sessions that drop or rewrite
+    * tables mid-run keep the always-recompute behavior.
     */
-  val StageMemoConf = "spark.graft.stage.memo"
+  val MemoConf = "spark.graft.stage.memo"
 
-  /** Session conf: byte budget for the block-manager storage the stage
-    * memo keeps PINNED for the session's lifetime ("512m", "4g", or
-    * "auto" = half the block manager's max storage memory). Rows are
-    * never affected — an entry past the budget is simply forgotten
-    * (LRU-first), so its checkpoint blocks die with the queries that
-    * reference them and the NEXT identical staging recomputes instead
-    * of reusing. The bound exists because memo retention is a
-    * memory-for-time trade that INVERTS at scale: measured on the
-    * round-16 sf10 probe, unbounded retention pinned ~16 GB of
-    * localCheckpoint blocks on a 16 GB heap — the unified pool's
-    * protected storage region filled with dead entries' blocks and
-    * every later sort/join in the suite paid spill-and-refetch, turning
-    * 2-4 s queries into 15-60 s ones (SCALE_PROBE.md round 16). At
-    * 1000-executor scale the same failure mode is per-executor storage
-    * eviction thrash; a budget per block manager is the honest
-    * contract. Eviction only drops the MAP reference — localCheckpoint
-    * blocks must never be force-unpersisted while a consumer may hold
-    * the truncated-lineage relation (no recompute path); the
-    * ContextCleaner reclaims them once the last reference is gone.
-    */
-  val StageMemoBudgetConf = "spark.graft.stage.memoBudget"
+  // One memo entry: the session; the caller's tag; the execution-time
+  // confs and each input's schema (canonicalization erases column names
+  // and nullability, so inputs differing only in an alias must not
+  // share); and each input's memoCanonical plan.
+  private final case class MemoKey(session: SparkSession, tag: String,
+      meta: Seq[String], plans: Seq[LogicalPlan])
 
-  // access-ordered view of the staged-subtree memo for LRU eviction —
-  // touched on every hit/insert under its own lock (the map itself
-  // stays the concurrent source of truth)
-  private val memoOrder = new java.util.LinkedHashMap[
-    (SparkSession, Boolean, Boolean, String,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    Unit](16, 0.75f, true)
+  private val memo = new java.util.concurrent.ConcurrentHashMap[MemoKey, AnyRef]()
 
-  private def memoBudgetBytes(s: SparkSession): Long =
-    s.conf.get(StageMemoBudgetConf, "auto") match {
-      case "auto" =>
-        // half the max storage memory: leaves the other half (plus the
-        // evictable region) for the RUNNING query's own caching needs
-        s.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum / 2
-      case v =>
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
+  // access-ordered view of the STAGED entries for the budget's LRU
+  // eviction, touched on every staging under its own lock (the map
+  // itself stays the concurrent source of truth)
+  private val stagedOrder =
+    new java.util.LinkedHashMap[MemoKey, Unit](16, 0.75f, true)
+
+  // None when the memo is off for these inputs: MemoConf unset, an input
+  // streams, or an input plan is nondeterministic (then every call
+  // computes, as without the memo)
+  private def memoKey(tag: String, inputs: Seq[DataFrame]): Option[MemoKey] = {
+    val s = inputs.head.sparkSession
+    if (!s.conf.get(MemoConf, "false").toBoolean || inputs.exists(_.isStreaming))
+      return None
+    val plans = inputs.map(_.queryExecution.analyzed)
+    if (!plans.forall(planDeterministic)) return None
+    // the memo must not pin a dead session (and its checkpoint blocks)
+    // for the JVM's lifetime — a test JVM runs many sessions back to back
+    memo.keySet.removeIf(_.session.sparkContext.isStopped)
+    stagedOrder.synchronized {
+      stagedOrder.keySet.removeIf(_.session.sparkContext.isStopped)
+    }
+    // time zone moves every zone-sensitive timestamp function; ANSI mode
+    // moves overflow and cast behavior (MemoConf covers the long tail)
+    val confKey = s"tz=${s.conf.get("spark.sql.session.timeZone")};" +
+      s"ansi=${s.conf.get("spark.sql.ansi.enabled")}"
+    val schemas = plans.map(_.output
+      .map(a => s"${a.name}:${a.dataType.catalogString}:${a.nullable}")
+      .mkString(","))
+    Some(MemoKey(s, tag, confKey +: schemas, plans.map(memoCanonical)))
+  }
+
+  // get, compute, putIfAbsent — never computeIfAbsent: a compute may
+  // memoize in turn (kmeansTrain's training stages every round, artifact
+  // computes may stage), and ConcurrentHashMap forbids updating the map
+  // from inside computeIfAbsent's function. Two racing computes of one
+  // key both run; the first stored wins and both callers get it.
+  private def lookup[T <: AnyRef](key: MemoKey)(compute: => T): T =
+    memo.get(key) match {
+      case null =>
+        val v = compute
+        val storable = v match {
+          // deterministic inputs can still build a nondeterministic
+          // result plan, which must not be shared
+          case d: Dataset[_] => planDeterministic(d.queryExecution.analyzed)
+          case _ => true
+        }
+        if (!storable) v
+        else memo.putIfAbsent(key, v) match {
+          case null => v
+          case winner => winner.asInstanceOf[T]
+        }
+      case hit => hit.asInstanceOf[T]
     }
 
-  // Drop LRU memo entries until the session's pinned checkpoint blocks
-  // fit the budget. Size is read from the block manager's live storage
-  // info (an eager=false entry that never ran reports 0 and cannot be
-  // charged). Entries of OTHER sessions are untouched — the budget is
-  // per session, like the memo's soundness contract.
-  private def sweepMemoBudget(s: SparkSession): Unit = memoOrder.synchronized {
-    val budget = memoBudgetBytes(s)
-    if (budget <= 0) return
-    val sizeByRdd = s.sparkContext.getRDDStorageInfo
-      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    def rddId(df: DataFrame): Option[Int] = df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd.id)
-      case _ => None
+  /** `compute`, memoized per session on (`tag`, the tz/ansi confs, each
+    * input's schema and canonical plan) while [[MemoConf]] is on, no
+    * input streams and every input plan is deterministic, subqueries
+    * included; otherwise computed on every call. A hit returns the
+    * stored object itself. A `DataFrame` result whose plan is
+    * nondeterministic is returned without being stored. Entries of
+    * stopped sessions are dropped.
+    */
+  private[graft] def memoized[T <: AnyRef](tag: String, inputs: Seq[DataFrame])(
+      compute: => T): T =
+    memoKey(tag, inputs) match {
+      case Some(key) => lookup(key)(compute)
+      case None => compute
     }
-    def pinned: Long = memo.asScala.collect {
-      case (k, df) if k._1 eq s =>
-        rddId(df).flatMap(sizeByRdd.get).getOrElse(0L)
-    }.sum
-    if (pinned <= budget) return
-    val it = memoOrder.keySet.iterator
-    var total = pinned
-    while (total > budget && it.hasNext) {
-      val k = it.next()
-      if (k._1 eq s) {
-        val dropped = Option(memo.get(k))
-          .flatMap(rddId).flatMap(sizeByRdd.get).getOrElse(0L)
-        if (dropped > 0) {
-          memo.remove(k)
-          it.remove()
-          total -= dropped
+
+  /** Memoize `compute` (a driver-side collection of the bounded artifact
+    * `df` derives, such as a trained model) per session: [[memoized]]
+    * with one input. A query that collects at plan-build time should go
+    * through it, or its warm run re-pays the collect.
+    */
+  def memoArtifact[T <: AnyRef](df: DataFrame, tag: String)(compute: => T): T =
+    memoized(tag, Seq(df))(compute)
+
+  // half the block managers' max storage memory: leaves the other half
+  // (plus the evictable region) for the RUNNING query's own caching
+  private def autoBudget(s: SparkSession): Long =
+    s.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum / 2
+
+  // Drop LRU staged entries until the session's pinned checkpoint blocks
+  // fit the budget. Rows never change: an evicted entry is only
+  // forgotten, its blocks die with the queries that reference them and
+  // the next identical staging recomputes. Blocks are never
+  // force-unpersisted — a consumer may still hold the truncated-lineage
+  // relation, which has no recompute path; the ContextCleaner reclaims
+  // them once the last reference is gone. Size is read from the block
+  // manager's live storage info (an eager=false entry that never ran
+  // reports 0 and cannot be charged). Other sessions' entries are
+  // untouched. The bound exists because retention INVERTS at scale:
+  // unbounded, the round-16 sf10 probe pinned ~16 GB of checkpoint
+  // blocks on a 16 GB heap and every later sort spilled, turning 2-4 s
+  // queries into 15-60 s ones (SCALE_PROBE.md round 16).
+  private def sweepBudget(s: SparkSession, budget: Long): Unit =
+    stagedOrder.synchronized {
+      if (budget > 0) {
+        val sizeByRdd = s.sparkContext.getRDDStorageInfo
+          .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+        def size(k: MemoKey): Long = memo.get(k) match {
+          case d: Dataset[_] => d.queryExecution.analyzed match {
+            case lr: org.apache.spark.sql.execution.LogicalRDD =>
+              sizeByRdd.getOrElse(lr.rdd.id, 0L)
+            case _ => 0L
+          }
+          case _ => 0L
+        }
+        val lru = stagedOrder.keySet.asScala.filter(_.session eq s).toList
+        var total = lru.map(size).sum
+        val it = lru.iterator
+        while (total > budget && it.hasNext) {
+          val k = it.next()
+          val dropped = size(k)
+          if (dropped > 0) {
+            memo.remove(k)
+            stagedOrder.remove(k)
+            total -= dropped
+          }
         }
       }
     }
-  }
-
-  // session-scoped memo of staged subtrees, keyed by the CANONICALIZED
-  // analyzed plan PLUS the output schema (canonicalization erases
-  // column names and nullability — two stagings differing only in an
-  // alias must not share, or the hit returns the wrong names), the
-  // reliable-checkpoint mode (a durable run must never be handed
-  // executor-local blocks), and eagerness (an eager call's contract is
-  // "materialized NOW, in its own job"). Queries in one session that
-  // stage semantically identical lineage (the x_curate* quality gate,
-  // the kmeans seed — and, transitively, every Lloyd round built on a
-  // memoized parent) materialize it ONCE and share the checkpointed
-  // blocks; iterative rounds on DIFFERENT parents can't collide (a
-  // checkpoint is a unique leaf, so round r's plan embeds round r-1's
-  // identity).
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Boolean, Boolean, String,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    DataFrame]()
-
-  /** Materialize one round of an iterative loop with truncated lineage.
-    *
-    * Iterative operators (connected components, Lloyd's k-means, shared
-    * curation gates) re-reference each round's output several times;
-    * without materialization the lineage doubles per round and recompute
-    * cascades. Two modes, chosen by the `spark.graft.checkpoint.reliable`
-    * session conf:
-    *
-    *  - default (`false`): `localCheckpoint` — blocks live on executor
-    *    block managers (MEMORY_AND_DISK), zero configuration, no extra
-    *    IO; exactly right on local[n]. NOT fault-tolerant: lineage is
-    *    gone, so on a real cluster one lost executor mid-loop fails the
-    *    query with no recompute path.
-    *  - `true`: reliable `checkpoint()` — blocks are written under the
-    *    SparkContext checkpoint directory (`setCheckpointDir`, HDFS/S3 at
-    *    cluster scale) and executor loss recovers by re-reading durable
-    *    files. The trade: the round's lineage is computed a second time
-    *    when the checkpoint files are written (Spark writes them in a
-    *    post-action pass), plus the durable round-trip — the price of
-    *    surviving executor churn in long loops on big clusters.
-    *
-    * Both modes keep the loop discipline identical: with `eager = false`
-    * the loop's one convergence-probe action materializes the round — no
-    * separate materialize job — and the returned relation's semantics
-    * are the same either way.
-    */
-  // a plan is memo-deterministic only if EVERY node's expressions are
-  // deterministic INCLUDING inside subquery plans: Expression.deterministic
-  // on a subquery expression covers only its outer references, not the
-  // inner plan, so rand() inside a scalar subquery would otherwise slip
-  // through and be shared unsoundly. subqueriesAll is transitive
-  // (subqueries of subqueries), so one level of recursion here suffices.
-  // Session-scoped memo for COLLECTED bounded artifacts (a trained
-  // model, a profile table) — the [[graft.operators.Knn.kmeansTrain]]
-  // codebook-memo contract generalized: keyed by the artifact
-  // DataFrame's canonical analyzed plan, output schema, the
-  // execution-time conf key, and a caller tag; same opt-in
-  // ([[StageMemoConf]]) and soundness contract (immutable sources,
-  // stable confs); stopped sessions' entries swept on access.
-  private val artifactMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), AnyRef]()
-
-  /** Memoize `compute` (a driver-side collection of the bounded
-    * artifact `df` derives) per session. Falls back to computing
-    * directly when the memo is off, the input streams, or the plan is
-    * nondeterministic — the caller's query-construction cost then stays
-    * what it was, paid per call.
-    */
-  def memoArtifact[T <: AnyRef](df: DataFrame, tag: String)(compute: => T): T = {
-    val s = df.sparkSession
-    val analyzed = df.queryExecution.analyzed
-    val memoSafe = !df.isStreaming &&
-      s.conf.get(StageMemoConf, "false").toBoolean && planDeterministic(analyzed)
-    if (!memoSafe) compute
-    else {
-      artifactMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-      val schemaKey = analyzed.output
-        .map(a => s"${a.name}:${a.dataType.catalogString}:${a.nullable}")
-        .mkString(",")
-      artifactMemo.computeIfAbsent(
-        (s, s"$tag;${memoConfKey(s)};$schemaKey", memoCanonical(analyzed)),
-        _ => compute).asInstanceOf[T]
-    }
-  }
 
   /** Memo-key canonical form: Spark's `canonicalized` PLUS encoder
     * normalization for typed-UDAF aggregates. A [[org.apache.spark.sql.
@@ -276,16 +252,19 @@ object Scale {
       : org.apache.spark.sql.execution.aggregate.ScalaAggregator[A, B, C] =
     sa.copy(inputEncoder = null, bufferEncoder = null)
 
-  private[graft] def memoCanonical(
-      analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+  private def memoCanonical(analyzed: LogicalPlan): LogicalPlan =
     analyzed.canonicalized.transformAllExpressions {
       case sa: org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _] =>
         neuterAgg(sa)
     }
 
-  private[graft] def planDeterministic(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+  // a plan is memo-deterministic only if EVERY node's expressions are
+  // deterministic INCLUDING inside subquery plans: Expression.deterministic
+  // on a subquery expression covers only its outer references, not the
+  // inner plan, so rand() inside a scalar subquery would otherwise slip
+  // through and be shared unsoundly. subqueriesAll is transitive
+  // (subqueries of subqueries), so one level of recursion here suffices.
+  private def planDeterministic(p: LogicalPlan): Boolean =
     p.collect { case n => n.expressions }.flatten.forall(_.deterministic) &&
       p.subqueriesAll.forall(sub =>
         sub.collect { case n => n.expressions }.flatten.forall(_.deterministic))
@@ -324,7 +303,52 @@ object Scale {
     staged
   }
 
-  def stage(df: DataFrame, eager: Boolean = false): DataFrame = {
+  /** Materialize one round of an iterative loop with truncated lineage.
+    *
+    * Iterative operators (connected components, Lloyd's k-means, shared
+    * curation gates) re-reference each round's output several times;
+    * without materialization the lineage doubles per round and recompute
+    * cascades. Two modes, chosen by the `spark.graft.checkpoint.reliable`
+    * session conf:
+    *
+    *  - default (`false`): `localCheckpoint` — blocks live on executor
+    *    block managers (MEMORY_AND_DISK), zero configuration, no extra
+    *    IO; exactly right on local[n]. NOT fault-tolerant: lineage is
+    *    gone, so on a real cluster one lost executor mid-loop fails the
+    *    query with no recompute path.
+    *  - `true`: reliable `checkpoint()` — blocks are written under the
+    *    SparkContext checkpoint directory (`setCheckpointDir`, HDFS/S3 at
+    *    cluster scale) and executor loss recovers by re-reading durable
+    *    files. The trade: the round's lineage is computed a second time
+    *    when the checkpoint files are written (Spark writes them in a
+    *    post-action pass), plus the durable round-trip — the price of
+    *    surviving executor churn in long loops on big clusters.
+    *
+    * Both modes keep the loop discipline identical: with `eager = false`
+    * the loop's one convergence-probe action materializes the round — no
+    * separate materialize job — and the returned relation's semantics
+    * are the same either way.
+    *
+    * Under [[MemoConf]] the staged relation is [[memoized]], tagged with
+    * the reliable mode (a durable run must never be handed
+    * executor-local blocks) and eagerness (an eager call's contract is
+    * "materialized NOW, in its own job"): queries in one session that
+    * stage semantically identical lineage (the x_curate* quality gate,
+    * the kmeans seed — and, transitively, every Lloyd round built on a
+    * memoized parent) materialize it ONCE and share the checkpointed
+    * blocks. Iterative rounds on DIFFERENT parents can't collide (a
+    * checkpoint is a unique leaf, so round r's plan embeds round r-1's
+    * identity). Staged entries are kept within a budget of half the
+    * block managers' max storage memory, least recently used forgotten
+    * first.
+    */
+  def stage(df: DataFrame, eager: Boolean = false): DataFrame =
+    stage(df, eager, None)
+
+  /** [[stage]] with the memo budget `budgetBytes` in place of half the
+    * max storage memory. */
+  private[graft] def stage(df: DataFrame, eager: Boolean,
+                           budgetBytes: Option[Long]): DataFrame = {
     val s = df.sparkSession
     val reliable = s.conf.get(ReliableCheckpointConf, "false").toBoolean
     // idempotent on an already-materialized relation: a LogicalRDD leaf
@@ -355,42 +379,16 @@ object Scale {
         df.checkpoint(eager)
       } else df.localCheckpoint(eager)
     val analyzed = df.queryExecution.analyzed
-    val memoSafe = !df.isStreaming &&
-      s.conf.get(StageMemoConf, "false").toBoolean &&
-      planDeterministic(analyzed)
-    if (!memoSafe) captureIfEnabled(s, doStage(), analyzed)
-    else {
-      // sweep entries for stopped sessions: the memo must not pin a dead
-      // session (and its checkpoint blocks) for the JVM's lifetime — a
-      // test JVM runs many sessions back to back
-      memo.keySet.removeIf(_._1.sparkContext.isStopped)
-      memoOrder.synchronized {
-        memoOrder.keySet.removeIf(_._1.sparkContext.isStopped)
-      }
-      val schemaKey = analyzed.output
-        .map(a => s"${a.name}:${a.dataType.catalogString}:${a.nullable}")
-        .mkString(",")
-      // fold the execution-time confs that change what an identical plan
-      // COMPUTES into the key: canonicalization compares plans, not the
-      // session semantics they resolve under. Time zone moves every
-      // zone-sensitive timestamp function; ANSI mode moves overflow and
-      // cast behavior. (Contract in StageMemoConf covers the long tail.)
-      val key = (s, reliable, eager,
-        s"$schemaKey|${memoConfKey(s)}", memoCanonical(analyzed))
-      val staged = memo.computeIfAbsent(key, _ => doStage())
-      // LRU touch, then enforce the pinned-storage budget — AFTER the
-      // lookup so the entry just used is the freshest and a sweep can
-      // never evict the relation this very call returns
-      memoOrder.synchronized { memoOrder.put(key, ()) }
-      sweepMemoBudget(s)
-      captureIfEnabled(s, staged, analyzed)
+    memoKey(s"stage;reliable=$reliable;eager=$eager", Seq(df)) match {
+      case None => captureIfEnabled(s, doStage(), analyzed)
+      case Some(key) =>
+        val staged = lookup(key)(doStage())
+        // LRU touch, then enforce the budget — AFTER the lookup so the
+        // entry just used is the freshest and a sweep can never evict
+        // the relation this very call returns
+        stagedOrder.synchronized { stagedOrder.put(key, ()) }
+        sweepBudget(s, budgetBytes.getOrElse(autoBudget(s)))
+        captureIfEnabled(s, staged, analyzed)
     }
   }
-
-  /** The execution-time confs folded into memo keys — shared with the
-    * artifact-level memos built on the same contract
-    * ([[Knn.kmeansTrain]]'s codebook memo). */
-  private[graft] def memoConfKey(s: SparkSession): String =
-    s"tz=${s.conf.get("spark.sql.session.timeZone")};" +
-      s"ansi=${s.conf.get("spark.sql.ansi.enabled")}"
 }

@@ -143,38 +143,15 @@ import graft.functions.Det.detRound4
   */
 object HumioQuery {
 
-  /** Session conf (default FALSE) enabling the compiled-pipeline memo:
-    * `run()` results are cached per (session, input plan, query text,
-    * dimension tables, tz/ansi confs), so a session that re-runs the
-    * same pipe query over the same input reuses the COMPILED Dataset —
-    * parse, per-stage analysis and physical planning happen once, every
-    * execution still computes from the sources. Same soundness contract
-    * as [[graft.operators.Scale.StageMemoConf]] (immutable sources,
-    * stable semantics confs, entries die with their session); the
-    * driver-contract mains (Bench/Verify/EntrySmoke) opt in — the 71-
-    * query hq pack re-parsed and re-planned every pipeline per run,
-    * ~13 s of warm driver time per suite pass at r16 epoch (VERDICT r16
-    * ask #4). Nothing is memoized when the input or a dimension table
-    * is streaming or a compiled plan is nondeterministic.
-    */
-  val PlanMemoConf = "spark.graft.hq.memo"
-
-  private val planMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      List[(String, String,
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]),
-    DataFrame]()
-
-  private def schemaKey(d: DataFrame): String =
-    d.queryExecution.analyzed.output
-      .map(a => s"${a.name}:${a.dataType.catalogString}:${a.nullable}")
-      .mkString(",")
-
   /** Compile and apply `query` to `df`. `tables` names the dimension
     * tables a `match()`/`lookup()` stage may enrich against (LogScale
     * resolves these from uploaded lookup files; here the caller passes
     * DataFrames).
+    *
+    * Under the session memo ([[graft.operators.Scale.MemoConf]]) the
+    * COMPILED Dataset is reused per (query text, table names, input and
+    * table plans): parse and per-stage analysis happen once, and every
+    * execution still computes from the sources.
     */
   def run(df: DataFrame, query: String,
           tables: Map[String, DataFrame] = Map.empty): DataFrame = {
@@ -191,37 +168,11 @@ object HumioQuery {
       // path sheds it too, not just runStream()
       out.drop(out.columns.filter(_.startsWith("__twindow_")): _*)
     }
-    val s = df.sparkSession
-    val memoOn = s.conf.get(PlanMemoConf, "false").toBoolean &&
-      !df.isStreaming && tables.valuesIterator.forall(!_.isStreaming) &&
-      graft.operators.Scale.planDeterministic(df.queryExecution.analyzed)
-    if (!memoOn) compile()
-    else {
-      planMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-      // the key mirrors the stage memo's: canonicalized plans compare
-      // structure (exprIds normalized) but erase names/nullability, so
-      // the schema rides alongside; tz/ansi are the execution-time
-      // confs that change what an identical plan computes
-      val key = (s,
-        s"$query|${schemaKey(df)}|${graft.operators.Scale.memoConfKey(s)}",
-        graft.operators.Scale.memoCanonical(df.queryExecution.analyzed),
-        tables.toList.sortBy(_._1).map { case (n, t) =>
-          (n, schemaKey(t),
-            graft.operators.Scale.memoCanonical(t.queryExecution.analyzed))
-        })
-      val hit = planMemo.get(key)
-      if (hit != null) hit
-      else {
-        val out = compile()
-        // a nondeterministic COMPILED plan (none of the current verbs
-        // produce one — sample() is md5-bucketed by design) must not be
-        // shared: hand it back uncached
-        if (graft.operators.Scale.planDeterministic(
-            out.queryExecution.analyzed))
-          planMemo.putIfAbsent(key, out)
-        out
-      }
-    }
+    // table names hold no newline, so the tag splits back into the
+    // names and the query text
+    val named = tables.toSeq.sortBy(_._1)
+    graft.operators.Scale.memoized(("hq" +: named.map(_._1) :+ query).mkString("\n"),
+      df +: named.map(_._2))(compile())
   }
 
   /** Streaming twin of [[run]]: compile the watermark-safe verb subset

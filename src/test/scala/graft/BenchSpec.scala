@@ -68,13 +68,19 @@ class BenchSpec extends SparkSpec {
 
   test("SPARK_GRAFT_CONF: an entry without '=' fails and names the entry") {
     val e = intercept[IllegalArgumentException](
-      Driver.parseConf("spark.graft.stage.memo=true;spark.graft.hq.memo"))
-    assert(e.getMessage.contains("'spark.graft.hq.memo'"), e.getMessage)
+      Driver.parseConf("spark.graft.stage.memo=true;spark.graft.checkpoint.reliable"))
+    assert(e.getMessage.contains("'spark.graft.checkpoint.reliable'"), e.getMessage)
   }
 
   test("SPARK_GRAFT_CONF: an unknown spark.graft.* key fails and names the key") {
-    val e = intercept[IllegalArgumentException](Driver.parseConf("spark.graft.ivf.k=32"))
-    assert(e.getMessage.contains("'spark.graft.ivf.k'"), e.getMessage)
+    // the last two were confs once: a stale probe recipe must fail, not
+    // set a knob that nothing reads
+    Seq("spark.graft.ivf.k=32", "spark.graft.hq.memo=true",
+        "spark.graft.stage.memoBudget=1g").foreach { kv =>
+      val key = kv.takeWhile(_ != '=')
+      val e = intercept[IllegalArgumentException](Driver.parseConf(kv))
+      assert(e.getMessage.contains(s"'$key'"), e.getMessage)
+    }
     assert(Driver.parseConf(" spark.graft.stage.memo = true ;spark.sql.x=a=b;") ==
       Seq("spark.graft.stage.memo" -> "true", "spark.sql.x" -> "a=b"))
   }

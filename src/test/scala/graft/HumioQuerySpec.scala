@@ -1125,7 +1125,9 @@ class HumioQuerySpec extends SparkSpec {
   test("plan memo: identical rows memo-on vs memo-off, Dataset reused on hit") {
     val q = "event_type != error | groupBy(event_type) | sort(event_type)"
     val off = HumioQuery.run(df, q).collect().toSeq
-    spark.conf.set(HumioQuery.PlanMemoConf, "true")
+    assert(!(HumioQuery.run(df, q) eq HumioQuery.run(df, q)),
+      "the session memo conf alone switches the plan memo: off by default")
+    spark.conf.set(graft.operators.Scale.MemoConf, "true")
     try {
       val a = HumioQuery.run(df, q)
       val b = HumioQuery.run(df, q)
@@ -1148,6 +1150,6 @@ class HumioQuerySpec extends SparkSpec {
       // a memo-hit is a REUSED PLAN, not a cached result: the second
       // Dataset still computes from source (same rows again)
       assert(b.collect().toSeq == off)
-    } finally spark.conf.set(HumioQuery.PlanMemoConf, "false")
+    } finally spark.conf.set(graft.operators.Scale.MemoConf, "false")
   }
 }

@@ -65,15 +65,15 @@ class IndexHealthSpec extends SparkSpec {
   test("refreshed codebook is bit-identical to a cold retrain") {
     val current = base ++ cloud(400, 120, Array(0.0, 0.0, 1.0, 0.0))
     def centroids(memo: Boolean): Seq[(Long, Seq[Double])] = {
-      val prev = spark.conf.getOption(graft.operators.Scale.StageMemoConf)
-      spark.conf.set(graft.operators.Scale.StageMemoConf, memo.toString)
+      val prev = spark.conf.getOption(graft.operators.Scale.MemoConf)
+      spark.conf.set(graft.operators.Scale.MemoConf, memo.toString)
       try {
         val (trained, _) = Knn.kmeansTrain(df(current), seedOf(current, 4), DIM, 3)
         trained.select(col("cent_id"), col("cvec"))
           .as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq
       } finally prev match {
-        case Some(v) => spark.conf.set(graft.operators.Scale.StageMemoConf, v)
-        case None => spark.conf.unset(graft.operators.Scale.StageMemoConf)
+        case Some(v) => spark.conf.set(graft.operators.Scale.MemoConf, v)
+        case None => spark.conf.unset(graft.operators.Scale.MemoConf)
       }
     }
     val cold = centroids(memo = false)

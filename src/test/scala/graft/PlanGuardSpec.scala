@@ -154,7 +154,7 @@ class PlanGuardSpec extends AnyFunSuite {
     // plan-build-time training collects one-time (read-only fixtures —
     // the memo's contract)
     s.conf.set(graft.operators.Scale.StageCaptureConf, "true")
-    s.conf.set(graft.operators.Scale.StageMemoConf, "true")
+    s.conf.set(graft.operators.Scale.MemoConf, "true")
     s
   }
 
@@ -283,19 +283,31 @@ class PlanGuardSpec extends AnyFunSuite {
     * low-card outer window with partition columns `outer`) per-group
     * rank limits whose window partitions refine `outer` — the salted
     * two-phase rewrites' phase-2 shape. */
-  private def unreducedCorpus(p: SparkPlan, outer: Set[String]): Boolean = p match {
+  private def unreducedCorpus(p: SparkPlan, outer: Set[String],
+                              walk: LineageWalk = new LineageWalk): Boolean = p match {
     case _: BaseAggregateExec | _: GlobalLimitExec |
          _: TakeOrderedAndProjectExec | _: CollectLimitExec => false
     case wg: WindowGroupLimitExec
         if outer.subsetOf(partitionColNames(wg.partitionSpec)) => false
     case f: FilterExec if rankLimitBarrier(f, outer) => false
     case f: FileSourceScanExec => !isDimScan(f)
-    case r: RDDScanExec =>
-      graft.operators.Scale.capturedLineage(r.rdd.id)
-        .exists(unreducedCorpusL)
+    case r: RDDScanExec => walk.enter(r.rdd.id).exists(unreducedCorpusL(_, walk))
     case j: BaseJoinExec if j.joinType == LeftSemi || j.joinType == LeftAnti =>
-      unreducedCorpus(j.left, outer)
-    case other => other.children.exists(unreducedCorpus(_, outer))
+      unreducedCorpus(j.left, outer, walk)
+    case other => other.children.exists(unreducedCorpus(_, outer, walk))
+  }
+
+  /** Captured pre-stage lineages, each entered at most once per walk.
+    * The rounds of an iterative staged chain each reference the round
+    * before, so a walk that re-enters every reference is exponential in
+    * the chain length. Re-entering adds nothing to the set-valued walks;
+    * for the corpus walk, whose `exists` short-circuits, a staged
+    * relation reached a second time answered false the first time. */
+  private final class LineageWalk {
+    private val seen = collection.mutable.Set[Int]()
+    /** The lineage captured for `rddId`, unless this walk entered it. */
+    def enter(rddId: Int): Option[logical.LogicalPlan] =
+      if (seen.add(rddId)) graft.operators.Scale.capturedLineage(rddId) else None
   }
 
   // ---- the same two analyses at the LOGICAL level, for captured
@@ -341,7 +353,7 @@ class PlanGuardSpec extends AnyFunSuite {
     case _ => false
   }
 
-  private def unreducedCorpusL(p: logical.LogicalPlan): Boolean = p match {
+  private def unreducedCorpusL(p: logical.LogicalPlan, walk: LineageWalk): Boolean = p match {
     case _: logical.Aggregate | _: logical.GlobalLimit => false
     case lr: LogicalRelation => lr.relation match {
       case h: HadoopFsRelation =>
@@ -349,11 +361,10 @@ class PlanGuardSpec extends AnyFunSuite {
         !(path.contains("region") || path.contains("nation"))
       case _ => true
     }
-    case rdd: LogicalRDD =>
-      graft.operators.Scale.capturedLineage(rdd.rdd.id).exists(unreducedCorpusL)
+    case rdd: LogicalRDD => walk.enter(rdd.rdd.id).exists(unreducedCorpusL(_, walk))
     case j: logical.Join if j.joinType == LeftSemi || j.joinType == LeftAnti =>
-      unreducedCorpusL(j.left)
-    case other => other.children.exists(unreducedCorpusL)
+      unreducedCorpusL(j.left, walk)
+    case other => other.children.exists(unreducedCorpusL(_, walk))
   }
 
   private def partitionColNames(spec: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Set[String] =
@@ -376,9 +387,9 @@ class PlanGuardSpec extends AnyFunSuite {
       case a: Alias => defs(a.exprId.id) = a.child
       case _ => ()
     }
+    val walk = new LineageWalk
     def walkL(p: logical.LogicalPlan): Unit = p.foreach {
-      case rdd: LogicalRDD =>
-        graft.operators.Scale.capturedLineage(rdd.rdd.id).foreach(walkL)
+      case rdd: LogicalRDD => walk.enter(rdd.rdd.id).foreach(walkL)
       case node => node.expressions.foreach(_.foreach {
         case a: Alias => defs(a.exprId.id) = a.child
         case _ => ()
@@ -391,8 +402,7 @@ class PlanGuardSpec extends AnyFunSuite {
         fromExprs(a.groupingExpressions); fromExprs(a.resultExpressions)
       case e: ExpandExec => e.projections.foreach(fromExprs)
       case g: GenerateExec => fromExprs(Seq(g.generator))
-      case r: RDDScanExec =>
-        graft.operators.Scale.capturedLineage(r.rdd.id).foreach(walkL)
+      case r: RDDScanExec => walk.enter(r.rdd.id).foreach(walkL)
       case _ => ()
     }
     defs.toMap
@@ -545,16 +555,15 @@ class PlanGuardSpec extends AnyFunSuite {
     * staged leaves into their captured pre-stage lineage. */
   private def windowPartitions(plan: SparkPlan): Seq[Set[String]] = {
     val out = Seq.newBuilder[Set[String]]
+    val walk = new LineageWalk
     def walkL(p: logical.LogicalPlan): Unit = p.foreach {
-      case rdd: LogicalRDD =>
-        graft.operators.Scale.capturedLineage(rdd.rdd.id).foreach(walkL)
+      case rdd: LogicalRDD => walk.enter(rdd.rdd.id).foreach(walkL)
       case w: logical.Window => out += partitionColNames(w.partitionSpec)
       case _ => ()
     }
     plan.foreach {
       case w: WindowExecBase => out += partitionColNames(w.partitionSpec)
-      case r: RDDScanExec =>
-        graft.operators.Scale.capturedLineage(r.rdd.id).foreach(walkL)
+      case r: RDDScanExec => walk.enter(r.rdd.id).foreach(walkL)
       case _ => ()
     }
     out.result()

@@ -11,7 +11,7 @@ class PowerMemoSpec extends SparkSpec {
     // conf set/restored on the SHARED spec session — a builder
     // getOrCreate().config(...) here would flip the memo on for every
     // later suite and break the opt-in tests (it did, once)
-    spark.conf.set(graft.operators.Scale.StageMemoConf, "true")
+    spark.conf.set(graft.operators.Scale.MemoConf, "true")
     try {
       val vecs = (0 until 50).map(i => (i.toLong, Array.fill(6)(i * 0.01f)))
         .toDF("vec_id", "embedding")
@@ -24,6 +24,6 @@ class PowerMemoSpec extends SparkSpec {
       val ia = leafIds(a.queryExecution.analyzed)
       val ib = leafIds(b.queryExecution.analyzed)
       assert(ia == ib, s"memo MISS: first build leaves $ia, second $ib")
-    } finally spark.conf.set(graft.operators.Scale.StageMemoConf, "false")
+    } finally spark.conf.set(graft.operators.Scale.MemoConf, "false")
   }
 }

@@ -38,7 +38,7 @@ class ScaleSpec extends SparkSpec {
     Scale.memoArtifact(mk(), "t1")(collectIt(mk()))
     Scale.memoArtifact(mk(), "t1")(collectIt(mk()))
     assert(computes == 2, "memo must be opt-in")
-    spark.conf.set(Scale.StageMemoConf, "true")
+    spark.conf.set(Scale.MemoConf, "true")
     try {
       computes = 0
       val a = Scale.memoArtifact(mk(), "t1")(collectIt(mk()))
@@ -54,7 +54,7 @@ class ScaleSpec extends SparkSpec {
       Scale.memoArtifact(nd(), "t1")(collectIt(mk()))
       Scale.memoArtifact(nd(), "t1")(collectIt(mk()))
       assert(computes == 5, "nondeterministic plans must bypass the memo")
-    } finally spark.conf.unset(Scale.StageMemoConf)
+    } finally spark.conf.unset(Scale.MemoConf)
   }
 
   test("stage memo (opt-in): canonically equal plans share one staged " +
@@ -67,7 +67,7 @@ class ScaleSpec extends SparkSpec {
     val off2 = Scale.stage(mk())
     assert(!(off1.queryExecution.logical eq off2.queryExecution.logical),
       "memo must be opt-in")
-    spark.conf.set(Scale.StageMemoConf, "true")
+    spark.conf.set(Scale.MemoConf, "true")
     try {
       // two INDEPENDENTLY built but canonically equal plans memo to the
       // SAME staged DataFrame (the session-warm shared subtree)
@@ -112,12 +112,12 @@ class ScaleSpec extends SparkSpec {
         assert(!(other.queryExecution.logical eq a.queryExecution.logical),
           "a conf flip between stagings must not serve the old entry")
       } finally spark.conf.set("spark.sql.session.timeZone", tzBefore)
-    } finally spark.conf.unset(Scale.StageMemoConf)
+    } finally spark.conf.unset(Scale.MemoConf)
   }
 
   test("stage memo budget: over-budget entries are forgotten LRU-first " +
     "and re-stage with identical rows; a roomy budget keeps sharing") {
-    spark.conf.set(Scale.StageMemoConf, "true")
+    spark.conf.set(Scale.MemoConf, "true")
     val mkA = () => spark.range(2000).toDF("id")
       .withColumn("v", col("id") * 7 + 3).where(col("v") % 5 === 1)
     val mkB = () => spark.range(3000).toDF("id")
@@ -132,20 +132,41 @@ class ScaleSpec extends SparkSpec {
       // next stage() call sweeps it from the memo — the re-staging must
       // be a fresh relation with the same rows (eviction is a
       // memory-for-time trade, never a result change)
-      spark.conf.set(Scale.StageMemoBudgetConf, "1")
-      val b1 = Scale.stage(mkB()); b1.count()
+      val tiny = Some(1L)
+      val b1 = Scale.stage(mkB(), eager = false, tiny); b1.count()
       // this call's sweep sees a1+b1 materialized and over budget
-      val a2 = Scale.stage(mkA())
-      assert(!(Scale.stage(mkA()).queryExecution.logical
+      val a2 = Scale.stage(mkA(), eager = false, tiny)
+      assert(!(Scale.stage(mkA(), eager = false, tiny).queryExecution.logical
           eq a1.queryExecution.logical),
         "an evicted entry must re-stage, not serve the dropped relation")
       assert(a2.as[(Long, Long)].collect().toSet ==
         mkA().as[(Long, Long)].collect().toSet,
         "eviction must never change rows")
-    } finally {
-      spark.conf.unset(Scale.StageMemoBudgetConf)
-      spark.conf.unset(Scale.StageMemoConf)
+    } finally spark.conf.unset(Scale.MemoConf)
+  }
+
+  test("one memo: a memoArtifact whose compute stages returns, and a " +
+    "repeat call hits both the artifact and the staged entry") {
+    val mk = () => spark.range(300).toDF("id").withColumn("v", col("id") % 11)
+    var computes = 0
+    var staged: org.apache.spark.sql.DataFrame = null
+    def train(): java.lang.Long = {
+      computes += 1
+      // the nested update reaches the same memo map mid-compute
+      staged = Scale.stage(mk().where(col("v") < 4))
+      java.lang.Long.valueOf(staged.count())
     }
+    spark.conf.set(Scale.MemoConf, "true")
+    try {
+      val a = Scale.memoArtifact(mk(), "nested")(train())
+      val first = staged
+      assert(computes == 1)
+      val b = Scale.memoArtifact(mk(), "nested")(train())
+      assert(computes == 1 && (a eq b), "the artifact entry must hit")
+      assert(Scale.stage(mk().where(col("v") < 4)).queryExecution.logical eq
+        first.queryExecution.logical, "the staged entry must hit")
+      assert(a.longValue == mk().where(col("v") < 4).count())
+    } finally spark.conf.unset(Scale.MemoConf)
   }
 
   test("stage idempotence gates on materialization, not plan shape: a " +

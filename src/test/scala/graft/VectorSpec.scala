@@ -279,7 +279,7 @@ class VectorSpec extends SparkSpec {
     val off2 = Knn.kmeansTrain(vecs, seed(), 2, 3)._1
     assert(!(off1.queryExecution.logical eq off2.queryExecution.logical),
       "codebook memo must be opt-in")
-    spark.conf.set(graft.operators.Scale.StageMemoConf, "true")
+    spark.conf.set(graft.operators.Scale.MemoConf, "true")
     try {
       val a = Knn.kmeansTrain(vecs, seed(), 2, 3)
       val b = Knn.kmeansTrain(vecs, seed(), 2, 3)
@@ -302,7 +302,7 @@ class VectorSpec extends SparkSpec {
       assert(!(d._1.queryExecution.logical eq a._1.queryExecution.logical),
         "a round cap that stops training early must not share the " +
           "converged codebook")
-    } finally spark.conf.unset(graft.operators.Scale.StageMemoConf)
+    } finally spark.conf.unset(graft.operators.Scale.MemoConf)
   }
 
   test("multimodal resize preserves aspect ratio within the bounding box") {
