@@ -17,17 +17,9 @@ object Tables {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // every declared query reaches its data through here with the
-    // session that will ANALYZE its plan — the one deterministic spot
-    // to register the vector natives Vectors.dot/normSq and Pq.l2sq
-    // now emit (a thread-inherited getActiveSession fallback proved
-    // unreliable under multi-session test JVMs). Idempotent per session.
-    graft.expressions.FloatDot.register(spark)
-    graft.expressions.FloatL2sq.register(spark)
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
     cache.computeIfAbsent((spark, s"$dir/$name.parquet"),
       key => key._1.read.parquet(key._2))
-  }
 
   /** `events.ts` arrives in whatever physical type the fixture generator
     * chose, so resolve it by SCHEMA, not by assumption:

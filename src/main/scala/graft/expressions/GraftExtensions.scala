@@ -2,12 +2,12 @@ package graft.expressions
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** Standard extension hook: deployments add
+/** Standard extension hook, and the only way SQL text resolves a
+  * `graft_*` name: deployments add
   * `spark.sql.extensions=graft.expressions.GraftExtensions` and every
-  * session (including pure-SQL users) gets the engine's native functions
-  * without touching code. Each function's `register` remains the
-  * programmatic per-session path; both install the same
-  * [[NativeFunction.entry]].
+  * session (including pure-SQL users) gets the engine's native functions.
+  * Program code needs no extension: it builds each call as a Column with
+  * [[NativeFunction.call]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -16,7 +16,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
   /** Every native function (ExtensionsSpec checks this list against the
-    * names the `register` methods install).
+    * `NativeFunction` objects of this package).
     */
   val functions: Seq[NativeFunction] = Seq(
     BqSign64, CharEntropy, CharTrigrams, FalconEnvelope, FloatDot, FloatL2sq,

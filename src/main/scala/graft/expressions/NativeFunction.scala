@@ -1,20 +1,20 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, NativeColumns}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** The catalog entry of one native SQL function: its name, its
-  * `ExpressionInfo` and the builder that turns call arguments into the
-  * expression. The companion object of every native expression extends
-  * it, so the per-session [[register]] and the [[GraftExtensions]]
-  * injection install the same entry.
+/** One native expression's SQL name, `ExpressionInfo` and builder. The
+  * companion object of every native expression extends it. Code builds
+  * a call as a Column with [[call]], which needs no session and looks
+  * nothing up; SQL text resolves the name only in a session built with
+  * [[GraftExtensions]], which injects [[entry]].
   */
 abstract class NativeFunction(functionName: String,
                               expressionClass: Class[_ <: Expression]) {
 
-  /** Builds the expression of one call; misuse raises here, on both
-    * registration paths alike.
+  /** Builds the expression of one call; misuse raises here, for Column
+    * and SQL calls alike.
     */
   def build(children: Seq[Expression]): Expression
 
@@ -22,12 +22,7 @@ abstract class NativeFunction(functionName: String,
     (FunctionIdentifier(functionName),
       new ExpressionInfo(expressionClass.getName, functionName), build _)
 
-  /** Idempotent: installs the function in `spark`'s registry, after which
-    * `call_function(functionName, …)` and SQL resolve it in that session.
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val (ident, info, builder) = entry
-    if (!registry.functionExists(ident)) registry.registerFunction(ident, info, builder)
-  }
+  /** The Column of one call over `args`, built by [[build]]. */
+  final def call(args: Column*): Column =
+    NativeColumns.column(build(args.map(NativeColumns.expression)))
 }

@@ -104,7 +104,7 @@ case class RollingWinnow(child: Expression, k: Int, w: Int)
 object RollingWinnow extends NativeFunction("graft_rolling_winnow", classOf[RollingWinnow]) {
   import org.apache.spark.sql.catalyst.expressions.Literal
 
-  /** Builds `call_function("graft_rolling_winnow", toks, lit(k), lit(w))`. */
+  /** Builds `graft_rolling_winnow(toks, k, w)`; `k` and `w` are integer literals. */
   def build(children: Seq[Expression]): Expression = RollingWinnow(
     children.head,
     children(1).asInstanceOf[Literal].value.asInstanceOf[Int],

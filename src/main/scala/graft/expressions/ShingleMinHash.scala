@@ -95,7 +95,7 @@ case class ShingleMinHash(child: Expression, shingleWords: Int, k: Int)
 object ShingleMinHash extends NativeFunction("graft_shingle_minhash", classOf[ShingleMinHash]) {
   import org.apache.spark.sql.catalyst.expressions.Literal
 
-  /** Builds `call_function("graft_shingle_minhash", toks, lit(w), lit(k))`. */
+  /** Builds `graft_shingle_minhash(toks, w, k)`; `w` and `k` are integer literals. */
   def build(children: Seq[Expression]): Expression = ShingleMinHash(
     children.head,
     children(1).asInstanceOf[Literal].value.asInstanceOf[Int],

@@ -111,7 +111,7 @@ case class ShinglePermMinHash(child: Expression, shingleWords: Int, numPerms: In
 object ShinglePermMinHash extends NativeFunction("graft_shingle_perm_minhash", classOf[ShinglePermMinHash]) {
   import org.apache.spark.sql.catalyst.expressions.Literal
 
-  /** Builds `call_function("graft_shingle_perm_minhash", toks, lit(w), lit(n))`. */
+  /** Builds `graft_shingle_perm_minhash(toks, w, n)`; `w` and `n` are integer literals. */
   def build(children: Seq[Expression]): Expression = ShinglePermMinHash(
     children.head,
     children(1).asInstanceOf[Literal].value.asInstanceOf[Int],

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -102,12 +101,6 @@ object StopwordCounts extends NativeFunction("graft_stopword_counts", classOf[St
 
   def build(children: Seq[Expression]): Expression =
     StopwordCounts(children.head)
-
-  /** Also registers [[LangBest]], which consumes these counts. */
-  override def register(spark: SparkSession): Unit = {
-    super.register(spark)
-    LangBest.register(spark)
-  }
 }
 
 /** Argmax over a [[StopwordCounts]] array with the EXACT tie semantics
@@ -143,7 +136,7 @@ case class LangBest(child: Expression) extends UnaryExpression {
 
 object LangBest extends NativeFunction("graft_lang_best", classOf[LangBest]) {
   /** Designed for [[StopwordCounts]] output (a dense non-null 5-array),
-    * but the function is session-registered so arbitrary arrays can
+    * but the function is callable on its own, so arbitrary arrays can
     * reach it: an empty array or one with NULL elements yields NULL
     * rather than an index crash or a garbage read.
     */

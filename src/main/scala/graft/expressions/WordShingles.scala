@@ -91,7 +91,7 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
 }
 
 object WordShingles extends NativeFunction("graft_shingles", classOf[WordShingles]) {
-  /** Builds `call_function("graft_shingles", toks, lit(k))`: the width
+  /** Builds `graft_shingles(toks, k)`: the width
     * must be a foldable integer literal (it shapes the generated loop).
     */
   def build(children: Seq[Expression]): Expression = {

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.expressions.{CharTrigrams, LangBest, StopwordCounts, WordShingles}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -28,11 +29,9 @@ object Text {
       i => substring(text, i, lit(3)))
 
   /** Codegen'd trigram extraction ([[graft.expressions.CharTrigrams]]) —
-    * same output as [[charTrigrams]]; requires
-    * `CharTrigrams.register(spark)` before analysis.
+    * same output as [[charTrigrams]].
     */
-  def charTrigramsNative(text: Column): Column =
-    call_function("graft_char_trigrams", text)
+  def charTrigramsNative(text: Column): Column = CharTrigrams.call(text)
 
   /** BPE-ish token-count estimator: words plus an overhead term per long
     * word (a word of n chars ≈ ceil(n/4) subword tokens, floor 1).
@@ -52,14 +51,13 @@ object Text {
       .otherwise(array(concat_ws(" ", toks)))
 
   /** Codegen'd shingle extraction ([[graft.expressions.WordShingles]]) —
-    * same output as [[shingles]] (differentially tested equal); requires
-    * `WordShingles.register(spark)` before analysis. The coalesce
+    * same output as [[shingles]] (differentially tested equal). The coalesce
     * restores the HOF's NULL-input behavior: `shingles(NULL)` evaluates
     * to `[""]` (the otherwise-branch concat_ws skips the null array),
     * while the null-intolerant native expression alone would yield NULL.
     */
   def shinglesNative(toks: Column, k: Int): Column =
-    coalesce(call_function("graft_shingles", toks, lit(k)), array(lit("")))
+    coalesce(WordShingles.call(toks, lit(k)), array(lit("")))
 
   /** md5 per shingle — the ONE hash pass the signature family shares.
     * md5 is an exact cross-engine hash (same UTF-8 bytes → same hex),
@@ -108,18 +106,16 @@ object Text {
   /** Codegen'd stopword scoring ([[graft.expressions.StopwordCounts]]):
     * array<long> of per-language hit counts in [[stopwordSets]] order —
     * ONE pass over the tokens where the [[stopwordHits]] HOF re-scans
-    * once per language. Requires `StopwordCounts.register(spark)`.
+    * once per language.
     */
-  def stopwordCountsNative(toks: Column): Column =
-    call_function("graft_stopword_counts", toks)
+  def stopwordCountsNative(toks: Column): Column = StopwordCounts.call(toks)
 
   /** Codegen'd [[langId]] twin: argmax over [[stopwordCountsNative]]
     * with the same first-wins tie order (differentially tested equal).
     * Repeated calls on one select list dedup via Spark's subexpression
     * elimination, so scoring+hits+best still cost one counting pass.
     */
-  def langIdNative(toks: Column): Column =
-    call_function("graft_lang_best", stopwordCountsNative(toks))
+  def langIdNative(toks: Column): Column = LangBest.call(stopwordCountsNative(toks))
 
   /** Heuristic language ID: argmax of stopword hits with a fixed
     * tie-break order (en > de > es > fr > zh). Expressed as a CASE chain

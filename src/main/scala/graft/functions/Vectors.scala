@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.expressions.FloatDot
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -13,33 +14,33 @@ import scala.util.Random
   */
 object Vectors {
 
-  // the HOF (aggregate-over-transform) formulations these natives
+  // the HOF (aggregate-over-transform) formulations this native
   // replaced were CodegenFallback expressions: ONE per-row norm or
   // bucket dot dropped the whole enclosing projection stage out of
   // whole-stage codegen. graft_dot is bit-identical (same index order,
   // same element-wise double widening, acc += x*y — no FMA on either
-  // path); registration rides the active/default session, and an
-  // unregistered call fails loudly at analysis, never silently.
-  private def nativeDot(a: Column, b: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.expressions.FloatDot.register)
-    call_function("graft_dot", a, b)
-  }
+  // path).
 
   /** Dot product with index-driven sequential accumulation (1-based).
     * `dim` is the contract (both arrays are exactly dim-wide; every
     * caller passes fixed-width embeddings or plane literals). */
-  def dot(a: Column, b: Column, dim: Int): Column = nativeDot(a, b)
+  def dot(a: Column, b: Column, dim: Int): Column = FloatDot.call(a, b)
 
   /** Squared L2 norm, same accumulation discipline. */
-  def normSq(a: Column, dim: Int): Column = nativeDot(a, a)
+  def normSq(a: Column, dim: Int): Column = FloatDot.call(a, a)
 
   def norm(a: Column, dim: Int): Column = sqrt(normSq(a, dim))
 
   /** Cosine similarity as dot / (|a|·|b|) — single division, fixed order. */
   def cosine(a: Column, b: Column, dim: Int): Column =
     dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+
+  /** Cosine of the vector columns `a` and `b` from their precomputed norm
+    * columns: `try_divide(graft_dot(a, b), normA * normB)`, NULL where a
+    * norm is 0.
+    */
+  def cosineByNorms(a: String, b: String, normA: String, normB: String): Column =
+    try_divide(FloatDot.call(col(a), col(b)), col(normA) * col(normB))
 
   /** Deterministic random hyperplanes for sign-LSH: `nPlanes` rows of ±1,
     * seeded so Scala-side code and spliced oracle SQL share the exact

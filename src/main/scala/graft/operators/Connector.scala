@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.expressions.{FalconEnvelope, KvKeyed, KvLastWinMap}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -50,10 +51,8 @@ object Connector {
   /** Codegen'd twin of [[parseLine]] ([[graft.expressions.FalconEnvelope]],
     * differentially tested equal): a strict byte-level fast path builds
     * the row, and any line outside its grammar goes to `from_json`.
-    * Requires `FalconEnvelope.register(spark)`.
     */
-  def parseLineNative(raw: Column): Column =
-    call_function("graft_falcon_envelope", raw)
+  def parseLineNative(raw: Column): Column = FalconEnvelope.call(raw)
 
   /** R5 — flatten an array<struct<Key,ValueString>> into a last-wins map
     * (app.py:122-127: later duplicate keys overwrite earlier). Requires
@@ -67,21 +66,17 @@ object Connector {
     * ([[graft.expressions.KvLastWinMap]], differentially tested equal):
     * no interpreted transform lambda, no map builder, and cheap enough
     * that repeated key extracts dedup via codegen subexpression
-    * elimination instead of needing a Generate barrier. Requires
-    * `KvLastWinMap.register(spark)`; input must already be
-    * struct<Key,ValueString> (positional).
+    * elimination instead of needing a Generate barrier. Input must
+    * already be struct<Key,ValueString> (positional).
     */
-  def kvFlattenNative(kvArray: Column): Column =
-    call_function("graft_kv_lastwin", kvArray)
+  def kvFlattenNative(kvArray: Column): Column = KvLastWinMap.call(kvArray)
 
   /** R3 poison-line rule: true unless the KV array holds a NULL entry or
     * an entry with a NULL or missing `Key`, which neither [[kvFlatten]]
     * nor [[kvFlattenNative]] accepts; the connector drops such a line as
-    * corrupt ([[graft.expressions.KvKeyed]]). Requires
-    * `KvKeyed.register(spark)`.
+    * corrupt ([[graft.expressions.KvKeyed]]).
     */
-  def kvKeyed(kvArray: Column): Column =
-    call_function("graft_kv_keyed", kvArray)
+  def kvKeyed(kvArray: Column): Column = KvKeyed.call(kvArray)
 
   def lastWinPolicy(spark: SparkSession): Unit =
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
@@ -116,10 +111,4 @@ object Connector {
         Window.partitionBy("partition").orderBy(offsetCol)) - 1) / bulkMaxSize)
         .cast(LongType))
   }
-
-  /** R8 (time branch) — tumbling wall-clock buckets of `seconds`, the batch
-    * a flush-wait-time trigger would cut on an evenly observed stream.
-    */
-  def timeTriggerBatches(ts: Column, seconds: Int): Column =
-    (unix_millis(ts) / lit(seconds * 1000L)).cast(LongType)
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.expressions.{ShingleMinHash, ShinglePermMinHash, SimHash64}
 import graft.functions.Text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -29,7 +30,6 @@ object Dedup {
     * the staged copy across the `_skewjoin` twins.
     */
   def posGrams(docs: DataFrame, text: Column, k: Int): DataFrame = {
-    graft.expressions.WordShingles.register(docs.sparkSession)
     docs.select(col("doc_id"), posexplode(
       Text.shinglesNative(Text.tokens(text), k)).as(Seq("pos", "gram")))
   }
@@ -244,7 +244,6 @@ object Dedup {
     */
   private def explodeGrams(docs: DataFrame, text: Column, gram: Int): DataFrame = {
     require(gram >= 2, s"explodeGrams: gram must be >= 2, got $gram")
-    graft.expressions.WordShingles.register(docs.sparkSession)
     val toks = Text.tokens(text)
     // UNSTAGED like posGrams: the explode is codegen'd and re-runs
     // cheaper than a corpus-sized checkpoint reads back; what gets
@@ -295,7 +294,6 @@ object Dedup {
     require(stream.isStreaming,
       "streamingSubstrDupIds needs a streaming DataFrame — use probeSubstrIndex for batch")
     require(!index.isStreaming, "the gram index side must be a static DataFrame")
-    graft.expressions.WordShingles.register(stream.sparkSession)
     val toks = Text.tokens(text)
     // ts rides along: the dedup state needs the event-time column to
     // expire by the watermark (explodeGrams projects it away)
@@ -474,8 +472,7 @@ object Dedup {
     * with the scan and the LSH band join is the only exchange left.
     */
   def withMinhashSigs(docs: DataFrame, text: Column, k: Int): DataFrame = {
-    graft.expressions.ShingleMinHash.register(docs.sparkSession)
-    val sigs = call_function("graft_shingle_minhash", Text.tokens(text), lit(3), lit(k))
+    val sigs = ShingleMinHash.call(Text.tokens(text), lit(3), lit(k))
     docs.select((col("doc_id") +: Seq(sigs.as("__sigs"))): _*)
       .select((col("doc_id") +: (0 until k).map(j =>
         element_at(col("__sigs"), j + 1).as(s"sig$j"))): _*)
@@ -507,10 +504,8 @@ object Dedup {
     * real banding needs — the scale-grade signature path.
     */
   def withPermMinhashSigs(docs: DataFrame, text: Column, numPerms: Int): DataFrame = {
-    graft.expressions.ShinglePermMinHash.register(docs.sparkSession)
     docs.select(col("doc_id"),
-      call_function("graft_shingle_perm_minhash",
-        Text.tokens(text), lit(3), lit(numPerms)).as("sigs"))
+      ShinglePermMinHash.call(Text.tokens(text), lit(3), lit(numPerms)).as("sigs"))
   }
 
   /** Banded LSH candidate pairs over the n-permutation family: signatures
@@ -549,10 +544,8 @@ object Dedup {
     require(numPerms % rowsPerBand == 0,
       s"numPerms=$numPerms must be divisible by rowsPerBand=$rowsPerBand")
     val nBands = numPerms / rowsPerBand
-    graft.expressions.ShinglePermMinHash.register(docs.sparkSession)
     val sigs = docs.withColumn("__sigs",
-      call_function("graft_shingle_perm_minhash",
-        Text.tokens(text), lit(3), lit(numPerms)))
+      ShinglePermMinHash.call(Text.tokens(text), lit(3), lit(numPerms)))
     val keep = docs.columns.filter(_ != "__t")
     sigs.select(col("*"),
         explode(array((0 until nBands).map(b =>
@@ -610,8 +603,7 @@ object Dedup {
     * near-dups cluster at small Hamming distance. Narrow per-row op.
     */
   def withSimhash(docs: DataFrame, text: Column): DataFrame = {
-    graft.expressions.SimHash64.register(docs.sparkSession)
-    docs.withColumn("simhash", call_function("graft_simhash64", Text.tokens(text)))
+    docs.withColumn("simhash", SimHash64.call(Text.tokens(text)))
   }
 
   /** Hamming distance between two 64-bit long signatures — the SimHash

@@ -94,7 +94,6 @@ object Knn {
     * O(n²) problem [[lshTopK]]/[[ivfTopK]] exist for.
     */
   def bruteForceTopK(probes: DataFrame, candidates: DataFrame, dim: Int, k: Int): DataFrame = {
-    FloatDot.register(probes.sparkSession)
     // norms once per row, not once per pair — the pair loop then does a
     // single codegen'd primitive dot and one division
     val p = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
@@ -109,7 +108,7 @@ object Knn {
     // denominator). topkTail owns that convention for every tier.
     topkTail(
       c.join(broadcast(p), col("probe_id") =!= col("cand_id"))
-        .withColumn("sim", expr("try_divide(graft_dot(pe, ce), pn * cn)"))
+        .withColumn("sim", Vectors.cosineByNorms("pe", "ce", "pn", "cn"))
         .select("probe_id", "cand_id", "sim"),
       k)
   }
@@ -210,7 +209,6 @@ object Knn {
     * (sim desc, cand_id asc; zero-norm → NULL restored after the merge).
     */
   def hardNegatives(probes: DataFrame, corpus: DataFrame, dim: Int): DataFrame = {
-    FloatDot.register(probes.sparkSession)
     val p = probes.select(col("vec_id").as("probe_id"),
       col("label").as("probe_label"), col("embedding").as("pe"),
       Vectors.norm(col("embedding"), dim).as("pn"))
@@ -219,7 +217,7 @@ object Knn {
       Vectors.norm(col("embedding"), dim).as("cn"))
     topkTail(
       c.join(broadcast(p), col("probe_label") =!= col("cand_label"))
-        .withColumn("sim", expr("try_divide(graft_dot(pe, ce), pn * cn)"))
+        .withColumn("sim", Vectors.cosineByNorms("pe", "ce", "pn", "cn"))
         .select("probe_id", "cand_id", "sim"),
       k = 1)
       .drop("rank")
@@ -234,7 +232,6 @@ object Knn {
     * per row, centroids broadcast, no shuffle until the cell join.
     */
   def ivfAssign(vectors: DataFrame, centroids: DataFrame, dim: Int): DataFrame = {
-    FloatDot.register(vectors.sparkSession)
     val c = centroids.select(col("cent_id"), col("cvec"),
       Vectors.norm(col("cvec"), dim).as("cnrm"))
     vectors.select(col("vec_id"), col("embedding"),
@@ -244,7 +241,7 @@ object Knn {
       // samples (float) or trained means (double) — the n·k inner loop
       // stays a codegen'd primitive loop either way
       .withColumn("csim",
-        expr("try_divide(graft_dot(embedding, cvec), nrm * cnrm)"))
+        Vectors.cosineByNorms("embedding", "cvec", "nrm", "cnrm"))
       // argmax as max_by with a composite (csim, -cent_id) ordering
       // value: struct comparison gives csim-desc with cent_id-asc ties
       // DETERMINISTICALLY (no two candidates share a cent_id; a NULL
@@ -288,7 +285,7 @@ object Knn {
     topkTail(
       a.join(b, Seq("cell"))
         .where(col("probe_id") =!= col("cand_id"))
-        .withColumn("sim", expr("try_divide(graft_dot(pe, ce), pn * cn)"))
+        .withColumn("sim", Vectors.cosineByNorms("pe", "ce", "pn", "cn"))
         .select("probe_id", "cand_id", "sim"),
       k)
   }
@@ -304,7 +301,6 @@ object Knn {
     */
   private def scoredProbes(vectors: DataFrame, centroids: DataFrame,
                            dim: Int, nprobe: Int): DataFrame = {
-    FloatDot.register(vectors.sparkSession)
     val c = centroids.select(col("cent_id"), col("cvec"),
       Vectors.norm(col("cvec"), dim).as("cnrm"))
     val wc = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cent_id"))
@@ -312,7 +308,7 @@ object Knn {
         Vectors.norm(col("embedding"), dim).as("nrm"))
       .join(broadcast(c))
       .withColumn("csim",
-        expr("try_divide(graft_dot(embedding, cvec), nrm * cnrm)"))
+        Vectors.cosineByNorms("embedding", "cvec", "nrm", "cnrm"))
       .withColumn("rk", row_number().over(wc))
       .where(col("rk") <= nprobe)
       .select(col("vec_id"), col("embedding"), col("nrm"),
@@ -341,7 +337,6 @@ object Knn {
     */
   def ivfSearch(probes: DataFrame, corpus: DataFrame, centroids: DataFrame,
                 dim: Int, k: Int, nprobe: Int): DataFrame = {
-    FloatDot.register(probes.sparkSession)
     val c = centroids.select(col("cent_id"), col("cvec"),
       Vectors.norm(col("cvec"), dim).as("cnrm"))
     val wc = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cent_id"))
@@ -349,7 +344,7 @@ object Knn {
         Vectors.norm(col("embedding"), dim).as("nrm"))
       .join(broadcast(c))
       .withColumn("csim",
-        expr("try_divide(graft_dot(embedding, cvec), nrm * cnrm)"))
+        Vectors.cosineByNorms("embedding", "cvec", "nrm", "cnrm"))
       .withColumn("rk", row_number().over(wc))
       .where(col("rk") <= nprobe)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
@@ -371,7 +366,7 @@ object Knn {
     topkTail(
       homes.join(broadcast(probeCells), Seq("cell"))
         .where(col("probe_id") =!= col("cand_id"))
-        .withColumn("sim", expr("try_divide(graft_dot(pe, ce), pn * cn)"))
+        .withColumn("sim", Vectors.cosineByNorms("pe", "ce", "pn", "cn"))
         .select("probe_id", "cand_id", "sim"),
       k)
   }
@@ -493,7 +488,6 @@ object Knn {
     */
   def cellPairs(assigned: DataFrame, tau: Double, cellCap: Int): DataFrame = {
     require(cellCap >= 1, s"cellPairs: cellCap must be >= 1, got $cellCap")
-    FloatDot.register(assigned.sparkSession)
     val cellPart = assigned.repartition(col("cell"))
     // the cap window rides the SAME cell exchange (sort within
     // partitions, no new shuffle); the candidate FLAG stays on the probe
@@ -515,7 +509,7 @@ object Knn {
       // pairs in a<b orientation only; a non-candidate probe pairs with
       // every candidate (its only orientation)
       .where(col("doc_a") < col("doc_b") || !col("__cand"))
-      .withColumn("sim", expr("try_divide(graft_dot(pe, ce), pn * cn)"))
+      .withColumn("sim", Vectors.cosineByNorms("pe", "ce", "pn", "cn"))
       .where(col("sim") > tau)
       // canonicalize (a non-candidate probe may sit on either side;
       // fresh names first — a same-name lateral alias would shadow the
@@ -568,7 +562,7 @@ object Knn {
       // cross-cell probe (rk>1) keep their only / possibly-duplicated
       // orientation (the latter collapses in the distinct below)
       .where(col("rka") > 1 || col("doc_a") < col("doc_b") || !col("cand_a"))
-      .withColumn("sim", expr("try_divide(graft_dot(pe, ce), pn * cn)"))
+      .withColumn("sim", Vectors.cosineByNorms("pe", "ce", "pn", "cn"))
       .where(col("sim") > tau)
       .select(least(col("doc_a"), col("doc_b")).as("lo"),
         greatest(col("doc_a"), col("doc_b")).as("hi"))
@@ -617,13 +611,12 @@ object Knn {
                      dim: Int, tau: Double, nprobe: Int, cellCap: Int): DataFrame = {
     require(nprobe >= 1 && cellCap >= 1,
       s"probeCellIndex: nprobe=$nprobe and cellCap=$cellCap must be >= 1")
-    FloatDot.register(delta.sparkSession)
     val base = cappedCells(index, cellCap)
     scoredProbes(delta, centroids, dim, nprobe)
       .select(col("cell"), col("vec_id"),
         col("embedding").as("pe"), col("nrm").as("pn"))
       .join(base, Seq("cell"))
-      .withColumn("sim", expr("try_divide(graft_dot(pe, ce), pn * cn)"))
+      .withColumn("sim", Vectors.cosineByNorms("pe", "ce", "pn", "cn"))
       .where(col("sim") > tau)
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_base_matches"),
@@ -774,7 +767,6 @@ object Knn {
       "the cell index and codebook must be static DataFrames")
     require(nprobe >= 1 && cellCap >= 1,
       s"streamingProbeCellHits: nprobe=$nprobe and cellCap=$cellCap must be >= 1")
-    FloatDot.register(stream.sparkSession)
     // plan-time collect of the codebook: k rows, the flag-only-driver
     // discipline (same as the BPE merge table / kmeans centroids)
     val cents = centroids.select(col("cent_id"), col("cvec")).collect().map { r =>
@@ -786,7 +778,7 @@ object Knn {
     val scoredCells = sort_array(array(cents.map { case (id, v) =>
       val cnorm = math.sqrt(v.map(x => x * x).sum)
       val sim = try_divide(
-        call_function("graft_dot", col("embedding"), typedLit(v)),
+        FloatDot.call(col("embedding"), typedLit(v)),
         pn * lit(cnorm))
       // ascending sort key replicating scoredProbes' rank-window order
       // EXACTLY, nulls and NaN included: csim DESC ranks NaN first
@@ -805,7 +797,7 @@ object Knn {
         col("__c.cell").as("cell"))
     val base = cappedCells(index, cellCap).drop("base_id")
     probes.join(base, Seq("cell"))
-      .where(expr("try_divide(graft_dot(pe, ce), pnrm * cn)") > tau)
+      .where(Vectors.cosineByNorms("pe", "ce", "pnrm", "cn") > tau)
       .select("vec_id", "ts")
   }
 
@@ -839,7 +831,6 @@ object Knn {
     */
   def lshTopK(vectors: DataFrame, tables: Seq[Seq[Seq[Double]]], dim: Int,
               k: Int, bucketCap: Int): DataFrame = {
-    FloatDot.register(vectors.sparkSession)
     val emb = vectors.select(col("vec_id"), col("embedding"),
       Vectors.norm(col("embedding"), dim).as("nrm"))
     // (table, bucket, vec_id) — one row per vector per table, ids only
@@ -861,7 +852,7 @@ object Knn {
     val scored = probeSide.join(candSide, Seq("tbl", "bucket"))
       .where(col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
-        expr("try_divide(graft_dot(pe, ce), pn * cn)").as("sim"))
+        Vectors.cosineByNorms("pe", "ce", "pn", "cn").as("sim"))
       // same pair colliding in two tables scores bit-identically (same
       // expression, same arrays) — one narrow row survives, exactly the
       // old ids-before-scoring dedup

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.expressions.JsonStrField
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -63,7 +64,6 @@ object Parsers {
     // collapse from re-running Jackson per field; the native calls stay
     // inside whole-stage codegen, where repeated extracts of the same
     // key dedup via subexpression elimination
-    graft.expressions.JsonStrField.register(df.sparkSession)
     // distinct output fields, first-seen order; each compiles to one
     // when-chain over the event types that promote it
     val outFields = registry.flatMap(_._2.fields.map(_.name)).distinct
@@ -77,7 +77,7 @@ object Parsers {
     val fieldCols = outFields.map { name =>
       val arms = byField(name)
       def armCol(f: FieldSpec) =
-        call_function("graft_json_str", payloadCol, lit(jsonKey(f.path)))
+        JsonStrField.call(payloadCol, lit(jsonKey(f.path)))
           .cast(f.castTo)
       arms.tail.foldLeft(
         when(typeCol === arms.head._1, armCol(arms.head._2))) {

@@ -58,17 +58,9 @@ object Pq {
     * element order (the order a serial SQL replay sums in) — the
     * codegen'd [[graft.expressions.FloatL2sq]] native (bit-identical to
     * the zip_with+aggregate HOF it replaces, whose per-pair array
-    * allocation was the recall joins' inner loop). Registration rides
-    * the active/default session: every caller builds plans on a thread
-    * with a live session, and an unregistered call fails loudly at
-    * analysis, never silently.
+    * allocation was the recall joins' inner loop).
     */
-  def l2sq(a: Column, b: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.expressions.FloatL2sq.register)
-    call_function("graft_l2sq", a, b)
-  }
+  def l2sq(a: Column, b: Column): Column = graft.expressions.FloatL2sq.call(a, b)
 
   /** PQ encode against `cents` (a [[codebook]]): (vec_id, j, code, bd2)
     * — argmin codeword per (vector, subspace); codeword ids are unique

@@ -62,8 +62,6 @@ object Scale {
       .format("parquet")
       .saveAsTable(table)
 
-  def readTable(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
   /** Hive-style partitioned layout: at 100 TB the date/category partition
     * column is the first pruning lever — a filter on it skips whole
     * directories before any IO (see ScaleSpec's PartitionFilters

@@ -332,11 +332,8 @@ object Sketches {
     // friendly: the HOF form was CodegenFallback and its 16×dim
     // per-element lambda walk dropped the projection stage out of
     // codegen wherever SRP appears
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.expressions.FloatDot.register)
     array(srpSigns(dim).map(row =>
-      call_function("graft_dot",
+      graft.expressions.FloatDot.call(
         typedlit(row.map(_.toDouble).toArray), emb)): _*)
   }
 }

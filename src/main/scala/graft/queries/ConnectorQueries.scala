@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.expressions.JsonLongField
 import graft.operators.Connector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,10 +36,9 @@ object ConnectorQueries {
     * 1) — a float-valued k is corrupt under this field's long schema.
     */
   def eParse(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.JsonLongField.register(s)
     Tables.events(s, dir)
       .select(col("event_id"),
-        call_function("graft_json_long", col("props"), lit("k")).as("k_val"))
+        JsonLongField.call(col("props"), lit("k")).as("k_val"))
       .where(col("k_val").isNotNull)
       .orderBy("event_id")
   }
@@ -56,8 +56,6 @@ object ConnectorQueries {
     * last must win), flattened through the real map path.
     */
   def eKvFlatten(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.KvLastWinMap.register(s)
-    graft.expressions.JsonLongField.register(s)
     // parse props ONCE via the native tolerant extractor (from_json is
     // CodegenFallback — see eParse). The fused native flatten (one
     // pass, no interpreted transform, no map builder) is evaluated once
@@ -68,7 +66,7 @@ object ConnectorQueries {
     val kv = array(
       struct(lit("et").as("Key"), col("event_type").as("ValueString")),
       struct(lit("k").as("Key"),
-        call_function("graft_json_long", col("props"), lit("k"))
+        JsonLongField.call(col("props"), lit("k"))
           .cast("string").as("ValueString")),
       struct(lit("et").as("Key"), upper(col("event_type")).as("ValueString")))
     Tables.events(s, dir)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.expressions.{BqSign64, RollingWinnow, ShinglePermMinHash, Sq8Error, TrigramJaccard}
 import graft.functions.{Bloom, BloomOr, BloomParams, Text, Vectors}
 import graft.operators.{Dedup, Knn, Sampling, Sketches, Stats}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -49,7 +50,6 @@ object PipelineQueries {
     * language. element_at is 1-based; "en" is stopwordSets.head.
     */
   private def enStopHits(s: SparkSession, toks: Column): Column = {
-    graft.expressions.StopwordCounts.register(s)
     element_at(Text.stopwordCountsNative(toks), 1)
   }
 
@@ -72,7 +72,6 @@ object PipelineQueries {
       .orderBy("doc_id")
 
   def xLangid(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.StopwordCounts.register(s)
     val toks = Text.tokens(col("text"))
     // one native counting pass serves all five hit columns AND the
     // argmax — the repeated counts calls dedup via subexpression
@@ -94,7 +93,6 @@ object PipelineQueries {
     * bounded matrix.
     */
   def xLangConfusion(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.StopwordCounts.register(s)
     val toks = Text.tokens(col("text"))
     Tables.documents(s, dir)
       .select(col("lang").as("labeled_lang"), Text.langIdNative(toks).as("pred_lang"))
@@ -139,7 +137,6 @@ object PipelineQueries {
     * shuffle left anywhere is the vocabulary-sized training aggregate.
     */
   def xLangidNgram(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.CharTrigrams.register(s)
     val docs = Tables.documents(s, dir).where(length(col("text")) >= 3)
     val wp = Window.partitionBy("lang").orderBy(col("cnt").desc, col("tg"))
     val modelDf = docs
@@ -214,7 +211,6 @@ object PipelineQueries {
     * integer-exact rule verdicts, `source` retained for the rollup.
     */
   private def gopherRuleFrame(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val toks = Text.tokens(col("text"))
     Tables.documents(s, dir)
       .select(col("doc_id"), col("source"),
@@ -464,7 +460,6 @@ object PipelineQueries {
     * x_dedup_incremental's probe, in ONE plan.
     */
   def xCurateIncremental(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val toks = Text.tokens(col("text"))
     val nW = Text.nWords(toks)
     val enHits = enStopHits(s, toks)
@@ -601,8 +596,6 @@ object PipelineQueries {
     * right, computed in-engine from the same signatures the LSH uses.
     */
   def xMinhashEst(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
-    graft.expressions.ShinglePermMinHash.register(s)
     val docs = Tables.documents(s, dir)
     // ONE per-doc pass carries BOTH comparison inputs — the 64-perm
     // signature and the distinct shingle set — so the adjacent-pair
@@ -610,8 +603,7 @@ object PipelineQueries {
     // separately per join side (four text passes, eight scans, three
     // joins for the same rows)
     val per = docs.select(col("doc_id"),
-      call_function("graft_shingle_perm_minhash",
-        Text.tokens(col("text")), lit(3), lit(N_PERMS)).as("sigs"),
+      ShinglePermMinHash.call(Text.tokens(col("text")), lit(3), lit(N_PERMS)).as("sigs"),
       array_distinct(Text.shinglesNative(Text.tokens(col("text")), 3)).as("sh"))
     val est = size(filter(zip_with(col("sa"), col("sb"), (x, y) => x === y),
       b => b)).cast("double") / N_PERMS
@@ -633,7 +625,6 @@ object PipelineQueries {
     * side every sketch is judged against.
     */
   private def gramCounts(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     Tables.documents(s, dir)
       .select(explode(Text.shinglesNative(Text.tokens(col("text")), 3)).as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("cnt"))
@@ -722,7 +713,6 @@ object PipelineQueries {
     * checks it against the exact distinct count.
     */
   def xHll(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val grams = Tables.documents(s, dir)
       .select(explode(Text.shinglesNative(Text.tokens(col("text")), 3)).as("gram"))
     Sketches.hllRegisters(grams, col("gram")).orderBy("bucket")
@@ -773,7 +763,6 @@ object PipelineQueries {
     * full sort at the output, vocabulary-sized input.
     */
   def xKmv(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val grams = Tables.documents(s, dir)
       .select(explode(Text.shinglesNative(Text.tokens(col("text")), 3)).as("gram"))
       .distinct()
@@ -931,7 +920,6 @@ object PipelineQueries {
     * runs on ≤B-row or broadcast relations.
     */
   def xHeaps(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val g = Tables.documents(s, dir)
       .select(col("doc_id"),
         explode(Text.shinglesNative(Text.tokens(col("text")), 3)).as("gram"))
@@ -1050,7 +1038,6 @@ object PipelineQueries {
     * also shares it between [[xKl]] and [[xKeyness]]).
     */
   private def parityGramCounts(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     graft.operators.Scale.stage(
       Tables.documents(s, dir)
         .select(col("doc_id"),
@@ -1438,13 +1425,12 @@ object PipelineQueries {
     * it replaces was the clean bench's slowest line at 5.4 s.
     */
   def xNgramJaccard(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.TrigramJaccard.register(s)
     val t = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val a = t.select(col("doc_id").as("doc_a"), col("text").as("ta"))
     val b = t.select(col("doc_id").as("doc_b"), col("text").as("tb"))
     a.join(b, col("doc_b") === col("doc_a") + 1)
       .select(col("doc_a"), col("doc_b"),
-        detRound4(call_function("graft_trigram_jaccard", col("ta"), col("tb")))
+        detRound4(TrigramJaccard.call(col("ta"), col("tb")))
           .as("jac3"))
       .orderBy("doc_a")
   }
@@ -1524,14 +1510,12 @@ object PipelineQueries {
           p => p("mx")).as("mx"))))
 
   def xSq8(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.Sq8Error.register(s)
     val emb = Tables.embeddings(s, dir)
     // one codegen'd quantize-dequantize-error pass per row (the
     // declarative transform+aggregate twin is Sq8Error's spec fixture)
     emb.crossJoin(sq8Scales(emb))
       .select(col("vec_id"),
-        detRound4(call_function("graft_sq8_err",
-          col("embedding"), col("mn"), col("mx")) / DIM).as("mse"))
+        detRound4(Sq8Error.call(col("embedding"), col("mn"), col("mx")) / DIM).as("mse"))
       .orderBy("vec_id")
   }
 
@@ -1581,10 +1565,9 @@ object PipelineQueries {
     * downstream search is integer Hamming ([[xBqRecall]]).
     */
   def xBq(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.BqSign64.register(s)
     Tables.embeddings(s, dir)
       .select(col("vec_id"),
-        call_function("graft_bq_sign", col("embedding")).as("bqsig"))
+        BqSign64.call(col("embedding")).as("bqsig"))
       .orderBy("vec_id")
   }
 
@@ -1600,10 +1583,9 @@ object PipelineQueries {
     * Hamming top-k with exact scores.
     */
   def xBqRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.BqSign64.register(s)
     val v = Tables.embeddings(s, dir)
       .select(col("vec_id"),
-        call_function("graft_bq_sign", col("embedding")).as("sig"))
+        BqSign64.call(col("embedding")).as("sig"))
     val probes = v.where(col("vec_id") % 100 === 0 &&
         col("vec_id") < PQ_PROBE_CAP)
       .select(col("vec_id").as("p"), col("sig").as("psig"))
@@ -2166,7 +2148,7 @@ object PipelineQueries {
       col("cvec"), Vectors.norm(col("cvec"), DIM).as("cnrm")))
     Knn.ivfAssign(emb, trained, DIM)
       .join(cent, "cell")
-      .withColumn("csim", expr("try_divide(graft_dot(embedding, cvec), nrm * cnrm)"))
+      .withColumn("csim", Vectors.cosineByNorms("embedding", "cvec", "nrm", "cnrm"))
       .groupBy("cell")
       .agg(count(lit(1)).as("n_vecs"),
         max_by(struct(col("vec_id"), col("csim")),
@@ -2303,11 +2285,9 @@ object PipelineQueries {
     * the position-robust signature whose size tracks length/w.
     */
   def xWinnow(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.RollingWinnow.register(s)
     Tables.documents(s, dir)
       .select(col("doc_id"),
-        explode(call_function("graft_rolling_winnow",
-          Text.tokens(col("text")), lit(3), lit(4))).as("fp"))
+        explode(RollingWinnow.call(Text.tokens(col("text")), lit(3), lit(4))).as("fp"))
       .orderBy("doc_id", "fp")
   }
 
@@ -2323,14 +2303,12 @@ object PipelineQueries {
     * window AND the self-join; pairs aggregate map-side.
     */
   def xWinnowPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.RollingWinnow.register(s)
     // one materialization of the capped fingerprint relation: the
     // self-join would otherwise re-run the rolling-hash explode +
     // distinct + df window once per side
     val fps = Tables.documents(s, dir)
       .select(col("doc_id"),
-        explode(call_function("graft_rolling_winnow",
-          Text.tokens(col("text")), lit(3), lit(4))).as("fp"))
+        explode(RollingWinnow.call(Text.tokens(col("text")), lit(3), lit(4))).as("fp"))
       .distinct()
       .withColumn("df", count(lit(1)).over(Window.partitionBy("fp")))
       .where(col("df") <= WINNOW_DF_CAP)
@@ -2364,7 +2342,6 @@ object PipelineQueries {
     * candidate graph densifies quadratically with band collisions).
     */
   private def neardupVerifiedPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val docs = Tables.documents(s, dir)
     val cands = Dedup.bandedCandidates(docs, col("text"), N_PERMS, ROWS_PER_BAND)
     // pre-distinct once per doc: the pair joins ship the smaller
@@ -2397,7 +2374,6 @@ object PipelineQueries {
     * N_PERMS/ROWS_PER_BAND. Truth is staged (two consumers).
     */
   def xDedupEval(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val docs = Tables.documents(s, dir).where(col("doc_id") < DEDUP_EVAL_CAP)
     // both stagings are CAP-bounded (≤ DEDUP_EVAL_CAP rows / pairs among
     // them): sh fed the truth BNLJ twice (broadcast build + stream side
@@ -2522,12 +2498,10 @@ object PipelineQueries {
     * group shuffled. The SURVEY §2.2 custom-UDAF surface.
     */
   def xGroupSig(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.ShinglePermMinHash.register(s)
     import graft.functions.{SigUnion, Text}
     val withSigs = Tables.documents(s, dir)
       .select(col("lang"),
-        call_function("graft_shingle_perm_minhash",
-          Text.tokens(col("text")), lit(3), lit(N_PERMS)).as("sigs"))
+        ShinglePermMinHash.call(Text.tokens(col("text")), lit(3), lit(N_PERMS)).as("sigs"))
     withSigs.groupBy("lang")
       .agg(udaf(SigUnion).apply(col("sigs")).as("gsig"))
       .select(col("lang"), posexplode(col("gsig")))
@@ -2591,7 +2565,6 @@ object PipelineQueries {
     * the linear shingle scan.
     */
   def xDecontam(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val docs = Tables.documents(s, dir)
     def grams(d: DataFrame) = d.select(col("doc_id"),
       explode(Text.shinglesNative(Text.tokens(col("text")), 4)).as("gram"))
@@ -2623,7 +2596,6 @@ object PipelineQueries {
     * the equivalence on the real corpus.
     */
   def xDecontamBloom(s: SparkSession, dir: String, bp: BloomParams): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val docs = Tables.documents(s, dir)
     def grams(d: DataFrame) = d.select(col("doc_id"),
       explode(Text.shinglesNative(Text.tokens(col("text")), 4)).as("gram"))
@@ -2677,7 +2649,6 @@ object PipelineQueries {
     * columns instead of paying a separate join back to the corpus.
     */
   def xRepetition(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val toks = Text.tokens(col("text"))
     val g3 = Text.shinglesNative(toks, 3)
     val n = col("n_words").cast("double")
@@ -2887,7 +2858,6 @@ object PipelineQueries {
     * candidate count: the IVF selectivity number you'd tune nprobe by.
     */
   def xIvfpq(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.FloatDot.register(s)
     val emb = Tables.embeddings(s, dir)
     val probeRows = pqProbeRows(emb)
     val cents = ivfCentroids(emb)
@@ -2899,7 +2869,7 @@ object PipelineQueries {
         Vectors.norm(col("embedding"), DIM).as("nrm"))
       .join(broadcast(cn))
       .withColumn("csim",
-        expr("try_divide(graft_dot(embedding, cvec), nrm * cnrm)"))
+        Vectors.cosineByNorms("embedding", "cvec", "nrm", "cnrm"))
       .withColumn("rk", row_number().over(wc))
       .where(col("rk") <= IVF_NPROBE)
       .select(col("vec_id").as("p"), col("cent_id").as("cell"))
@@ -3056,7 +3026,6 @@ object PipelineQueries {
     * deterministic sample, which changes none of the plan shapes.
     */
   def xContamSweep(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val docs = Tables.documents(s, dir)
     // HYBRID shape, adjudicated at sf1 (r17): round 16 fused BOTH sides
     // into one width-tagged stream (scans 12→4) but the single (w,gram)
@@ -3109,7 +3078,6 @@ object PipelineQueries {
     * the same overlap as per-doc counts.
     */
   private def decontamGatedDocs(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val toks = Text.tokens(col("text"))
     val n = Text.nWords(toks)
     val enHits = enStopHits(s, toks)
@@ -3190,7 +3158,6 @@ object PipelineQueries {
     graft.operators.Scale.stage(sourceStatsRaw(s, dir))
 
   private def sourceStatsRaw(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val toks = Text.tokens(col("text"))
     val n = Text.nWords(toks)
     val enHits = enStopHits(s, toks)
@@ -3454,7 +3421,6 @@ object PipelineQueries {
     * like the banded index of the fuzzy incremental path.
     */
   def xCurateExactIncremental(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val toks = Text.tokens(col("text"))
     val nW = Text.nWords(toks)
     val enHits = enStopHits(s, toks)
@@ -3507,7 +3473,6 @@ object PipelineQueries {
     * transitive closure, linear in the hit count.
     */
   def xCurateSemanticIncremental(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.WordShingles.register(s)
     val toks = Text.tokens(col("text"))
     val nW = Text.nWords(toks)
     val enHits = enStopHits(s, toks)

@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window => SqlWindow}
 import org.apache.spark.sql.functions._
+import graft.expressions.{CharEntropy, JsonStrField}
 import graft.functions.Det.detRound4
 
 /** A compact Humio/LogScale-style pipe-query compiler — the query surface
@@ -155,10 +156,6 @@ object HumioQuery {
     */
   def run(df: DataFrame, query: String,
           tables: Map[String, DataFrame] = Map.empty): DataFrame = {
-    // native-expression backends used by the expression language
-    // (shannonEntropy → graft_entropy) resolve at analysis time, so the
-    // session must know them before any stage's Column is attached
-    graft.expressions.CharEntropy.register(df.sparkSession)
     def compile(): DataFrame = {
       val out = splitPipes(query).map(_.trim).filter(_.nonEmpty)
         .foldLeft(df)((acc, stage) => applyStage(acc, stage, tables))
@@ -875,7 +872,7 @@ object HumioQuery {
           // kmeansRefine discipline), so the result is independent of
           // character-visit order and a SQL oracle that groups the chars
           // in any order replays it bit-for-bit
-          call_function("graft_entropy", one.cast("string"))
+          CharEntropy.call(one.cast("string"))
         case other => throw new IllegalArgumentException(
           s"unknown function in expression: $other")
       }
@@ -973,7 +970,6 @@ object HumioQuery {
         // per field per row (hq_parsejson measured 47 s warm at the 10×
         // probe on that path; 2.1 s native). from_json string-form
         // semantics per field, top-level keys.
-        graft.expressions.JsonStrField.register(df.sparkSession)
         val jsonField = pos.head
         pos.tail.foldLeft(df) { (d, k) =>
           // the native extractor addresses TOP-LEVEL keys; a dotted
@@ -983,7 +979,7 @@ object HumioQuery {
             s"parseJson(): only top-level keys are supported, got '$k' " +
               "(nested paths need an explicit parseJson of the inner object)")
           d.withColumn(k,
-            call_function("graft_json_str", col(jsonField), lit(k)))
+            JsonStrField.call(col(jsonField), lit(k)))
         }
       case "sort" =>
         // sort(f1, …[, order=desc][, limit=n]) — with limit, Spark plans

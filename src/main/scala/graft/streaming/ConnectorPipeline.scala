@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.expressions.{FalconEnvelope, KvKeyed, KvLastWinMap}
 import graft.operators.Connector
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -51,7 +50,6 @@ object ConnectorPipeline {
   def transform(lines: DataFrame, host: String, streamId: String): DataFrame = {
     val spark = lines.sparkSession
     Connector.lastWinPolicy(spark)
-    Seq(KvKeyed, KvLastWinMap, FalconEnvelope).foreach(_.register(spark))
     // the parse is a Generate output (one row per line), so the optimizer
     // cannot push the R3 filter below it and re-parse there: each line is
     // parsed exactly once, by the native envelope parser, inside the same

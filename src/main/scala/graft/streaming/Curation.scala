@@ -64,7 +64,6 @@ object Curation {
         "use the batch curate queries otherwise")
     require(!evalGrams.isStreaming,
       "the eval-gram set must be a static DataFrame")
-    graft.expressions.WordShingles.register(stream.sparkSession)
     val gated = stream.withWatermark("ts", watermark).where(gate)
     val toks = Text.tokens(col("text"))
     val base = gated.select(col("doc_id"), col("ts"), col("text"),

@@ -1,5 +1,6 @@
 package graft
 
+import graft.expressions.{JsonLongField, JsonStrField}
 import graft.operators.Connector
 import graft.streaming.ConnectorPipeline
 import org.apache.spark.sql.DataFrame
@@ -164,7 +165,6 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("KvLastWinMap native equals map_from_entries under LAST_WIN") {
-    graft.expressions.KvLastWinMap.register(spark)
     Connector.lastWinPolicy(spark)
     // duplicate keys (first position, last value), NULL values kept,
     // empty array, many keys — against the declarative form
@@ -197,7 +197,6 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("KvKeyed equals the exists-lambda poison rule, compiled and interpreted") {
-    graft.expressions.KvKeyed.register(spark)
     val kvType = "array<struct<Key:string,ValueString:string>>"
     val kvs = Seq("null", "[]", """[{"Key": "a", "ValueString": null}]""",
       """[{"Key": "a"}, {"Key": "b", "ValueString": "2"}]""", "[null]",
@@ -230,7 +229,6 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("JsonLongField native equals from_json tolerant long extraction") {
-    graft.expressions.JsonLongField.register(spark)
     val docs = Seq(
       """{"k": 76}""", """{"k":-5}""", """{"k": 0}""",
       """  {  "k" : 123 }  """,                       // whitespace
@@ -257,7 +255,7 @@ class ConnectorSpec extends SparkSpec {
     def extract(c: org.apache.spark.sql.Column) =
       df.select(col("id"), c.as("v")).collect()
         .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
-    val native = extract(call_function("graft_json_long", col("props"), lit("k")))
+    val native = extract(JsonLongField.call(col("props"), lit("k")))
     val builtin = extract(from_json(col("props"),
       org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))("k"))
     assert(native == builtin,
@@ -273,24 +271,19 @@ class ConnectorSpec extends SparkSpec {
     // the ONE deliberate widening vs from_json: integral STRING values
     // coerce (the get_json_object + CAST semantics of the committed
     // DuckDB oracle); non-integral strings still poison
-    val widened = extract(call_function("graft_json_long",
-      lit("""{"k": "12"}"""), lit("k")))
+    val widened = extract(JsonLongField.call(lit("""{"k": "12"}"""), lit("k")))
     assert(widened.values.head == 12L)
-    val widenedNeg = extract(call_function("graft_json_long",
-      lit("""{"k": " -7 "}"""), lit("k")))
+    val widenedNeg = extract(JsonLongField.call(lit("""{"k": " -7 "}"""), lit("k")))
     assert(widenedNeg.values.head == -7L)
-    val badStr = extract(call_function("graft_json_long",
-      lit("""{"k": "x12"}"""), lit("k")))
+    val badStr = extract(JsonLongField.call(lit("""{"k": "x12"}"""), lit("k")))
     assert(badStr.values.head == null)
     // unicode escape hex must be ASCII hex (Jackson parity): an
     // Arabic-Indic digit in \u makes the document malformed
-    val badHex = extract(call_function("graft_json_long",
-      lit("{\"k\": 5, \"s\": \"\\u0\u0663zz\"}"), lit("k")))
+    val badHex = extract(JsonLongField.call(lit("{\"k\": 5, \"s\": \"\\u0\u0663zz\"}"), lit("k")))
     assert(badHex.values.head == null)
   }
 
   test("JsonStrField native equals from_json string-form extraction") {
-    graft.expressions.JsonStrField.register(spark)
     val docs = Seq(
       """{"k": 76}""",                                // number -> literal text
       """{"k": -1.5e3}""",                            // float text preserved
@@ -307,7 +300,7 @@ class ConnectorSpec extends SparkSpec {
     def extract(c: org.apache.spark.sql.Column) =
       df.select(col("id"), c.as("v")).collect()
         .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getString(1))).toMap
-    val native = extract(call_function("graft_json_str", col("props"), lit("k")))
+    val native = extract(JsonStrField.call(col("props"), lit("k")))
     val builtin = extract(from_json(col("props"),
       org.apache.spark.sql.types.StructType.fromDDL("k STRING"))("k"))
     assert(native == builtin,
@@ -318,14 +311,11 @@ class ConnectorSpec extends SparkSpec {
     assert(native(8L) == "y")
     // compact object/array values round-trip as their source span (the
     // documented raw-span behavior; matches from_json on compact input)
-    val obj = extract(call_function("graft_json_str",
-      lit("""{"k":{"a":1},"j":2}"""), lit("k")))
+    val obj = extract(JsonStrField.call(lit("""{"k":{"a":1},"j":2}"""), lit("k")))
     assert(obj.values.head == """{"a":1}""")
   }
 
   test("JSON natives honor from_json's single-quote leniency and depth bound") {
-    graft.expressions.JsonLongField.register(spark)
-    graft.expressions.JsonStrField.register(spark)
     // Spark's JSON options default allowSingleQuotes=true — pin the
     // native parsers against from_json on single-quoted docs
     val docs = Seq(
@@ -337,9 +327,9 @@ class ConnectorSpec extends SparkSpec {
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }
     val df = docs.toDF("id", "props")
     def both(schema: String) = {
-      val nat = if (schema == "k BIGINT") "graft_json_long" else "graft_json_str"
+      val nat = if (schema == "k BIGINT") JsonLongField else JsonStrField
       df.select(col("id"),
-          call_function(nat, col("props"), lit("k")).as("n"),
+          nat.call(col("props"), lit("k")).as("n"),
           from_json(col("props"),
             org.apache.spark.sql.types.StructType.fromDDL(schema))("k").as("r"))
         .collect().map(r => (r.getLong(0), r.get(1), r.get(2)))
@@ -354,8 +344,8 @@ class ConnectorSpec extends SparkSpec {
     val deepDoc = s"""{"k": $deep}"""
     val d = Seq((1L, deepDoc)).toDF("id", "props")
     val out = d.select(
-      call_function("graft_json_str", col("props"), lit("k")).as("a"),
-      call_function("graft_json_long", col("props"), lit("k")).as("b"))
+      JsonStrField.call(col("props"), lit("k")).as("a"),
+      JsonLongField.call(col("props"), lit("k")).as("b"))
       .collect().head
     assert(out.isNullAt(0) && out.isNullAt(1))
   }
@@ -370,8 +360,6 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("JSON natives match from_json on randomized documents (property)") {
-    graft.expressions.JsonLongField.register(spark)
-    graft.expressions.JsonStrField.register(spark)
     val rnd = new scala.util.Random(97)
     def randString(): String = {
       val chars = "abzAZ09 _-!?/\\\"\n\té世"
@@ -418,7 +406,7 @@ class ConnectorSpec extends SparkSpec {
     // comparing only where the ref is non-null OR the native is null
     // (a native value with a null ref must be a string coercion)
     val longRows = df.select(col("id"),
-        call_function("graft_json_long", col("props"), lit("k")).as("n"),
+        JsonLongField.call(col("props"), lit("k")).as("n"),
         from_json(col("props"),
           org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))("k").as("r"))
       .collect()
@@ -433,7 +421,7 @@ class ConnectorSpec extends SparkSpec {
     }
     assert(longBad.isEmpty, "long form diverged on: " + longBad.take(3).map(r =>
       docs(r.getLong(0).toInt)._2).mkString(" | "))
-    cmp(call_function("graft_json_str", col("props"), lit("k")),
+    cmp(JsonStrField.call(col("props"), lit("k")),
       from_json(col("props"),
         org.apache.spark.sql.types.StructType.fromDDL("k STRING"))("k"),
       "string form")

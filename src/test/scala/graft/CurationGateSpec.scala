@@ -29,7 +29,6 @@ class CurationGateSpec extends SparkSpec {
     assert(exact == bloom, "bloom pre-filter must not change the result")
 
     // no false negatives at the bloom layer: every inserted gram probes true
-    graft.expressions.WordShingles.register(spark)
     val docs = Tables.documents(spark, dir)
     def grams(d: org.apache.spark.sql.DataFrame) = d.select(col("doc_id"),
       explode(graft.functions.Text.shinglesNative(

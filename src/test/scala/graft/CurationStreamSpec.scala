@@ -25,11 +25,9 @@ class CurationStreamSpec extends SparkSpec {
     (100L, "alpha beta gamma delta epsilon zeta"),
     (101L, "one two three four five six seven")).toDF("doc_id", "text")
   private lazy val bandIndex = {
-    graft.expressions.ShinglePermMinHash.register(spark)
     Dedup.bandRows(baseDocs, col("text"), 16, 2).select("band", "key").cache()
   }
   private lazy val evalGrams = {
-    graft.expressions.WordShingles.register(spark)
     Seq("quick brown fox jumps over dog").toDF("text")
       .select(explode(Text.shinglesNative(Text.tokens(col("text")), 4))
         .as("gram"))
@@ -50,7 +48,6 @@ class CurationStreamSpec extends SparkSpec {
     * `x_curate_incremental`, on a static frame — the agreement oracle.
     */
   private def batchChunks(docs: DataFrame, budget: Int): Set[(Long, Long, Long, String)] = {
-    graft.expressions.WordShingles.register(spark)
     val gated = docs.where(gate).select("doc_id", "text")
     val contamIds = gated
       .select(col("doc_id"),
@@ -109,7 +106,6 @@ class CurationStreamSpec extends SparkSpec {
   }
 
   test("streaming exact-cut ingest = substrCutAgainstIndex + gates on the drained stream") {
-    graft.expressions.WordShingles.register(spark)
     val esdGram = 4
     val gramIndex = Dedup.substrGramIndex(baseDocs, col("text"), esdGram).cache()
     val ingest = Seq(

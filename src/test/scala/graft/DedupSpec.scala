@@ -1,5 +1,6 @@
 package graft
 
+import graft.expressions.{RollingWinnow, TrigramJaccard}
 import graft.functions.Text
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
@@ -93,7 +94,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("CharTrigrams native expression equals the declarative HOF form") {
-    graft.expressions.CharTrigrams.register(spark)
     // edge cases the fixture never exercises: empty text, 1–2 chars
     // (partial-gram fallback), multi-byte UTF-8 (code-point semantics)
     val texts = Seq("", "a", "ab", "abc", "abcd", "héllo wörld",
@@ -115,7 +115,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("WordShingles native expression equals the declarative HOF form") {
-    graft.expressions.WordShingles.register(spark)
     // edges: empty text (split -> [""]), under-k docs (whole-doc
     // fallback), exactly-k, multi-byte tokens, long docs
     val texts = Seq("", "a", "a b", "a b c", "a b c d", "héllo wörld 的是 了在",
@@ -155,7 +154,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("StopwordCounts/LangBest native equals the HOF scoring and langId fold") {
-    graft.expressions.StopwordCounts.register(spark)
     // vocabulary mixing every language's stopwords (incl. the
     // overlapping de/la), CJK, noise, and repeats — repeats matter
     // because stopwordHits counts TOTAL hits, not distinct
@@ -195,7 +193,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("TrigramJaccard fused expression equals the declarative set formula") {
-    graft.expressions.TrigramJaccard.register(spark)
     val rnd = new scala.util.Random(23)
     val alphabet = "abcd的是 héö"   // small alphabet forces gram collisions
     def randText(n: Int) = (0 until n).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
@@ -205,7 +202,7 @@ class DedupSpec extends SparkSpec {
     val df = pairs.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
       .toDF("id", "ta", "tb")
     val fused = df.select(col("id"),
-        call_function("graft_trigram_jaccard", col("ta"), col("tb")).as("j"))
+        TrigramJaccard.call(col("ta"), col("tb")).as("j"))
       .as[(Long, Double)].collect().toMap
     def grams(c: org.apache.spark.sql.Column) = array_distinct(Text.charTrigrams(c))
     val decl = df.select(col("id"), grams(col("ta")).as("ga"), grams(col("tb")).as("gb"))
@@ -426,15 +423,12 @@ class DedupSpec extends SparkSpec {
   }
 
   test("winnowing fingerprints overlap heavily under edits, and are position-robust") {
-    import org.apache.spark.sql.functions.{call_function, lit}
-    graft.expressions.RollingWinnow.register(spark)
     // shifted = same text with two words prepended: every k-gram moves
     // position but almost all survive — winnowed minima must mostly agree
     val shifted = "oh well " + base
     val d = Seq((0L, base), (1L, shifted), (2L, unrelated)).toDF("doc_id", "text")
     val fps = d.select(col("doc_id"),
-        call_function("graft_rolling_winnow",
-          Text.tokens(col("text")), lit(3), lit(4)).as("fps"))
+        RollingWinnow.call(Text.tokens(col("text")), lit(3), lit(4)).as("fps"))
       .as[(Long, Seq[Long])].collect().toMap
     val a = fps(0L).toSet; val b = fps(1L).toSet; val c = fps(2L).toSet
     assert((a intersect b).size >= (a.size * 2) / 3,

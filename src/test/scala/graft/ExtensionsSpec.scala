@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import graft.expressions._
+import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.functions.{array, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
 /** The spark.sql.extensions deployment path: a session built with
-  * GraftExtensions resolves the native functions in plain SQL.
+  * GraftExtensions resolves the native functions in plain SQL, to the
+  * expressions their Column builders make.
   *
   * Needs its OWN SparkSession (extensions apply at session build), but
   * must not disturb the suite-shared one: clear the default/active
@@ -43,44 +45,67 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  /** Each SQL call this spec makes, its Column-builder form, and a check
+    * on its value.
+    */
+  private val calls: Seq[(String, Column, Row => Unit)] = {
+    def strs(xs: String*): Column = array(xs.map(lit): _*)
+    def float(x: String): Column = lit(BigDecimal(x)).cast("float")
+    Seq(
+      ("graft_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
+        "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))",
+        FloatDot.call(array(float("1.0"), float("2.0")), array(float("3.0"), float("4.0"))),
+        r => assert(r.getDouble(0) == 11.0)),
+      ("graft_shingle_perm_minhash(array('a','b','c','d'), 3, 8)",
+        ShinglePermMinHash.call(strs("a", "b", "c", "d"), lit(3), lit(8)),
+        r => {
+          val sigs = r.getSeq[String](0)
+          assert(sigs.length == 8 && sigs.forall(_.matches("[0-9]{20}")))
+        }),
+      ("graft_simhash64(array('a','b')) = graft_simhash64(array('b','a'))",
+        SimHash64.call(strs("a", "b")) === SimHash64.call(strs("b", "a")),
+        r => assert(r.getBoolean(0), "simhash is order-independent")),
+      ("graft_shingle_minhash(array('a','b','c','d'), 3, 2)",
+        ShingleMinHash.call(strs("a", "b", "c", "d"), lit(3), lit(2)),
+        r => assert(r.getSeq[String](0).length == 2)),
+      ("graft_rolling_winnow(array('a','b','c','d','e'), 3, 2)",
+        RollingWinnow.call(strs("a", "b", "c", "d", "e"), lit(3), lit(2)),
+        r => {
+          val fp = r.getSeq[Long](0)
+          assert(fp.nonEmpty && fp.forall(v => v >= 0L))
+        }),
+      ("graft_char_trigrams('abcd')", CharTrigrams.call(lit("abcd")),
+        r => assert(r.getSeq[String](0) == Seq("abc", "bcd"))),
+      ("graft_trigram_jaccard('abcd', 'abcd')", TrigramJaccard.call(lit("abcd"), lit("abcd")),
+        r => assert(r.getDouble(0) == 1.0)),
+      ("graft_shingles(array('a','b','c'), 2)", WordShingles.call(strs("a", "b", "c"), lit(2)),
+        r => assert(r.getSeq[String](0) == Seq("a b", "b c"))))
+  }
+
   test("graft_dot resolves via spark.sql.extensions") {
     withExtensionSession { spark =>
-      val out = spark.sql(
-        "SELECT graft_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
-          "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
-        .collect().head.getDouble(0)
-      assert(out == 11.0)
       // every native function resolves in plain SQL via the one hook
-      val sigs = spark.sql(
-        "SELECT graft_shingle_perm_minhash(array('a','b','c','d'), 3, 8) AS s")
-        .collect().head.getSeq[String](0)
-      assert(sigs.length == 8 && sigs.forall(_.matches("[0-9]{20}")))
-      val shRow = spark.sql(
-        "SELECT graft_simhash64(array('a','b')) AS h, graft_simhash64(array('b','a')) AS h2")
-        .collect().head
-      assert(shRow.getLong(0) == shRow.getLong(1), "simhash is order-independent")
-      val mh = spark.sql("SELECT graft_shingle_minhash(array('a','b','c','d'), 3, 2) AS m")
-        .collect().head.getSeq[String](0)
-      assert(mh.length == 2)
-      val fp = spark.sql("SELECT graft_rolling_winnow(array('a','b','c','d','e'), 3, 2) AS f")
-        .collect().head.getSeq[Long](0)
-      assert(fp.nonEmpty && fp.forall(v => v >= 0L))
-      val tg = spark.sql("SELECT graft_char_trigrams('abcd') AS g")
-        .collect().head.getSeq[String](0)
-      assert(tg == Seq("abc", "bcd"))
-      val tj = spark.sql("SELECT graft_trigram_jaccard('abcd', 'abcd') AS j")
-        .collect().head.getDouble(0)
-      assert(tj == 1.0)
-      val sg = spark.sql("SELECT graft_shingles(array('a','b','c'), 2) AS g")
-        .collect().head.getSeq[String](0)
-      assert(sg == Seq("a b", "b c"))
+      for ((sql, _, check) <- calls) check(spark.sql(s"SELECT $sql AS v").collect().head)
     }
   }
 
-  /** Every object in `graft.expressions` with a `register(SparkSession)`
-    * method, found on the class path rather than listed by hand.
+  test("each SQL call and its Column builder give the same analyzed plan") {
+    withExtensionSession { spark =>
+      val base = spark.range(1)
+      for ((sql, column, _) <- calls) {
+        val viaSql = base.selectExpr(s"$sql AS v")
+        val viaColumn = base.select(column.as("v"))
+        assert(viaColumn.queryExecution.analyzed.canonicalized ==
+          viaSql.queryExecution.analyzed.canonicalized, sql)
+        assert(viaColumn.collect().toSeq == viaSql.collect().toSeq, sql)
+      }
+    }
+  }
+
+  /** Every `NativeFunction` object in `graft.expressions`, found on the
+    * class path rather than listed by hand.
     */
-  private def registerCalls(): Seq[SparkSession => Unit] = {
+  private def nativeFunctions(): Seq[NativeFunction] = {
     val pkg = "graft/expressions"
     val loader = getClass.getClassLoader
     // the suite runs from sbt's class directories
@@ -89,34 +114,24 @@ class ExtensionsSpec extends AnyFunSuite {
     files.filter(_.endsWith("$.class")).distinct.flatMap { f =>
       val cls = Class.forName(pkg.replace('/', '.') + "." + f.stripSuffix(".class"),
         false, loader)
-      scala.util.Try(cls.getMethod("register", classOf[SparkSession])).toOption.map { m =>
-        (s: SparkSession) => { m.invoke(cls.getField("MODULE$").get(null), s); () }
+      scala.util.Try(cls.getField("MODULE$").get(null)).toOption.collect {
+        case nf: NativeFunction => nf
       }
     }
   }
 
-  test("every function a register method installs resolves via spark.sql.extensions") {
-    // the names come from the function registry of a session in which
-    // every register method ran, so a new native function that the
-    // extension hook misses fails here
-    val registered = SparkSpec.session.newSession()
-    val registry = registered.sessionState.functionRegistry
-    def graftNames = registry.listFunction().map(_.funcName).filter(_.startsWith("graft_")).toSet
-    assert(graftNames.isEmpty, "a new session starts without native functions")
-    val calls = registerCalls()
-    assert(calls.size >= 18, s"found ${calls.size} register methods")
-    calls.foreach(_(registered))
-    val names = graftNames
-    assert(names.size >= 19, names.toSeq.sorted.mkString(", "))
+  test("every NativeFunction object resolves via spark.sql.extensions") {
+    // found on the class path, so a new native function that the
+    // extension list misses fails here
+    val found = nativeFunctions()
+    assert(found.size == 19, found.map(_.entry._1.funcName).sorted.mkString(", "))
+    assert(found.toSet == GraftExtensions.functions.toSet)
     withExtensionSession { spark =>
       val ext = spark.sessionState.functionRegistry
-      val missing = names.filterNot(n => ext.functionExists(FunctionIdentifier(n)))
-      assert(missing.isEmpty, s"not injected by GraftExtensions: ${missing.toSeq.sorted}")
-      for (n <- names) {
-        val id = FunctionIdentifier(n)
-        assert(ext.lookupFunction(id).map(_.getClassName) ==
-          registry.lookupFunction(id).map(_.getClassName), n)
-        assert(spark.catalog.functionExists(n), n)
+      for (nf <- found) {
+        val (id, info, _) = nf.entry
+        assert(ext.lookupFunction(id).map(_.getClassName) == Some(info.getClassName), id)
+        assert(spark.catalog.functionExists(id.funcName), id)
       }
     }
   }

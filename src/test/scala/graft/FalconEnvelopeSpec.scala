@@ -77,9 +77,8 @@ object FalconEnvelopeSpec {
   /** Lines whose native parse differs from `from_json` under `<=>`. */
   def mismatches(spark: SparkSession, lines: Seq[String]): Array[String] = {
     import spark.implicits._
-    FalconEnvelope.register(spark)
     val df: DataFrame = lines.toDF("value")
-    df.where(!(call_function("graft_falcon_envelope", col("value")) <=>
+    df.where(!(FalconEnvelope.call(col("value")) <=>
         Connector.parseLine(col("value"))))
       .as[String].collect()
   }

@@ -347,8 +347,8 @@ class ScaleSpec extends SparkSpec {
     val b = (0L until 200L).map(i => (i, i * 2)).toDF("k", "vb")
     Scale.writeBucketed(a, "graft_bucket_a", Seq("k"), 4)
     Scale.writeBucketed(b, "graft_bucket_b", Seq("k"), 4)
-    val joined = Scale.readTable(spark, "graft_bucket_a")
-      .join(Scale.readTable(spark, "graft_bucket_b"), "k")
+    val joined = spark.table("graft_bucket_a")
+      .join(spark.table("graft_bucket_b"), "k")
     // disable broadcast so the join would NEED a shuffle if not bucketed
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -374,7 +374,7 @@ class ScaleSpec extends SparkSpec {
     val cents = (0L until 4L).map(i => (i, v(i))).toDF("cent_id", "cvec")
     Scale.writeBucketed(Knn.ivfAssign(base, cents, 4),
       "graft_cell_index", Seq("cell"), 4)
-    val stored = Scale.readTable(spark, "graft_cell_index")
+    val stored = spark.table("graft_cell_index")
     val delta = (100L until 110L).map(i => (i, v(i))).toDF("vec_id", "embedding")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

@@ -257,11 +257,9 @@ class StreamGuardSpec extends SparkSpec {
     (100L, "alpha beta gamma delta epsilon zeta"),
     (101L, "one two three four five six seven")).toDF("doc_id", "text")
   private lazy val sgBandIndex = {
-    graft.expressions.ShinglePermMinHash.register(spark)
     Dedup.bandRows(sgBaseDocs, col("text"), 16, 2).select("band", "key").cache()
   }
   private lazy val sgEvalGrams = {
-    graft.expressions.WordShingles.register(spark)
     Seq("quick brown fox jumps over dog").toDF("text")
       .select(explode(Text.shinglesNative(Text.tokens(col("text")), 4)).as("gram"))
       .distinct().cache()
@@ -307,7 +305,6 @@ class StreamGuardSpec extends SparkSpec {
   test("Curation.streamingCurateExactIngest: span collection rides the same one aggregate") {
     // state per doc = text + its duplicated span starts (bounded by the
     // doc's own gram count), watermark-evicted with the window
-    graft.expressions.WordShingles.register(spark)
     val gramIndex = Dedup.substrGramIndex(sgBaseDocs, col("text"), 4).cache()
     try assert(auditDocStream("curate_esd", st =>
       Curation.streamingCurateExactIngest(st, docGate, sgEvalGrams,
@@ -393,7 +390,6 @@ class StreamGuardSpec extends SparkSpec {
   }
 
   test("Dedup.streamingSubstrDupIds: gram probe stateless, dedup state within-watermark") {
-    graft.expressions.WordShingles.register(spark)
     val gramIndex = Dedup.substrGramIndex(sgBaseDocs, col("text"), 4).cache()
     try assert(auditDocStream("substr_dup", st =>
       Dedup.streamingSubstrDupIds(st, col("text"), 4, gramIndex)) ==

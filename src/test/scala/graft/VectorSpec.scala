@@ -1,5 +1,6 @@
 package graft
 
+import graft.expressions.{BqSign64, FloatDot, Sq8Error}
 import graft.functions.Vectors
 import graft.operators.{Knn, Multimodal}
 import org.apache.spark.sql.functions._
@@ -241,7 +242,7 @@ class VectorSpec extends SparkSpec {
       col("cvec"), graft.functions.Vectors.norm(col("cvec"), 2).as("cnrm")))
     val got = Knn.ivfAssign(vecs, trained, 2)
       .join(cent, "cell")
-      .withColumn("csim", expr("try_divide(graft_dot(embedding, cvec), nrm * cnrm)"))
+      .withColumn("csim", Vectors.cosineByNorms("embedding", "cvec", "nrm", "cnrm"))
       .groupBy("cell")
       .agg(max_by(struct(col("vec_id"), col("csim")),
         struct(col("csim"), -col("vec_id"))).as("m"))
@@ -379,7 +380,6 @@ class VectorSpec extends SparkSpec {
   }
 
   test("Sq8Error native equals the declarative quantize-dequantize HOF") {
-    graft.expressions.Sq8Error.register(spark)
     val dim = 8
     val rnd = new scala.util.Random(59)
     val vecs = (0L until 40L).map(id =>
@@ -404,7 +404,7 @@ class VectorSpec extends SparkSpec {
     })
     val joined = df.crossJoin(scales)
     val native = joined.select(col("vec_id"),
-        expr("graft_sq8_err(embedding, mn, mx)").as("e"))
+        Sq8Error.call(col("embedding"), col("mn"), col("mx")).as("e"))
       .as[(Long, Double)].collect().toMap
     val hof = joined.select(col("vec_id"),
         aggregate(hofTerms, lit(0.0), (a, t) => a + t).as("e"))
@@ -417,7 +417,6 @@ class VectorSpec extends SparkSpec {
   }
 
   test("Sq8Error saturates out-of-range components and rejects scale mismatch") {
-    graft.expressions.Sq8Error.register(spark)
     // scales trained on [0, 1]; the serving vector leaves the range on
     // both sides — codes must clamp to 0/255, so the error equals the
     // squared distance to the range edge (deq = mn or mx exactly)
@@ -425,24 +424,23 @@ class VectorSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
       .withColumn("mn", array(lit(0.0), lit(0.0)))
       .withColumn("mx", array(lit(1.0), lit(1.0)))
-    val e = df.select(expr("graft_sq8_err(embedding, mn, mx)"))
+    val e = df.select(Sq8Error.call(col("embedding"), col("mn"), col("mx")))
       .as[Double].head()
     assert(math.abs(e - (0.25 + 0.25)) < 1e-12,
       s"clamped codes reconstruct the range edges, got $e")
     // a 1-dim scale table against a 2-dim vector is a caller bug
     val bad = df.withColumn("mn", array(lit(0.0)))
     val thrown = intercept[Exception] {
-      bad.select(expr("graft_sq8_err(embedding, mn, mx)")).collect()
+      bad.select(Sq8Error.call(col("embedding"), col("mn"), col("mx"))).collect()
     }
     assert(thrown.getMessage != null)
   }
 
   test("BqSign64: MSB-first sign bits; zeros/NaN clear; short arrays pad; " +
     "hamming tracks angle") {
-    graft.expressions.BqSign64.register(spark)
     def sig(a: Array[Float]): Long =
       Seq(Tuple1(a)).toDF("embedding")
-        .select(expr("graft_bq_sign(embedding)")).as[Long].head()
+        .select(BqSign64.call(col("embedding"))).as[Long].head()
     // dim 0 -> bit 63: a single positive first component is Long.MIN
     assert(sig(Array(1.0f)) == Long.MinValue)
     assert(sig(Array(-1.0f)) == 0L)
@@ -600,15 +598,14 @@ class VectorSpec extends SparkSpec {
   // test freezes the edge behavior so a refactor that silently changes
   // it fails here, not at oracle-hash time.
   test("graft_dot edge semantics: null elements skipped, mismatched lengths truncate") {
-    graft.expressions.FloatDot.register(spark)
     val row = Seq((Seq[java.lang.Double](1.0, null, 3.0), Seq[java.lang.Double](2.0, 5.0, 4.0, 9.0)))
       .toDF("a", "b")
-    val got = row.selectExpr("graft_dot(a, b) AS d").as[Double].collect()
+    val got = row.select(FloatDot.call(col("a"), col("b"))).as[Double].collect()
     // index 0: 1*2; index 1 skipped (null); index 2: 3*4; index 3 beyond min length
     assert(got.toSeq == Seq(14.0))
     val nullArr = Seq((Option.empty[Seq[Double]], Option(Seq(1.0))))
       .toDF("a", "b")
-    assert(nullArr.selectExpr("graft_dot(a, b) AS d")
+    assert(nullArr.select(FloatDot.call(col("a"), col("b")))
       .collect().head.isNullAt(0), "NULL array input must yield NULL")
   }
 }
