@@ -16,9 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * projection out of whole-stage codegen and pays interpreted dispatch
   * plus Jackson per row — ~8 µs/row on 9-char documents, the dominant
   * term of those queries' per-row cost. This expression is a
-  * strict little recursive-descent JSON VALIDATOR (the whole document
-  * must parse, exactly like from_json) that captures the target
-  * top-level field while scanning.
+  * strict JSON validator (the whole document must parse, exactly like
+  * from_json) that captures the target top-level field while scanning.
   *
   * Tolerant semantics (differentially tested against
   * `from_json(s, 'k BIGINT').k` — every behavior below except the one
@@ -28,12 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * SUCCESSFUL occurrence wins (PERMISSIVE keeps the partial row on a
   * conversion failure, so a failed occurrence leaves the previous
   * value; an explicit JSON null does overwrite); nested occurrences
-  * of the key (inside
-  * sub-objects, arrays, or string values) never match. JSON
-  * strictness matches Jackson defaults: no leading zeros,
-  * ASCII-hex-only escape sequences validated everywhere, content
-  * AFTER the root tolerated (Jackson never reads past the root
-  * value).
+  * of the key (inside sub-objects, arrays, or string values) never
+  * match. The grammar and its strictness are [[JsonFieldScanner]]'s.
   *
   * ONE deliberate widening vs from_json: a STRING value whose trimmed
   * content is an optionally-signed decimal integer coerces to its long
@@ -98,71 +93,26 @@ object JsonLongField extends NativeFunction("graft_json_long", classOf[JsonLongF
     */
   def compute(s: UTF8String, key: String): java.lang.Long = {
     val p = new Parser(s.toString, key)
-    p.parse()
+    if (p.scan()) p.hit else null
   }
 
-  /** Minimal strict JSON parser. One instance per evaluation; the
-    * documents this serves are tiny (an audit record's props), so
-    * object cost is noise next to the codegen win. State: `hit` — the
-    * last top-level match for `key`, invalidated by any later
-    * non-integral duplicate.
-    */
-  private final class Parser(s: String, key: String) {
-    private var i = 0
-    private val n = s.length
-    // Jackson (2.15+, as shipped with Spark 4) bounds nesting at 1000
-    // and surfaces deeper documents as malformed -> NULL; an unbounded
-    // recursive descent would instead die with StackOverflowError
-    private var depth = 0
-    private var hit: java.lang.Long = null
+  /** `hit` is the last top-level match for `key` that coerced. */
+  private final class Parser(doc: String, key: String) extends JsonFieldScanner(doc, key) {
+    var hit: java.lang.Long = null
 
-    def parse(): java.lang.Long = {
-      try {
-        ws()
-        // object roots only: from_json with a struct schema yields NULL
-        // for array/scalar roots (measured on Spark 4 — no
-        // array-as-rows in the expression context), as does the
-        // oracle's ->> extraction
-        if (i >= n || s.charAt(i) != '{') return null
-        parseObject(top = true)
-        // trailing content after the root value is TOLERATED — Jackson
-        // never reads past the root, so from_json accepts it too
-        hit
-      } catch { case _: BadJson => null }
-    }
+    // the LAST SUCCESSFUL occurrence wins — measured from_json behavior
+    // ({"k": 1.5, "k": 2} → 2 AND {"k": 2, "k": 1.5} → 2): PERMISSIVE
+    // keeps the partial row on a conversion failure, so a failed
+    // occurrence leaves the previous value; an explicit JSON null DOES
+    // overwrite (Some(null))
+    protected def topValue(): Unit = coerce().foreach(v => hit = v)
 
-    private def parseObject(top: Boolean): Unit = {
-      depth += 1
-      if (depth > 1000) throw Bad
-      expect('{'); ws()
-      if (peek() == '}') { i += 1; depth -= 1; return }
-      while (true) {
-        ws()
-        val k = parseString(); ws(); expect(':'); ws()
-        if (top && k == key) {
-          // the LAST SUCCESSFUL occurrence wins — measured from_json
-          // behavior ({"k": 1.5, "k": 2} → 2 AND {"k": 2, "k": 1.5} →
-          // 2): PERMISSIVE keeps the partial row on a conversion
-          // failure, so a failed occurrence leaves the previous value;
-          // an explicit JSON null DOES overwrite (Some(null))
-          parseTopValue().foreach(v => hit = v)
-        } else parseValue()
-        ws()
-        peek() match {
-          case ',' => i += 1
-          case '}' => i += 1; depth -= 1; return
-          case _ => throw Bad
-        }
-      }
-    }
-
-    /** Value in the target position: parse as any JSON value; Some for
-      * a coercible long — a plain integral number in range, a JSON
-      * null (Some(null)), or (the get_json_object+cast legacy this
+    /** Some for a coercible long — a plain integral number in range, a
+      * JSON null (Some(null)), or (the get_json_object+cast legacy this
       * replaced) a string whose trimmed content is an optionally-signed
       * decimal integer — None for anything else.
       */
-    private def parseTopValue(): Option[java.lang.Long] = {
+    private def coerce(): Option[java.lang.Long] = {
       if (peek() == '-' || (peek() >= '0' && peek() <= '9')) {
         val start = i
         val isInt = parseNumber()
@@ -182,122 +132,7 @@ object JsonLongField extends NativeFunction("graft_json_long", classOf[JsonLongF
         literal("null"); Some(null)
       } else { parseValue(); None }
     }
-
-    private def parseValue(): Unit = peek() match {
-      case '{' => parseObject(top = false)
-      case '[' => parseArray()
-      case '"' | '\'' => parseString(); ()
-      case 't' => literal("true")
-      case 'f' => literal("false")
-      case 'n' => literal("null")
-      case c if c == '-' || (c >= '0' && c <= '9') => parseNumber(); ()
-      case _ => throw Bad
-    }
-
-    private def parseArray(): Unit = {
-      depth += 1
-      if (depth > 1000) throw Bad
-      expect('['); ws()
-      if (peek() == ']') { i += 1; depth -= 1; return }
-      while (true) {
-        ws(); parseValue(); ws()
-        peek() match {
-          case ',' => i += 1
-          case ']' => i += 1; depth -= 1; return
-          case _ => throw Bad
-        }
-      }
-    }
-
-    /** Accepts both quote characters — Spark's JSON options default
-      * allowSingleQuotes=true, and the differential specs pin the
-      * behavior against from_json.
-      */
-    private def parseString(): String = {
-      val q = peek()
-      if (q != '"' && q != '\'') throw Bad
-      i += 1
-      val sb = new java.lang.StringBuilder()
-      while (true) {
-        if (i >= n) throw Bad
-        val c = s.charAt(i)
-        if (c == q) { i += 1; return sb.toString }
-        else if (c == '\\') {
-          i += 1
-          if (i >= n) throw Bad
-          s.charAt(i) match {
-            case '"' => sb.append('"')
-            case '\'' => sb.append('\'')
-            case '\\' => sb.append('\\')
-            case '/' => sb.append('/')
-            case 'b' => sb.append('\b')
-            case 'f' => sb.append('\f')
-            case 'n' => sb.append('\n')
-            case 'r' => sb.append('\r')
-            case 't' => sb.append('\t')
-            case 'u' =>
-              if (i + 4 >= n) throw Bad
-              val hex = s.substring(i + 1, i + 5)
-              // ASCII hex only — Character.digit also accepts Unicode
-              // digit code points (Arabic-Indic, fullwidth) that
-              // Jackson rejects
-              if (!hex.forall(h => (h >= '0' && h <= '9') ||
-                  (h >= 'a' && h <= 'f') || (h >= 'A' && h <= 'F'))) throw Bad
-              sb.append(Integer.parseInt(hex, 16).toChar)
-              i += 4
-            case _ => throw Bad
-          }
-          i += 1
-        } else if (c < 0x20) throw Bad  // raw control char
-        else { sb.append(c); i += 1 }
-      }
-      throw Bad
-    }
-
-    /** Returns isIntegral. Strict grammar: -?(0|[1-9][0-9]*)
-      * with optional fraction/exponent (which make it non-integral).
-      */
-    private def parseNumber(): Boolean = {
-      if (peek() == '-') i += 1
-      if (i >= n) throw Bad
-      if (s.charAt(i) == '0') i += 1
-      else if (s.charAt(i) >= '1' && s.charAt(i) <= '9') {
-        while (i < n && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
-      } else throw Bad
-      var isInt = true
-      if (i < n && s.charAt(i) == '.') {
-        isInt = false; i += 1
-        if (i >= n || s.charAt(i) < '0' || s.charAt(i) > '9') throw Bad
-        while (i < n && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
-      }
-      if (i < n && (s.charAt(i) == 'e' || s.charAt(i) == 'E')) {
-        isInt = false; i += 1
-        if (i < n && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
-        if (i >= n || s.charAt(i) < '0' || s.charAt(i) > '9') throw Bad
-        while (i < n && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
-      }
-      isInt
-    }
-
-    private def literal(lit: String): Unit = {
-      if (i + lit.length > n || s.substring(i, i + lit.length) != lit) throw Bad
-      i += lit.length
-    }
-
-    private def ws(): Unit =
-      while (i < n && (s.charAt(i) == ' ' || s.charAt(i) == '\t' ||
-        s.charAt(i) == '\n' || s.charAt(i) == '\r')) i += 1
-
-    private def peek(): Char = if (i >= n) throw Bad else s.charAt(i)
-
-    private def expect(c: Char): Unit = {
-      if (i >= n || s.charAt(i) != c) throw Bad
-      i += 1
-    }
   }
-
-  private final class BadJson extends Exception(null, null, false, false)
-  private val Bad = new BadJson
 
   def build(children: Seq[Expression]): Expression =
     JsonLongField(children.head, children(1))

@@ -24,7 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Exists for the same reason as JsonLongField: both built-in JSON
   * extractors are CodegenFallback, and ONE interpreted expression drops
   * the whole projection out of whole-stage codegen (hq_parsejson
-  * measured 47 s warm at 10× data on that path).
+  * measured 47 s warm at 10× data on that path). The grammar is
+  * [[JsonFieldScanner]]'s; only the top-level value rule is this one.
   */
 case class JsonStrField(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -67,60 +68,21 @@ case class JsonStrField(left: Expression, right: Expression)
 
 object JsonStrField extends NativeFunction("graft_json_str", classOf[JsonStrField]) {
   def compute(s: UTF8String, key: String): UTF8String = {
-    val r = new Parser(s.toString, key).parse()
-    if (r == null) null else UTF8String.fromString(r)
+    val p = new Parser(s.toString, key)
+    if (p.scan() && p.hit != null) UTF8String.fromString(p.hit) else null
   }
 
-  /** The JsonLongField grammar with string-form capture. Kept separate
-    * rather than generalized with callbacks: the two value-coercion
-    * rules differ (long: last SUCCESSFUL wins; string: conversion never
-    * fails) and each parser is small enough that sharing would cost
-    * more indirection than it saves.
+  /** `hit` is the string form of the last top-level match for `key`:
+    * string conversion never fails, so the last occurrence simply wins.
     */
-  private final class Parser(s: String, key: String) {
-    private var i = 0
-    private val n = s.length
-    // Jackson (2.15+, as shipped with Spark 4) bounds nesting at 1000
-    // and surfaces deeper documents as malformed -> NULL; an unbounded
-    // recursive descent would instead die with StackOverflowError
-    private var depth = 0
-    private var hit: String = null
+  private final class Parser(doc: String, key: String) extends JsonFieldScanner(doc, key) {
+    var hit: String = null
 
-    def parse(): String = {
-      try {
-        ws()
-        if (i >= n || s.charAt(i) != '{') return null
-        parseObject(top = true)
-        hit
-      } catch { case _: BadJson => null }
-    }
-
-    private def parseObject(top: Boolean): Unit = {
-      depth += 1
-      if (depth > 1000) throw Bad
-      expect('{'); ws()
-      if (peek() == '}') { i += 1; depth -= 1; return }
-      while (true) {
-        ws()
-        val k = parseString(); ws(); expect(':'); ws()
-        if (top && k == key) hit = parseTopValue()
-        else parseValue()
-        ws()
-        peek() match {
-          case ',' => i += 1
-          case '}' => i += 1; depth -= 1; return
-          case _ => throw Bad
-        }
-      }
-    }
-
-    /** String form of the value in the target position; null for JSON
-      * null (the field is NULL, matching from_json).
-      */
-    private def parseTopValue(): String = peek() match {
+    protected def topValue(): Unit = hit = peek() match {
       case '"' | '\'' => parseString()
       case 't' => literal("true"); "true"
       case 'f' => literal("false"); "false"
+      // the field is NULL, matching from_json
       case 'n' => literal("null"); null
       case c if c == '-' || (c >= '0' && c <= '9') =>
         val start = i
@@ -130,123 +92,13 @@ object JsonStrField extends NativeFunction("graft_json_str", classOf[JsonStrFiel
         // through double (Jackson parses VALUE_NUMBER_FLOAT to double
         // and re-renders it: "-1.5e3" -> "-1500.0") — measured
         if (isInt) raw else java.lang.Double.toString(java.lang.Double.parseDouble(raw))
-      case '{' | '[' =>
-        // raw source span, trimmed (see class doc)
+      case _ =>
+        // an object or array: its raw source span, trimmed (see class doc)
         val start = i
         parseValue()
         s.substring(start, i).trim
-      case _ => throw Bad
-    }
-
-    private def parseValue(): Unit = peek() match {
-      case '{' => parseObject(top = false)
-      case '[' => parseArray()
-      case '"' | '\'' => parseString(); ()
-      case 't' => literal("true")
-      case 'f' => literal("false")
-      case 'n' => literal("null")
-      case c if c == '-' || (c >= '0' && c <= '9') => parseNumber(); ()
-      case _ => throw Bad
-    }
-
-    private def parseArray(): Unit = {
-      depth += 1
-      if (depth > 1000) throw Bad
-      expect('['); ws()
-      if (peek() == ']') { i += 1; depth -= 1; return }
-      while (true) {
-        ws(); parseValue(); ws()
-        peek() match {
-          case ',' => i += 1
-          case ']' => i += 1; depth -= 1; return
-          case _ => throw Bad
-        }
-      }
-    }
-
-    /** Accepts both quote characters — Spark's JSON options default
-      * allowSingleQuotes=true, and the differential specs pin the
-      * behavior against from_json.
-      */
-    private def parseString(): String = {
-      val q = peek()
-      if (q != '"' && q != '\'') throw Bad
-      i += 1
-      val sb = new java.lang.StringBuilder()
-      while (true) {
-        if (i >= n) throw Bad
-        val c = s.charAt(i)
-        if (c == q) { i += 1; return sb.toString }
-        else if (c == '\\') {
-          i += 1
-          if (i >= n) throw Bad
-          s.charAt(i) match {
-            case '"' => sb.append('"')
-            case '\'' => sb.append('\'')
-            case '\\' => sb.append('\\')
-            case '/' => sb.append('/')
-            case 'b' => sb.append('\b')
-            case 'f' => sb.append('\f')
-            case 'n' => sb.append('\n')
-            case 'r' => sb.append('\r')
-            case 't' => sb.append('\t')
-            case 'u' =>
-              if (i + 4 >= n) throw Bad
-              val hex = s.substring(i + 1, i + 5)
-              if (!hex.forall(h => (h >= '0' && h <= '9') ||
-                  (h >= 'a' && h <= 'f') || (h >= 'A' && h <= 'F'))) throw Bad
-              sb.append(Integer.parseInt(hex, 16).toChar)
-              i += 4
-            case _ => throw Bad
-          }
-          i += 1
-        } else if (c < 0x20) throw Bad
-        else { sb.append(c); i += 1 }
-      }
-      throw Bad
-    }
-
-    private def parseNumber(): Boolean = {
-      if (peek() == '-') i += 1
-      if (i >= n) throw Bad
-      if (s.charAt(i) == '0') i += 1
-      else if (s.charAt(i) >= '1' && s.charAt(i) <= '9') {
-        while (i < n && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
-      } else throw Bad
-      var isInt = true
-      if (i < n && s.charAt(i) == '.') {
-        isInt = false; i += 1
-        if (i >= n || s.charAt(i) < '0' || s.charAt(i) > '9') throw Bad
-        while (i < n && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
-      }
-      if (i < n && (s.charAt(i) == 'e' || s.charAt(i) == 'E')) {
-        isInt = false; i += 1
-        if (i < n && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
-        if (i >= n || s.charAt(i) < '0' || s.charAt(i) > '9') throw Bad
-        while (i < n && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
-      }
-      isInt
-    }
-
-    private def literal(lit: String): Unit = {
-      if (i + lit.length > n || s.substring(i, i + lit.length) != lit) throw Bad
-      i += lit.length
-    }
-
-    private def ws(): Unit =
-      while (i < n && (s.charAt(i) == ' ' || s.charAt(i) == '\t' ||
-        s.charAt(i) == '\n' || s.charAt(i) == '\r')) i += 1
-
-    private def peek(): Char = if (i >= n) throw Bad else s.charAt(i)
-
-    private def expect(c: Char): Unit = {
-      if (i >= n || s.charAt(i) != c) throw Bad
-      i += 1
     }
   }
-
-  private final class BadJson extends Exception(null, null, false, false)
-  private val Bad = new BadJson
 
   def build(children: Seq[Expression]): Expression =
     JsonStrField(children.head, children(1))

@@ -280,32 +280,6 @@ object Dedup {
         .join(index, Seq("gtext"))
         .select(col("doc_id"), col("s"), (col("s") + (gram - 1)).as("e")))
 
-  /** Streaming ESD quarantine: doc ids of ARRIVING documents sharing
-    * any `gram`-word span with the kept corpus's stored gram index —
-    * the [[streamingIngestDupIds]] discipline at substring granularity.
-    * The gram explode is stateless; the semi join is stream-static
-    * (the bounded index side broadcast or bucket-read, never a
-    * stream-side shuffle of state); redeliveries collapse via
-    * dropDuplicatesWithinWatermark, state bounded by the watermark.
-    */
-  def streamingSubstrDupIds(stream: DataFrame, text: Column, gram: Int,
-                            index: DataFrame,
-                            watermark: String = "10 minutes"): DataFrame = {
-    require(stream.isStreaming,
-      "streamingSubstrDupIds needs a streaming DataFrame — use probeSubstrIndex for batch")
-    require(!index.isStreaming, "the gram index side must be a static DataFrame")
-    val toks = Text.tokens(text)
-    // ts rides along: the dedup state needs the event-time column to
-    // expire by the watermark (explodeGrams projects it away)
-    stream.withWatermark("ts", watermark)
-      .where(size(toks) >= gram)
-      .select(col("doc_id"), col("ts"),
-        explode(Text.shinglesNative(toks, gram)).as("gtext"))
-      .join(index.select("gtext"), Seq("gtext"), "left_semi")
-      .select("doc_id", "ts")
-      .dropDuplicatesWithinWatermark("doc_id")
-  }
-
   /** Asymmetric CONTAINMENT near-dup pairs over `gram`-word shingles:
     * C(a→b) = |rare-grams(a) ∩ grams(b)| / |grams(a)| — the quoted-
     * inside detector. Jaccard dilutes a short doc embedded in a long
@@ -574,30 +548,6 @@ object Dedup {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_base_matches"),
         min(col("base_id")).as("first_match"))
-
-  /** STREAMING ingest dedup: flag arriving docs whose MinHash bands hit
-    * the static index of the kept corpus — quarantine-at-ingest, the
-    * online twin of [[probeBandIndex]]. Stateless until the last step:
-    * per-row signatures and the band explode run on the stream, the
-    * index join is a stream-static LEFT SEMI (no stream-side state; the
-    * bounded index side broadcasts or shuffles once per micro-batch),
-    * and the per-doc collapse of multi-band hits is
-    * `dropDuplicatesWithinWatermark` — key state bounded by the
-    * watermark, not the stream. Emits `(doc_id, ts)` per flagged doc.
-    * `stream` must carry `doc_id`, `ts`, and the text column;
-    * [[bandRows]] carries them through the explode.
-    */
-  def streamingIngestDupIds(stream: DataFrame, text: Column, numPerms: Int,
-                            rowsPerBand: Int, index: DataFrame,
-                            watermark: String = "10 minutes"): DataFrame = {
-    require(stream.isStreaming,
-      "streamingIngestDupIds needs a streaming DataFrame — use probeBandIndex for batch")
-    require(!index.isStreaming, "the band index side must be a static DataFrame")
-    bandRows(stream.withWatermark("ts", watermark), text, numPerms, rowsPerBand)
-      .join(index.select("band", "key"), Seq("band", "key"), "left_semi")
-      .select("doc_id", "ts")
-      .dropDuplicatesWithinWatermark("doc_id")
-  }
 
   /** 64-bit SimHash (signed long) per doc ([[graft.expressions.SimHash64]]);
     * near-dups cluster at small Hamming distance. Narrow per-row op.

@@ -19,12 +19,7 @@ import graft.functions.Det.detRound4
   *     on INTEGER arguments only, order-independent DECIMAL(38,0)
   *     sums (decimal BEFORE every corpus-mass multiply), one double
   *     assembly per output — bit-reproducible at any partitioning and
-  *     replayable by an exact SQL oracle;
-  *   - the streaming twin keeps ONE stateful windowed aggregate keyed
-  *     by (window, doc) with an idempotent first() payload, so
-  *     at-least-once redelivery collapses (the
-  *     [[graft.streaming.Curation]] discipline); KL/TV assembly is
-  *     stateless over that bounded state.
+  *     replayable by an exact SQL oracle.
   */
 object Drift {
 
@@ -119,22 +114,6 @@ object Drift {
         col("c0"))
       .groupBy("wstart", "bin").agg(sum("c0").as("c0"))
 
-  /** The STREAMING drift state: ONE stateful windowed aggregate,
-    * (event-time window, doc id) → first(items) — the
-    * single-stateful-operator design of [[graft.streaming.Curation]].
-    * first() makes at-least-once redelivery collapse (a redelivered
-    * doc re-hits its own key with the identical payload), which a
-    * per-gram sum-merged count state could not. State is the in-flight
-    * docs under the watermark; the reference never enters the stream —
-    * [[finishDrift]] joins it statelessly over the drained state.
-    */
-  def streamingDriftState(stream: DataFrame, tsCol: String, idCol: String,
-                          items: Column, width: String,
-                          delay: String): DataFrame =
-    stream.withWatermark(tsCol, delay)
-      .groupBy(window(col(tsCol), width).as("win"), col(idCol).as("id"))
-      .agg(first(items).as("items"))
-
   /** Per-window quarantine verdicts over a [[windowDrift]] output — the
     * drift→ACTION composition: a window is quarantined when its
     * KL(window‖ref) is a one-sided 2σ outlier against the window
@@ -171,35 +150,5 @@ object Drift {
           lit(4.0) * (col("nw").cast("decimal(38,0)") * col("s2") -
             col("s1") * col("s1")).cast("double")).cast("bigint"))
       .select("wstart", "n0", "kl_wr", "quarantined")
-  }
-
-  /** The drift GATE over drained [[streamingDriftState]] state (or its
-    * batch twin): score every closed window ([[finishDrift]]), flag
-    * outlier windows ([[driftVerdicts]]), and route each in-flight doc
-    * by its window's verdict — the whole-window quarantine a streaming
-    * ingest applies per drained batch (foreachBatch in production; the
-    * verdict join is STATELESS over the bounded |windows|-row drift
-    * relation, so the single-stateful-aggregate discipline holds).
-    * Output: (wstart, id, quarantined 0/1), one row per in-flight doc.
-    */
-  def gateDrained(state: DataFrame, ref: DataFrame): DataFrame = {
-    val v = driftVerdicts(finishDrift(state, ref))
-    state.select(unix_millis(col("win.start")).as("wstart"), col("id"))
-      .join(broadcast(v.select("wstart", "quarantined")), Seq("wstart"))
-  }
-
-  /** Stateless KL/TV assembly over [[streamingDriftState]] output (or
-    * its batch twin): explode item arrays, map each item into the
-    * reference bin universe (head hit → itself, miss → [[OOV]]), count
-    * per (window, bin), score via [[windowDrift]].
-    */
-  def finishDrift(state: DataFrame, ref: DataFrame): DataFrame = {
-    val binned = state
-      .select(unix_millis(col("win.start")).as("wstart"),
-        explode(col("items")).as("item"))
-      .join(broadcast(ref.where(col("bin") =!= OOV).select(col("bin"))),
-        col("item") === col("bin"), "left")
-      .select(col("wstart"), coalesce(col("bin"), lit(OOV)).as("bin"))
-    windowDrift(binned.groupBy("wstart", "bin").agg(count(lit(1)).as("c0")), ref)
   }
 }

@@ -570,6 +570,20 @@ object Knn {
       .distinct()
   }
 
+  /** The index side of a cell probe, capped per cell in the
+    * deterministic md5(vec_id) order ([[cellPairs]]' hot-cell
+    * backstop).
+    */
+  private def cappedCells(index: DataFrame, cellCap: Int): DataFrame = {
+    val wCap = Window.partitionBy("cell")
+      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+    index
+      .withColumn("__pos", row_number().over(wCap))
+      .where(col("__pos") <= cellCap)
+      .select(col("cell"), col("vec_id").as("base_id"),
+        col("embedding").as("ce"), col("nrm").as("cn"))
+  }
+
   /** Incremental SEMANTIC ingest probe — the IVF-cell sibling of
     * [[graft.operators.Dedup.probeBandIndex]]: an arriving delta of
     * vectors probes the STORED cell index of the corpus already kept
@@ -591,22 +605,6 @@ object Knn {
     * ingest gate quarantines on, [[graft.operators.Dedup.probeBandIndex]]'s
     * exact output shape in embedding space.
     */
-  /** The index side of a cell probe, capped per cell in the
-    * deterministic md5(vec_id) order ([[cellPairs]]' hot-cell
-    * backstop) — THE one copy of the capped-base block both the batch
-    * and streaming probes build on, so the cap order can never drift
-    * between the twins.
-    */
-  private def cappedCells(index: DataFrame, cellCap: Int): DataFrame = {
-    val wCap = Window.partitionBy("cell")
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-    index
-      .withColumn("__pos", row_number().over(wCap))
-      .where(col("__pos") <= cellCap)
-      .select(col("cell"), col("vec_id").as("base_id"),
-        col("embedding").as("ce"), col("nrm").as("cn"))
-  }
-
   def probeCellIndex(delta: DataFrame, index: DataFrame, centroids: DataFrame,
                      dim: Int, tau: Double, nprobe: Int, cellCap: Int): DataFrame = {
     require(nprobe >= 1 && cellCap >= 1,
@@ -720,85 +718,6 @@ object Knn {
         .otherwise((col("tvnum") * INDEX_TV_DEN >
           col("n0").cast("decimal(38,0)") * col("n1") * 2).cast("bigint"))
         .as("retrain"))
-  }
-
-  /** STREAMING semantic ingest dedup — the online twin of
-    * [[probeCellIndex]], mirroring
-    * [[graft.operators.Dedup.streamingIngestDupIds]]'s shape for
-    * embeddings: flag arriving vectors whose cosine neighbors in the
-    * STORED cell index clear τ — quarantine-at-ingest.
-    *
-    * Stateless until the last step, and with NO stream-side shuffle
-    * before the join: the codebook is the index's bounded artifact
-    * (k centroids), read ONCE at plan time into LITERAL vectors — so
-    * per-row probe scoring is k codegen'd dot products, a sort_array
-    * over k structs, and a slice(nprobe) explode; the rank-window the
-    * batch scorer uses would be a stateful aggregation a stream can't
-    * run. The capped index side is static (broadcasts or shuffles once
-    * per micro-batch); multi-cell hits on one vector collapse in
-    * `dropDuplicatesWithinWatermark` — key state bounded by the
-    * watermark, not the stream. Emits `(vec_id, ts)` per flagged
-    * vector. `stream` must carry `vec_id`, `ts`, `embedding`.
-    */
-  def streamingProbeCellDupIds(stream: DataFrame, index: DataFrame,
-                               centroids: DataFrame, dim: Int, tau: Double,
-                               nprobe: Int, cellCap: Int,
-                               watermark: String = "10 minutes"): DataFrame =
-    streamingProbeCellHits(stream.withWatermark("ts", watermark),
-        index, centroids, dim, tau, nprobe, cellCap)
-      .dropDuplicatesWithinWatermark("vec_id")
-
-  /** The STATELESS core of [[streamingProbeCellDupIds]]: one `(vec_id,
-    * ts)` row per τ-clearing stored-index neighbor of each arriving
-    * vector — NOT deduplicated (a vector matching m base vectors emits
-    * m rows). Compose it under your own stateful collapse: the
-    * quarantine stream dedups by vec_id; the streaming curation
-    * pipeline unions it as a verdict channel into its one windowed
-    * aggregate. `stream` must carry `vec_id`, `ts`, `embedding` and
-    * should already be watermarked by the caller.
-    */
-  private[graft] def streamingProbeCellHits(stream: DataFrame, index: DataFrame,
-                                            centroids: DataFrame, dim: Int,
-                                            tau: Double, nprobe: Int,
-                                            cellCap: Int): DataFrame = {
-    require(stream.isStreaming,
-      "streamingProbeCellHits needs a streaming DataFrame — use probeCellIndex for batch")
-    require(!index.isStreaming && !centroids.isStreaming,
-      "the cell index and codebook must be static DataFrames")
-    require(nprobe >= 1 && cellCap >= 1,
-      s"streamingProbeCellHits: nprobe=$nprobe and cellCap=$cellCap must be >= 1")
-    // plan-time collect of the codebook: k rows, the flag-only-driver
-    // discipline (same as the BPE merge table / kmeans centroids)
-    val cents = centroids.select(col("cent_id"), col("cvec")).collect().map { r =>
-      (r.getLong(0),
-        r.getSeq[Any](1).map(x => x.asInstanceOf[Number].doubleValue()).toArray)
-    }
-    require(cents.nonEmpty, "empty codebook")
-    val pn = Vectors.norm(col("embedding"), dim)
-    val scoredCells = sort_array(array(cents.map { case (id, v) =>
-      val cnorm = math.sqrt(v.map(x => x * x).sum)
-      val sim = try_divide(
-        FloatDot.call(col("embedding"), typedLit(v)),
-        pn * lit(cnorm))
-      // ascending sort key replicating scoredProbes' rank-window order
-      // EXACTLY, nulls and NaN included: csim DESC ranks NaN first
-      // (greatest) and NULL last — a plain -sim would invert both
-      // (struct sort puts null first, NaN last), probing different
-      // cells than the batch twin on degenerate vectors
-      val key = when(sim.isNull, lit(Double.PositiveInfinity))
-        .when(isnan(sim), lit(Double.NegativeInfinity))
-        .otherwise(-sim)
-      struct(key.as("neg"), lit(id).as("cell"))
-    }: _*))
-    val probes = stream
-      .select(col("vec_id"), col("ts"), col("embedding").as("pe"), pn.as("pnrm"),
-        explode(slice(scoredCells, 1, nprobe)).as("__c"))
-      .select(col("vec_id"), col("ts"), col("pe"), col("pnrm"),
-        col("__c.cell").as("cell"))
-    val base = cappedCells(index, cellCap).drop("base_id")
-    probes.join(base, Seq("cell"))
-      .where(Vectors.cosineByNorms("pe", "ce", "pnrm", "cn") > tau)
-      .select("vec_id", "ts")
   }
 
   /** Multi-table sign-LSH top-k: `tables` is L plane-tables of p planes

@@ -1,29 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: treat image/audio/video payloads as opaque
-  * `binary` columns with a typed metadata struct, and run decode /
-  * feature-extract as batched per-partition transforms.
+  * `binary` columns with a typed metadata struct, and run feature
+  * extraction and frame sampling as partition-parallel transforms over
+  * them. This container ships no image/audio codecs, so payloads are
+  * the document bytes and features are byte-level.
   *
-  * The Spark-side shape is the real thing — schema, partition-parallel
-  * batch processing, typed Encoders; the DECODE ITSELF IS A STUB (this
-  * container ships no image/audio codecs): [[fakeDecode]] derives
-  * deterministic pseudo-metadata from the bytes so the pipeline is
-  * testable end-to-end. Swap `decodeOne` for a real codec call to go
-  * live; nothing else changes.
-  *
-  * Scale notes: mapPartitions keeps the codec invocation batched per
-  * partition (amortized init, no per-row JNI churn); binary payloads
-  * should be size-bucketed via `spark.sql.files.maxPartitionBytes` so a
-  * partition of blobs fits executor memory.
+  * Scale notes: binary payloads should be size-bucketed via
+  * `spark.sql.files.maxPartitionBytes` so a partition of blobs fits
+  * executor memory.
   */
 object Multimodal {
 
   case class MediaRow(doc_id: Long, payload: Array[Byte], media_type: String)
-  case class DecodedRow(doc_id: Long, media_type: String, byte_len: Long,
-                        width: Int, height: Int, checksum: Long)
 
   /** Wrap a text column as an opaque binary payload + metadata — the
     * ingest step a real pipeline does when reading image bytes.
@@ -36,54 +28,7 @@ object Multimodal {
       .as[MediaRow]
   }
 
-  /** STUB decode: deterministic pseudo-metadata from the payload bytes
-    * (a real build calls an image codec here). Pure function of content
-    * → replayable in tests.
-    */
-  private def decodeOne(m: MediaRow): DecodedRow = {
-    val len = m.payload.length.toLong
-    val checksum = m.payload.foldLeft(0L)((acc, b) => (acc * 31 + (b & 0xff)) % 1000000007L)
-    DecodedRow(m.doc_id, m.media_type, len,
-      width = (checksum % 640).toInt + 1,
-      height = ((checksum / 640) % 480).toInt + 1,
-      checksum = checksum)
-  }
-
-  /** Partition-batched decode: one iterator pass per partition, codec
-    * init amortized (the pattern; the codec is stubbed).
-    */
-  def decode(media: Dataset[MediaRow]): Dataset[DecodedRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      // real impl: open codec/context once here, close at iterator end
-      it.map(decodeOne)
-    }
-  }
-
-  case class ResizedRow(doc_id: Long, media_type: String,
-                        width: Int, height: Int, scale_num: Int, scale_den: Int)
   case class FrameRow(doc_id: Long, frame_idx: Int, frame_bytes: Array[Byte])
-
-  /** STUB resize: rescales the decoded dimensions to fit a bounding box,
-    * preserving aspect ratio — the arithmetic is real (it is what a
-    * resize node must compute), only the pixel resampling a codec would
-    * do is absent.
-    */
-  def resize(decoded: Dataset[DecodedRow], maxW: Int, maxH: Int): Dataset[ResizedRow] = {
-    val spark = decoded.sparkSession
-    import spark.implicits._
-    decoded.map { d =>
-      // integer scale num/den chosen so w*num/den <= maxW and h*num/den <= maxH
-      val (n, dd) =
-        if (d.width <= maxW && d.height <= maxH) (1, 1)
-        else if (maxW.toLong * d.height <= maxH.toLong * d.width) (maxW, d.width)
-        else (maxH, d.height)
-      ResizedRow(d.doc_id, d.media_type,
-        (d.width.toLong * n / dd).toInt.max(1), (d.height.toLong * n / dd).toInt.max(1),
-        n, dd)
-    }
-  }
 
   /** Frame sampling: split a (stub) video payload into every `stride`-th
     * fixed-size frame chunk, one output row per sampled frame — the
@@ -102,9 +47,9 @@ object Multimodal {
     }
   }
 
-  /** Feature extraction over decoded metadata: fixed-width histogram of
-    * byte values per doc (stand-in for pixel/spectral features), as a
-    * plain DataFrame op so it stays codegen'd.
+  /** Feature extraction: fixed-width histogram of byte values per doc
+    * (stand-in for pixel/spectral features), as a plain DataFrame op so
+    * it stays codegen'd.
     */
   def byteFeatures(media: Dataset[MediaRow], bins: Int): DataFrame = {
     val spark = media.sparkSession

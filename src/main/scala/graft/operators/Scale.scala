@@ -2,14 +2,14 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scale patterns that change complexity class at cluster size — the
-  * 100 TB toolbox the small fixtures can't force but the judge grades:
-  * skew salting, decomposed distinct, bucketed co-located joins.
+  * 100 TB toolbox the small fixtures can't force: skew salting and the
+  * session memo that stages shared subtrees once.
   */
 object Scale {
 
@@ -39,38 +39,6 @@ object Scale {
       .where(col("__rn") <= k)
       .drop("__rn")
   }
-
-  /** Exact distinct-count that decomposes: dedupe (dim, value) pairs
-    * first (partial-aggregates map-side, spreads a hot dim across
-    * value-hash partitions), then count per dim. `count_distinct` by
-    * contrast drags every occurrence of a hot key to one reducer.
-    */
-  def scalableCountDistinct(df: DataFrame, dim: Column, value: Column): DataFrame =
-    df.select(dim.as("dim"), value.as("v"))
-      .where(col("v").isNotNull)   // COUNT(DISTINCT) ignores NULLs
-      .distinct()
-      .groupBy("dim").agg(count(lit(1)).as("n_distinct"))
-
-  /** Bucketed write: pre-shuffles once at write time so every future
-    * equi-join/aggregation on `keys` is exchange-free. The read side
-    * proves it — see ScaleSpec's no-Exchange plan assertion.
-    */
-  def writeBucketed(df: DataFrame, table: String, keys: Seq[String], nBuckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(nBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Hive-style partitioned layout: at 100 TB the date/category partition
-    * column is the first pruning lever — a filter on it skips whole
-    * directories before any IO (see ScaleSpec's PartitionFilters
-    * assertion).
-    */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
 
   /** Session conf selecting how iterative-loop stages materialize. */
   val ReliableCheckpointConf = "spark.graft.checkpoint.reliable"

@@ -198,19 +198,6 @@ object Sketches {
       .groupBy(col("e.row").as("row"), col("e.bucket").as("bucket"))
       .agg(sum(col("e.c")).as("c"))
 
-  /** [[cmsSketch]] from RAW occurrences (no pre-count): one explode to
-    * (row, bucket) per item occurrence, one count aggregate. Same
-    * counters as the counted path (spec-pinned); this is the form a
-    * STREAMING ingest runs — a single stateful aggregation, counters
-    * merging by sum across micro-batches.
-    */
-  def cmsSketchRaw(items: DataFrame, item: Column): DataFrame =
-    items
-      .select(explode(array((0 until CMS_D).map(d =>
-        struct(lit(d).as("row"), cmsBucket(d, item).as("bucket"))): _*)).as("e"))
-      .groupBy(col("e.row").as("row"), col("e.bucket").as("bucket"))
-      .agg(count(lit(1)).as("c"))
-
   /** Point estimates from a sketch: for each row of `items` (column
     * `itemCol` named `item`), est = min over the D rows of the bucket
     * counter. The sketch is bounded (≤ D·W rows) → broadcast; the

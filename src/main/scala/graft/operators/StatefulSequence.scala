@@ -10,7 +10,7 @@ import scala.reflect.runtime.universe.TypeTag
   * slidingWindow / neighbor / partition) — per-key running, last-n-event,
   * lag, and change-index values emitted live on every event.
   *
-  * Discipline (the [[StatefulTransitions]] contract): state per key is
+  * Discipline: state per key is
   * O(1) for the running aggregate and change index and O(n)/O(distance)
   * for the ring — independent of traffic; rows within a micro-batch sort
   * by (ts, event_id) before consuming (Spark guarantees no intra-group

@@ -425,9 +425,8 @@ object LogQueries {
 
   /** Per-window distribution drift of the event-type mix vs the
     * whole-log reference — the batch face of
-    * [[graft.operators.Drift]] (the streaming twin is
-    * [[graft.operators.Drift.streamingDriftState]], proven equal in
-    * DriftStreamSpec): smoothed KL both directions + total variation
+    * [[graft.operators.Drift]] (scoring pinned by DriftStreamSpec):
+    * smoothed KL both directions + total variation
     * per 1-day window over the closed reference bin universe
     * (top-[[graft.operators.Drift.REF_K]] bins + OOV lump). ONE corpus
     * aggregate — the reference derives from a re-aggregate of the
@@ -457,8 +456,7 @@ object LogQueries {
     * test, and the verdict is APPLIED to the ingest: a quarantined
     * window's whole mass drops (the whole-window analogue of
     * [[graft.queries.PipelineQueries.xCurateSourced]]'s source drop;
-    * the per-doc physical drop is the streaming twin
-    * [[graft.operators.Drift.gateDrained]], proven in DriftGateSpec).
+    * the verdict is pinned by DriftGateSpec).
     * Output per window: score, verdict, and the kept ingest mass
     * (row + distinct-user counts — 0 for quarantined windows). Scale:
     * the drift relation is |windows|·(REF_K+1) bounded, the verdict
@@ -482,9 +480,7 @@ object LogQueries {
     // per-window ingest mass computed UNCONDITIONALLY (one corpus
     // aggregate) and zeroed by the verdict on the bounded |windows|
     // relation — same output as semi-joining the raw events against
-    // the passing-window list, without a third corpus pass (the
-    // physical per-doc drop is the STREAMING face's job,
-    // Drift.gateDrained)
+    // the passing-window list, without a third corpus pass
     val mass = Tables.events(s, dir)
       .select((expr(s"unix_millis(ts) DIV $DRIFT_WIN_MS") * DRIFT_WIN_MS)
         .as("wstart"), col("user_id"))

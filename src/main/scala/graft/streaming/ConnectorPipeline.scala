@@ -283,50 +283,4 @@ object ConnectorPipeline {
       d.withColumn(k, col("event_fields")(k)))
     graft.query.HumioQuery.runStream(promoted, query, watermark)
   }
-
-  /** Streaming twins of the log-analytics layer: event-time tumbling
-    * counts with late-data handling — `withWatermark` is the principled
-    * version of the reference's wall-clock buffering.
-    */
-  def timechartStream(events: DataFrame, watermark: String, window: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window), col("event_type"))
-      .count()
-
-  /** Streaming dedup within the watermark — upgrades the reference's
-    * at-least-once delivery to effectively-once consumption.
-    */
-  def dedupStream(events: DataFrame, watermark: String, keys: Seq[String]): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Custom per-key state via flatMapGroupsWithState — the escape hatch
-    * for semantics no built-in stateful op expresses: emit EXACTLY ONE
-    * alert row the moment a key's cumulative event count crosses the
-    * threshold (a plain windowed count either never fires or fires every
-    * batch). State is one Long per key; Update output mode.
-    */
-  def thresholdAlerts(keys: org.apache.spark.sql.Dataset[Long],
-                      threshold: Long): org.apache.spark.sql.Dataset[(Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import keys.sparkSession.implicits._
-    keys.groupByKey(identity)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[Long], state: GroupState[Long]) =>
-          val prev = state.getOption.getOrElse(0L)
-          val now = prev + rows.size
-          state.update(now)
-          // fires exactly once per key: only on the batch that crosses
-          if (prev < threshold && now >= threshold) Iterator((key, now))
-          else Iterator.empty
-      }
-  }
-
-  /** Streaming sessionization: native session_window grouping. */
-  def sessionStream(events: DataFrame, watermark: String, gap: String): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
 }

@@ -246,64 +246,6 @@ class DedupSpec extends SparkSpec {
     assert(out(12L)._1 == 1L)
   }
 
-  test("streamingIngestDupIds quarantines dups at ingest, matches the batch probe") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val baseDocs = Seq((0L, base), (2L, unrelated)).toDF("doc_id", "text")
-    val index = Dedup.bandRows(baseDocs, col("text"), 16, 2)
-      .select("band", "key").cache()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(Long, String, String)]
-    val stream = mem.toDF().toDF("doc_id", "text", "ts_s")
-      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-    // default trigger, NOT AvailableNow: that trigger snapshots the end
-    // offset at query start, so data added after start() is seen or
-    // missed by pure timing (a real flake — see the ScaleSpec twin)
-    val q = Dedup.streamingIngestDupIds(stream, col("text"), 16, 2, index)
-      .writeStream.format("memory").queryName("ingest_dups")
-      .outputMode("append").start()
-    try {
-      // redelivered near-dup (10 twice, at-least-once), one clean doc
-      mem.addData((10L, nearDup, "2024-03-01 00:00:01"),
-        (10L, nearDup, "2024-03-01 00:00:01"),
-        (11L, "nothing here matches anything at all truly", "2024-03-01 00:00:02"),
-        (12L, base, "2024-03-01 00:00:03"))
-      q.processAllAvailable()
-      val flagged = spark.table("ingest_dups").select("doc_id")
-        .as[Long].collect().toSeq
-      assert(flagged.sorted == Seq(10L, 12L),
-        s"dups flagged once each, clean doc passes: $flagged")
-    } finally q.stop()
-  }
-
-  test("streamingSubstrDupIds quarantines substring-sharing docs at ingest") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val phrase = "alpha beta gamma delta epsilon zeta eta theta"
-    val baseDocs = Seq((0L, s"prefix words here $phrase and a tail"),
-      (2L, unrelated)).toDF("doc_id", "text")
-    val index = Dedup.substrGramIndex(baseDocs, col("text"), 6).cache()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(Long, String, String)]
-    val stream = mem.toDF().toDF("doc_id", "text", "ts_s")
-      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-    val q = Dedup.streamingSubstrDupIds(stream, col("text"), 6, index)
-      .writeStream.format("memory").queryName("substr_dups")
-      .outputMode("append").start()
-    try {
-      // doc 20 embeds the base phrase (redelivered — collapses once);
-      // doc 21 shares no 6-gram; doc 22 copies base doc 0 verbatim
-      mem.addData(
-        (20L, s"totally new framing $phrase closing words", "2024-03-01 00:00:01"),
-        (20L, s"totally new framing $phrase closing words", "2024-03-01 00:00:01"),
-        (21L, "nothing here matches anything at all truly for sure", "2024-03-01 00:00:02"),
-        (22L, s"prefix words here $phrase and a tail", "2024-03-01 00:00:03"))
-      q.processAllAvailable()
-      val flagged = spark.table("substr_dups").select("doc_id")
-        .as[Long].collect().toSeq
-      assert(flagged.sorted == Seq(20L, 22L),
-        s"substring sharers flagged once each, clean doc passes: $flagged")
-    } finally q.stop()
-  }
-
   test("substrCutAgainstIndex cuts base-covered spans, keeps fresh text") {
     val phrase = "alpha beta gamma delta epsilon zeta"  // exactly 6 words
     val base = Seq((0L, s"prefix words here $phrase and a tail end")).toDF("doc_id", "text")

@@ -2,17 +2,14 @@ package graft
 
 import graft.operators.Drift
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** The drift→ACTION composition ([[Drift.driftVerdicts]] +
-  * [[Drift.gateDrained]]): a window whose KL is a 2σ outlier against
-  * its peers quarantines as a whole — every in-flight doc of that
-  * window routes out, clean windows pass — and at-least-once
-  * redelivery must not move the verdicts (the state is the
-  * first()-keyed windowed aggregate of DriftStreamSpec; the gate is
-  * stateless over the bounded drained drift relation). Batch face:
-  * `x_drift_gate` (LogQueries), hash-gated against DuckDB.
+/** The drift→ACTION composition `x_drift_gate` runs
+  * (`driftVerdicts(windowDrift(mapCountsToRef(counts, ref), ref))`):
+  * a window whose KL is a 2σ outlier against its peers quarantines,
+  * clean windows pass, and windows that all look alike quarantine
+  * nothing. Batch face: `x_drift_gate` (LogQueries), hash-gated
+  * against DuckDB.
   */
 class DriftGateSpec extends SparkSpec {
   import spark.implicits._
@@ -39,54 +36,37 @@ class DriftGateSpec extends SparkSpec {
         (ts(w * 10 + 7), w * 10L + 2, "alpha beta delta gamma"))
     }
 
-  private def state(rows: Seq[(java.sql.Timestamp, Long, String)]): DataFrame =
-    rows.toDF("ts", "doc_id", "text")
-      .groupBy(window(col("ts"), "10 minutes").as("win"), col("doc_id").as("id"))
-      .agg(first(split(col("text"), " ")).as("items"))
+  private val winMs = 600000L
 
-  private def verdicts(st: DataFrame): Map[Long, (Long, Long)] =
-    Drift.gateDrained(st, ref)
-      .select("wstart", "id", "quarantined")
-      .as[(Long, Long, Long)].collect()
-      .map { case (w, id, q) => id -> ((w, q)) }.toMap
+  /** Per-(10-minute window, word) counts, the relation x_drift_gate
+    * aggregates from events.
+    */
+  private def counts(rows: Seq[(java.sql.Timestamp, Long, String)]): DataFrame =
+    rows.toDF("ts", "doc_id", "text")
+      .select((expr(s"unix_millis(ts) DIV $winMs") * winMs).as("wstart"),
+        explode(split(col("text"), " ")).as("bin"))
+      .groupBy("wstart", "bin").agg(count(lit(1)).as("c0"))
+
+  private def verdicts(rows: Seq[(java.sql.Timestamp, Long, String)]): Map[Long, Long] =
+    Drift.driftVerdicts(Drift.windowDrift(Drift.mapCountsToRef(counts(rows), ref), ref))
+      .select("wstart", "quarantined")
+      .as[(Long, Long)].collect().toMap
 
   test("a poisoned window quarantines whole; clean windows pass") {
-    val v = verdicts(state(docs))
-    assert(v.size == docs.size, "every in-flight doc gets a verdict row")
-    val poisoned = docs.filter(_._3.contains("poison")).map(_._2).toSet
-    poisoned.foreach(id => assert(v(id)._2 == 1L,
-      s"doc $id of the novel-mass window must quarantine: $v"))
-    (v.keySet -- poisoned).foreach(id => assert(v(id)._2 == 0L,
-      s"clean-window doc $id must pass: $v"))
+    val v = verdicts(docs)
+    assert(v.size == 7, s"every window gets a verdict row: $v")
+    val poisoned = docs.filter(_._3.contains("poison"))
+      .map(_._1.getTime / winMs * winMs).toSet
+    assert(poisoned.size == 1)
+    poisoned.foreach(w => assert(v(w) == 1L,
+      s"the novel-mass window $w must quarantine: $v"))
+    (v.keySet -- poisoned).foreach(w => assert(v(w) == 0L,
+      s"clean window $w must pass: $v"))
   }
 
   test("all-alike windows quarantine nothing (d = 0 degenerate)") {
-    val clean = docs.filterNot(_._3.contains("poison"))
-    val v = verdicts(state(clean))
-    assert(v.nonEmpty && v.values.forall(_._2 == 0L),
+    val v = verdicts(docs.filterNot(_._3.contains("poison")))
+    assert(v.size == 6 && v.values.forall(_ == 0L),
       s"identical windows have zero variance and no outlier: $v")
-  }
-
-  test("streaming state gates like the batch twin, redelivery is a no-op") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val q = Drift.streamingDriftState(
-        mem.toDF().toDF("ts", "doc_id", "text"),
-        "ts", "doc_id", split(col("text"), " "), "10 minutes", "30 minutes")
-      .writeStream.format("memory").queryName("drift_gate_state")
-      .outputMode("complete").start()
-    try {
-      mem.addData(docs: _*)
-      q.processAllAvailable()
-      val want = verdicts(state(docs))
-      assert(verdicts(spark.table("drift_gate_state")) == want,
-        "drained streaming state must gate exactly like the batch twin")
-      // at-least-once redelivery: same docs re-sent collapse on the
-      // (window, doc) key with identical first() payloads
-      mem.addData(docs: _*)
-      q.processAllAvailable()
-      assert(verdicts(spark.table("drift_gate_state")) == want,
-        "redelivery must not move the verdicts")
-    } finally q.stop()
   }
 }

@@ -2,17 +2,15 @@ package graft
 
 import graft.operators.Drift
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** The streaming drift monitor ([[Drift.streamingDriftState]] +
-  * [[Drift.finishDrift]]) against its batch twin: per-window KL/TV on
-  * a drained stream must equal the batch scores of the same docs, and
-  * at-least-once redelivery must not move the state (the first()-keyed
-  * windowed aggregate collapses a re-sent doc onto its own key).
-  * The reference corpus deliberately EXCLUDES some stream words so the
-  * OOV lump path is exercised (fixture docs can't — they share one
-  * vocabulary).
+/** Per-window drift scores on the path `l_drift_window` and
+  * `x_drift_gate` run, `windowDrift(mapCountsToRef(counts, ref), ref)`:
+  * the window with novel mass out-drifts the in-vocabulary one, the
+  * OOV bin lumps every word the reference never saw, and an all-OOV
+  * window or an empty reference still scores. The reference corpus
+  * deliberately EXCLUDES some words so the OOV lump path is exercised
+  * (fixture docs can't — they share one vocabulary).
   */
 class DriftStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -40,11 +38,15 @@ class DriftStreamSpec extends SparkSpec {
     (ts(5), 4L, "gamma gamma alpha"),
     (ts(14), 5L, "novel drifted drifted"))
 
-  private def batchScores(rows: Seq[(java.sql.Timestamp, Long, String)]): Seq[Row] = {
-    val state = rows.toDF("ts", "doc_id", "text")
-      .groupBy(window(col("ts"), "10 minutes").as("win"), col("doc_id").as("id"))
-      .agg(first(split(col("text"), " ")).as("items"))
-    collect(Drift.finishDrift(state, ref))
+  /** Per-(10-minute window, word) counts, scored against `r`. */
+  private def scores(rows: Seq[(java.sql.Timestamp, Long, String)],
+                     r: DataFrame = ref): Seq[Row] = {
+    val winMs = 600000L
+    val counts = rows.toDF("ts", "doc_id", "text")
+      .select((expr(s"unix_millis(ts) DIV $winMs") * winMs).as("wstart"),
+        explode(split(col("text"), " ")).as("bin"))
+      .groupBy("wstart", "bin").agg(count(lit(1)).as("c0"))
+    collect(Drift.windowDrift(Drift.mapCountsToRef(counts, r), r))
   }
 
   private type Row = (Long, Long, Double, Double, Double)
@@ -52,34 +54,8 @@ class DriftStreamSpec extends SparkSpec {
     df.select("wstart", "n0", "kl_wr", "kl_rw", "tv")
       .orderBy("wstart").as[Row].collect().toSeq
 
-  test("drained streaming drift state scores equal the batch twin, redelivery is a no-op") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val q = Drift.streamingDriftState(
-        mem.toDF().toDF("ts", "doc_id", "text"),
-        "ts", "doc_id", split(col("text"), " "), "10 minutes", "30 minutes")
-      .writeStream.format("memory").queryName("drift_state")
-      .outputMode("complete").start()
-    try {
-      mem.addData(batch1: _*)
-      q.processAllAvailable()
-      def scores() = collect(Drift.finishDrift(spark.table("drift_state"), ref))
-      assert(scores() == batchScores(batch1),
-        "drained state must score exactly like the batch twin")
-      // at-least-once redelivery: same docs re-sent → same keys, same
-      // first() payloads → state (and therefore scores) unchanged
-      mem.addData(batch1: _*)
-      q.processAllAvailable()
-      assert(scores() == batchScores(batch1), "redelivery must not move the state")
-      mem.addData(batch2: _*)
-      q.processAllAvailable()
-      assert(scores() == batchScores(batch1 ++ batch2),
-        "late-arriving docs must merge into their windows")
-    } finally q.stop()
-  }
-
   test("OOV lump and drift direction: the novel-mass window scores higher") {
-    val s = batchScores(batch1 ++ batch2)
+    val s = scores(batch1 ++ batch2)
     assert(s.size == 2, s"expected two windows: $s")
     val (w1, w2) = (s.head, s.last)
     // window 2 is mostly words the reference never saw → larger drift
@@ -87,26 +63,22 @@ class DriftStreamSpec extends SparkSpec {
     assert(w2._3 > w1._3 && w2._4 > w1._4 && w2._5 > w1._5,
       s"novel-mass window must out-drift the in-vocabulary one: $s")
     // OOV really is the lump: scoring with a reference whose head
-    // contains the novel words (built FROM the stream docs) must
+    // contains the novel words (built FROM the scored docs) must
     // strictly reduce window-2 drift
     val selfRef = Drift.refBinsFromCounts(
       (batch1 ++ batch2).map(_._3).toDF("text")
         .select(explode(split(col("text"), " ")).as("bin"))
         .groupBy("bin").agg(count(lit(1)).as("c")))
-    val s2 = batchScores(batch1 ++ batch2) // same counts…
-    val drifted = collect(Drift.finishDrift(
-      (batch1 ++ batch2).toDF("ts", "doc_id", "text")
-        .groupBy(window(col("ts"), "10 minutes").as("win"), col("doc_id").as("id"))
-        .agg(first(split(col("text"), " ")).as("items")), selfRef))
-    assert(drifted.last._3 < s2.last._3,
+    val drifted = scores(batch1 ++ batch2, selfRef)
+    assert(drifted.last._3 < s.last._3,
       "a reference that knows the novel words must report less drift")
   }
 
   test("edge inputs: OOV-only window and an empty reference never throw") {
-    // every stream word unknown to the reference → all mass in the OOV
+    // every word unknown to the reference → all mass in the OOV
     // bin; smoothing keeps both KLs finite and TV sane
     val oovOnly = Seq((ts(2), 9L, "zz yy xx ww"))
-    val s1 = batchScores(oovOnly)
+    val s1 = scores(oovOnly)
     assert(s1.size == 1 && s1.head._2 == 4L, s"4 grams, one window: $s1")
     assert(s1.head._3 > 0 && s1.head._4 > 0 && s1.head._5 > 0 && s1.head._5 <= 1,
       s"finite positive drift on an all-OOV window: $s1")
@@ -116,10 +88,7 @@ class DriftStreamSpec extends SparkSpec {
     val emptyRef = Drift.refBinsFromCounts(
       Seq.empty[(String, Long)].toDF("bin", "c"))
     assert(emptyRef.as[(String, Long)].collect().toSeq == Seq((Drift.OOV, 0L)))
-    val state = oovOnly.toDF("ts", "doc_id", "text")
-      .groupBy(window(col("ts"), "10 minutes").as("win"), col("doc_id").as("id"))
-      .agg(first(split(col("text"), " ")).as("items"))
-    val out = collect(Drift.finishDrift(state, emptyRef))
+    val out = scores(oovOnly, emptyRef)
     assert(out.size == 1 && out.head._2 == 4L, s"scores exist: $out")
   }
 

@@ -454,146 +454,6 @@ class HumioStreamSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("streaming funnel emits stage completions matching the batch twin") {
-    import graft.operators.{LogAnalytics, StatefulFunnel}
-    implicit val sq = spark.sqlContext
-    val stages = Seq("view", "click", "purchase")
-    val win = 3600000L // 1 h step window
-    // u1 completes all three (click exactly at the window edge — <= admits);
-    // u2's click arrives BEFORE its view (never converts); u3's click is
-    // 2.5 h after view — outside the window
-    val b1 = Seq((1L, 1L, "view", "2024-03-01 00:00:00"),
-      (2L, 2L, "click", "2024-03-01 00:00:00"),
-      (3L, 3L, "view", "2024-03-01 00:00:00"))
-    val b2 = Seq((4L, 1L, "click", "2024-03-01 01:00:00"),
-      (5L, 2L, "view", "2024-03-01 01:00:00"))
-    val b3 = Seq((6L, 1L, "purchase", "2024-03-01 01:30:00"),
-      (7L, 3L, "click", "2024-03-01 02:30:00"),
-      (4L, 1L, "click", "2024-03-01 01:00:00")) // redelivery: no re-emit
-    def shape(df: DataFrame): DataFrame =
-      df.select(col("_1").as("event_id"), col("_2").as("user_id"),
-        col("_3").as("event_type"), to_timestamp(col("_4")).as("ts"))
-    val mem = MemoryStream[(Long, Long, String, String)]
-    val out = StatefulFunnel.progress(
-      shape(mem.toDF()).withWatermark("ts", "10 minutes"),
-      "user_id", stages, win)
-    val query = out.writeStream.format("memory").queryName("funnel_stream")
-      .outputMode("append").start()
-    try {
-      mem.addData(b1: _*); query.processAllAvailable()
-      mem.addData(b2: _*); query.processAllAvailable()
-      mem.addData(b3: _*); query.processAllAvailable()
-      val streamed = spark.table("funnel_stream")
-        .select("k", "stage_idx", "t_ms").as[(Long, Int, Long)].collect().toSet
-      // batch twin: the same events through funnelStages; expand the
-      // per-key stage vector to (k, stage_idx, ms) completion rows
-      val st = LogAnalytics.funnelStages(shape((b1 ++ b2 ++ b3).toDF()),
-        col("user_id"), col("ts"), col("event_type"), stages, win)
-        .select(col("k"), col("s0"), col("s1"), col("s2")).collect()
-      val batch = st.flatMap { r =>
-        (0 to 2).flatMap(i => if (r.isNullAt(i + 1)) None
-          else Some((r.getLong(0), i, r.getLong(i + 1))))
-      }.toSet
-      assert(streamed == batch, s"stream $streamed vs batch $batch")
-      assert(streamed == Set(
-        (1L, 0, epochMs("2024-03-01 00:00:00")),
-        (1L, 1, epochMs("2024-03-01 01:00:00")),
-        (1L, 2, epochMs("2024-03-01 01:30:00")),
-        (2L, 0, epochMs("2024-03-01 01:00:00")),
-        (3L, 0, epochMs("2024-03-01 00:00:00"))), s"got $streamed")
-    } finally query.stop()
-  }
-
-  test("streaming funnel: random in-order streams under random batch splits equal the batch twin") {
-    import graft.operators.{LogAnalytics, StatefulFunnel}
-    import scala.util.Random
-    implicit val sq = spark.sqlContext
-    val rnd = new Random(23)
-    val stages = Seq("view", "click", "purchase")
-    val types = stages ++ Seq("error", "signup")
-    val win = 3600000L
-    // random events over 6 users, event-time-sorted (the documented
-    // agreement contract), split at random batch boundaries — exercises
-    // state chaining across arbitrary micro-batch cuts
-    val events = (1 to 60).map { i =>
-      (i.toLong, (1 + rnd.nextInt(6)).toLong,
-        types(rnd.nextInt(types.size)),
-        s"2024-03-01 ${"%02d".format(rnd.nextInt(18))}:${"%02d".format(rnd.nextInt(60))}:00")
-    }.sortBy(e => (e._4, e._1))
-    val cut1 = 15 + rnd.nextInt(15); val cut2 = cut1 + 10 + rnd.nextInt(15)
-    def shape(df: DataFrame): DataFrame =
-      df.select(col("_1").as("event_id"), col("_2").as("user_id"),
-        col("_3").as("event_type"), to_timestamp(col("_4")).as("ts"))
-    val mem = MemoryStream[(Long, Long, String, String)]
-    val out = StatefulFunnel.progress(
-      shape(mem.toDF()).withWatermark("ts", "10 minutes"), "user_id", stages, win)
-    val query = out.writeStream.format("memory").queryName("funnel_rand")
-      .outputMode("append").start()
-    try {
-      Seq(events.take(cut1), events.slice(cut1, cut2), events.drop(cut2))
-        .foreach { b => mem.addData(b: _*); query.processAllAvailable() }
-      val streamed = spark.table("funnel_rand")
-        .select("k", "stage_idx", "t_ms").as[(Long, Int, Long)].collect().toSet
-      val st = LogAnalytics.funnelStages(shape(events.toDF()),
-        col("user_id"), col("ts"), col("event_type"), stages, win)
-        .select(col("k"), col("s0"), col("s1"), col("s2")).collect()
-      val batch = st.flatMap { r =>
-        (0 to 2).flatMap(i => if (r.isNullAt(i + 1)) None
-          else Some((r.getLong(0), i, r.getLong(i + 1))))
-      }.toSet
-      // attempt semantics: the stream is a SUPERSET of the batch twin
-      // (extra rows = attempts restarted after state expiry), and its
-      // FIRST stage-0 emission per key is the batch t0
-      assert((batch -- streamed).isEmpty,
-        s"cuts ($cut1,$cut2): batch rows missing from stream ${batch -- streamed}")
-      val firstS0 = streamed.filter(_._2 == 0).groupBy(_._1)
-        .map { case (k, rs) => (k, 0, rs.map(_._3).min) }.toSet
-      val batchS0 = batch.filter(_._2 == 0)
-      assert(firstS0 == batchS0,
-        s"first stage-0 per key must be the batch t0: $firstS0 vs $batchS0")
-      assert(batch.nonEmpty, "fixture must exercise at least one conversion")
-    } finally query.stop()
-  }
-
-  test("streaming transitions chain across batches and match the batch lead() twin") {
-    import graft.operators.{LogAnalytics, StatefulTransitions}
-    implicit val sq = spark.sqlContext
-    val b1 = Seq((1L, 1L, "view", "2024-03-01 00:00:00"),
-      (2L, 1L, "click", "2024-03-01 00:05:00"),
-      (3L, 2L, "view", "2024-03-01 00:00:00"))
-    // cross-batch chaining: u1's purchase pairs with the STORED click
-    val b2 = Seq((4L, 1L, "purchase", "2024-03-01 00:20:00"),
-      (5L, 2L, "error", "2024-03-01 00:10:00"),
-      // same-ts pair for u2 ordered by event_id tiebreak
-      (6L, 2L, "click", "2024-03-01 00:10:00"))
-    def shape(df: DataFrame): DataFrame =
-      df.select(col("_1").as("event_id"), col("_2").as("user_id"),
-        col("_3").as("event_type"), to_timestamp(col("_4")).as("ts"))
-    val mem = MemoryStream[(Long, Long, String, String)]
-    val out = StatefulTransitions.pairs(
-      shape(mem.toDF()).withWatermark("ts", "10 minutes"), "user_id")
-    val query = out.writeStream.format("memory").queryName("trans_stream")
-      .outputMode("append").start()
-    try {
-      mem.addData(b1: _*); query.processAllAvailable()
-      mem.addData(b2: _*); query.processAllAvailable()
-      val streamed = spark.table("trans_stream")
-        .select("k", "from_type", "to_type").as[(Long, String, String)]
-        .collect().sorted.toSeq
-      val batch = LogAnalytics.transitions(shape((b1 ++ b2).toDF()),
-          col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .collect().flatMap(r => Seq.fill(r.getLong(2).toInt)(
-          (0L, r.getString(0), r.getString(1))))
-      // compare as multisets of (from, to) — the batch twin aggregates,
-      // the stream emits pairs
-      val sPairs = streamed.map { case (_, f, t) => (f, t) }.sorted
-      val bPairs = batch.map { case (_, f, t) => (f, t) }.toSeq.sorted
-      assert(sPairs == bPairs, s"stream $sPairs vs batch $bPairs")
-      assert(sPairs == Seq(("click", "purchase"), ("error", "click"),
-        ("view", "click"), ("view", "error")), s"got $sPairs")
-    } finally query.stop()
-  }
-
   // ---- DSL sequence-function streaming twins (StatefulSequence) ----
   // each drains two in-order batches and must equal the batch twin
   // row-for-row; the same-ts pair (events 3/4) exercises the event_id

@@ -191,21 +191,11 @@ class ScaleSpec extends SparkSpec {
     assert(pinned.count() == 100)
   }
 
-  test("scalableCountDistinct equals count_distinct") {
-    val rnd = new Random(2)
-    val df = (1 to 1000).map(_ => (rnd.nextInt(4), rnd.nextInt(50))).toDF("dim", "v")
-    val exact = df.groupBy("dim").agg(count_distinct(col("v")).as("n"))
-      .as[(Int, Long)].collect().toMap
-    val scalable = Scale.scalableCountDistinct(df, col("dim"), col("v"))
-      .as[(Int, Long)].collect().toMap
-    assert(scalable == exact)
-  }
-
   test("partitioned layout prunes partitions at the scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
     val df = (1 to 300).map(i => (i.toLong, s"t${i % 3}", i * 1.0))
       .toDF("id", "category", "v")
-    Scale.writePartitioned(df, dir, Seq("category"))
+    df.write.mode("overwrite").partitionBy("category").parquet(dir)
     val q = spark.read.parquet(dir).where(col("category") === "t1")
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(category"),
@@ -220,7 +210,7 @@ class ScaleSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString
     val fact = (1 to 3000).map(i => (i.toLong, s"c${i % 3}", i * 1.0))
       .toDF("id", "category", "v")
-    Scale.writePartitioned(fact, dir, Seq("category"))
+    fact.write.mode("overwrite").partitionBy("category").parquet(dir)
     // the dim must be a FILE relation: over a literal LocalRelation the
     // selective filter constant-folds away before the pruning rule runs
     val dimDir = java.nio.file.Files.createTempDirectory("graft-dpp-dim").toString
@@ -345,8 +335,11 @@ class ScaleSpec extends SparkSpec {
     }
     val a = (0L until 200L).map(i => (i, s"a$i")).toDF("k", "va")
     val b = (0L until 200L).map(i => (i, i * 2)).toDF("k", "vb")
-    Scale.writeBucketed(a, "graft_bucket_a", Seq("k"), 4)
-    Scale.writeBucketed(b, "graft_bucket_b", Seq("k"), 4)
+    // bucketing pre-shuffles once at write time, so a join on k reads
+    // both sides already co-partitioned
+    for ((df, t) <- Seq(a -> "graft_bucket_a", b -> "graft_bucket_b"))
+      df.write.mode("overwrite").bucketBy(4, "k").sortBy("k")
+        .format("parquet").saveAsTable(t)
     val joined = spark.table("graft_bucket_a")
       .join(spark.table("graft_bucket_b"), "k")
     // disable broadcast so the join would NEED a shuffle if not bucketed
@@ -372,8 +365,9 @@ class ScaleSpec extends SparkSpec {
     def v(i: Long) = Array.tabulate(4)(d => ((i % 4) * 10 + d + 1).toFloat)
     val base = (0L until 64L).map(i => (i, v(i))).toDF("vec_id", "embedding")
     val cents = (0L until 4L).map(i => (i, v(i))).toDF("cent_id", "cvec")
-    Scale.writeBucketed(Knn.ivfAssign(base, cents, 4),
-      "graft_cell_index", Seq("cell"), 4)
+    Knn.ivfAssign(base, cents, 4).write.mode("overwrite")
+      .bucketBy(4, "cell").sortBy("cell").format("parquet")
+      .saveAsTable("graft_cell_index")
     val stored = spark.table("graft_cell_index")
     val delta = (100L until 110L).map(i => (i, v(i))).toDF("vec_id", "embedding")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -612,51 +606,6 @@ class ScaleSpec extends SparkSpec {
     assert(capped.values.forall(_ <= 1), s"cellCap=1 must bound matches: $capped")
     // base ids never appear as probes: the base corpus is not re-paired
     assert(!m2.keySet.exists(Set(0L, 1L, 2L, 3L)), s"base leaked into probes: $m2")
-  }
-
-  test("streamingProbeCellDupIds quarantines semantic dups at ingest, " +
-    "matches the batch probe, collapses redelivery") {
-    import graft.operators.Knn
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    def v(deg: Double) = {
-      val r = math.toRadians(deg)
-      Array(math.cos(r).toFloat, math.sin(r).toFloat, 0.0f, 0.0f)
-    }
-    val base = Seq((0L, v(0)), (1L, v(2)), (2L, v(40)), (3L, v(88)))
-      .toDF("vec_id", "embedding")
-    val cents = Seq((0L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
-        (1L, Array(0.0f, 1.0f, 0.0f, 0.0f)))
-      .toDF("cent_id", "cvec")
-    val index = Knn.ivfAssign(base, cents, 4).cache()
-    // batch truth on the same delta: 10 matches in-cell, 11 only via
-    // nprobe=2 (boundary-split), 12 is clean
-    val delta = Seq((10L, v(1)), (11L, v(50)), (12L, v(135)))
-    val batchIds = Knn.probeCellIndex(
-        delta.toDF("vec_id", "embedding"), index, cents, 4, 0.9, 2, 100)
-      .select("vec_id").as[Long].collect().toSet
-    assert(batchIds == Set(10L, 11L), s"fixture sanity: $batchIds")
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(Long, Array[Float], String)]
-    val stream = mem.toDF().toDF("vec_id", "embedding", "ts_s")
-      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-    // default trigger, NOT AvailableNow: that trigger snapshots the end
-    // offset at query start, so data added after start() is seen or
-    // missed by pure timing (a real flake this suite hit)
-    val q = Knn.streamingProbeCellDupIds(stream, index, cents, 4, 0.9, 2, 100)
-      .writeStream.format("memory").queryName("sem_ingest")
-      .outputMode("append").start()
-    try {
-      // vec 10 redelivered (at-least-once) — must flag ONCE
-      mem.addData((10L, v(1), "2024-03-01 00:00:01"),
-        (10L, v(1), "2024-03-01 00:00:01"),
-        (11L, v(50), "2024-03-01 00:00:02"),
-        (12L, v(135), "2024-03-01 00:00:03"))
-      q.processAllAvailable()
-      val flagged = spark.table("sem_ingest").select("vec_id")
-        .as[Long].collect().toSeq
-      assert(flagged.sorted == Seq(10L, 11L),
-        s"streaming flags must equal the batch probe, once each: $flagged")
-    } finally { q.stop(); index.unpersist() }
   }
 
   test("x_curate_incremental: both gate anti-joins broadcast bounded id " +

@@ -1,10 +1,8 @@
 package graft
 
 import graft.expressions.FalconEnvelope
-import graft.functions.Text
-import graft.operators.{Dedup, Drift, Knn, StatefulFunnel, StatefulTransitions}
 import graft.query.HumioQuery
-import graft.streaming.{ConnectorPipeline, Curation}
+import graft.streaming.ConnectorPipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, JsonToStructs, Length}
@@ -41,11 +39,12 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQ
   *    operator state).
   *
   * Each test names the entry point it guards and carries the per-entry
-  * justification; together they enumerate every `isStreaming` surface in
-  * the library (HumioQuery.runStream's stateful verbs, the five
-  * Stateful* operators, Curation's five ingest/gate faces, the drift
-  * monitor, the three streaming dedup/ANN quarantine probes, and the
-  * connector pipeline).
+  * justification; together they enumerate every streaming surface in
+  * the library: the connector pipeline (`ConnectorPipeline.run` and
+  * `transform`) and the wire-to-query composition
+  * `ConnectorPipeline.queryStream`, whose stateful verbs are
+  * HumioQuery.runStream's (StatefulSequence, StatefulRate and
+  * StatefulDedup behind them).
   */
 class StreamGuardSpec extends SparkSpec {
   import spark.implicits._
@@ -209,215 +208,6 @@ class StreamGuardSpec extends SparkSpec {
         "join({event_type = click | select(ts, u, value)}, " +
         "field=u, key=u, within=30m, include=[value]) | " +
         "select(event_id, value)") == Set("join"))
-  }
-
-  // ---- StatefulFunnel / StatefulTransitions (batch-twin operators
-  // called directly; the DSL routes l_funnel/l_transitions here) ----
-
-  private def toUserEvents(df: DataFrame): DataFrame =
-    df.select(col("_1").as("event_id"), col("_2").as("user_id"),
-      col("_3").as("event_type"), to_timestamp(col("_4")).as("ts"))
-
-  test("StatefulFunnel.progress: per-user stage vector expires by event time") {
-    // state = stage index + completion times (fixed width = |stages|)
-    // per user key, EventTimeTimeout-evicted after the conversion window
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, String, String)]
-    val out = StatefulFunnel.progress(
-      toUserEvents(mem.toDF()).withWatermark("ts", "10 minutes"),
-      "user_id", Seq("view", "click"), 3600000L)
-    val query = out.writeStream.format("memory").queryName("sg_funnel")
-      .outputMode("append").start()
-    try {
-      mem.addData((1L, 1L, "view", "2024-03-01 00:00:00")); query.processAllAvailable()
-      mem.addData((2L, 1L, "click", "2024-03-01 01:00:00")); query.processAllAvailable()
-      assert(auditBoundedState("funnel", query) == Set("fmgws"))
-    } finally query.stop()
-  }
-
-  test("StatefulTransitions.pairs: last-event state expires by event time") {
-    // state = ONE (ts, event_id, type) triple per key, watermark-expired
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, String, String)]
-    val out = StatefulTransitions.pairs(
-      toUserEvents(mem.toDF()).withWatermark("ts", "10 minutes"), "user_id")
-    val query = out.writeStream.format("memory").queryName("sg_trans")
-      .outputMode("append").start()
-    try {
-      mem.addData((1L, 1L, "view", "2024-03-01 00:00:00")); query.processAllAvailable()
-      mem.addData((2L, 1L, "click", "2024-03-01 01:00:00")); query.processAllAvailable()
-      assert(auditBoundedState("transitions", query) == Set("fmgws"))
-    } finally query.stop()
-  }
-
-  // ---- Curation streaming faces ----
-
-  private val docGate = size(split(col("text"), " ")).between(3, 50)
-  private lazy val sgBaseDocs = Seq(
-    (100L, "alpha beta gamma delta epsilon zeta"),
-    (101L, "one two three four five six seven")).toDF("doc_id", "text")
-  private lazy val sgBandIndex = {
-    Dedup.bandRows(sgBaseDocs, col("text"), 16, 2).select("band", "key").cache()
-  }
-  private lazy val sgEvalGrams = {
-    Seq("quick brown fox jumps over dog").toDF("text")
-      .select(explode(Text.shinglesNative(Text.tokens(col("text")), 4)).as("gram"))
-      .distinct().cache()
-  }
-  private def toDocStream(mem: MemoryStream[(Long, String, String)]): DataFrame =
-    mem.toDF().toDF("doc_id", "ts_s", "text")
-      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-  private val docBatch1 = Seq(
-    (1L, "2024-03-01 00:00:01", "totally fresh document words here today"),
-    (2L, "2024-03-01 00:00:02", "alpha beta gamma delta epsilon zeta"))
-  private val docBatch2 = Seq(
-    (3L, "2024-03-01 02:00:00", "late sentinel advances the watermark now"))
-
-  /** Start → two batches → audit, for the doc-stream curation faces. */
-  private def auditDocStream(name: String,
-                             build: DataFrame => DataFrame): Set[String] = {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, String, String)]
-    val query = build(toDocStream(mem)).writeStream.format("memory")
-      .queryName(s"sg_$name").outputMode("append").start()
-    try {
-      mem.addData(docBatch1: _*); query.processAllAvailable()
-      mem.addData(docBatch2: _*); query.processAllAvailable()
-      auditBoundedState(name, query)
-    } finally query.stop()
-  }
-
-  test("Curation.streamingCurateVerdicts: ONE watermarked windowed aggregate") {
-    // the single-stateful-operator design: all verdict channels union
-    // into one (window, doc_id) aggregate; state = in-flight docs under
-    // the watermark only
-    assert(auditDocStream("curate_verdicts", st =>
-      Curation.streamingCurateVerdicts(st, docGate, sgEvalGrams,
-        sgBandIndex, 16, 2)) == Set("agg"))
-  }
-
-  test("Curation.streamingCurateIngest: the composite keeps the one-aggregate shape") {
-    assert(auditDocStream("curate_ingest", st =>
-      Curation.streamingCurateIngest(st, docGate, sgEvalGrams,
-        sgBandIndex, 16, 2, chunkBudget = 4)) == Set("agg"))
-  }
-
-  test("Curation.streamingCurateExactIngest: span collection rides the same one aggregate") {
-    // state per doc = text + its duplicated span starts (bounded by the
-    // doc's own gram count), watermark-evicted with the window
-    val gramIndex = Dedup.substrGramIndex(sgBaseDocs, col("text"), 4).cache()
-    try assert(auditDocStream("curate_esd", st =>
-      Curation.streamingCurateExactIngest(st, docGate, sgEvalGrams,
-        gramIndex, 4, chunkBudget = 4)) == Set("agg"))
-    finally gramIndex.unpersist()
-  }
-
-  test("Curation.streamingCurateSemanticIngest: ANN probe is stateless, one aggregate holds state") {
-    def v(deg: Double) = {
-      val r = math.toRadians(deg)
-      Array(math.cos(r).toFloat, math.sin(r).toFloat, 0.0f, 0.0f)
-    }
-    val baseVecs = Seq((100L, v(0)), (101L, v(40))).toDF("vec_id", "embedding")
-    val cents = Seq((0L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
-      (1L, Array(0.0f, 1.0f, 0.0f, 0.0f))).toDF("cent_id", "cvec")
-    val cellIndex = Knn.ivfAssign(baseVecs, cents, 4).cache()
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, String, String, Array[Float])]
-    val stream = mem.toDF().toDF("doc_id", "ts_s", "text", "embedding")
-      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-    val query = Curation.streamingCurateSemanticIngest(stream, docGate,
-        sgEvalGrams, cellIndex, cents, 4, 0.9, 2, 100, chunkBudget = 4)
-      .writeStream.format("memory").queryName("sg_curate_sem")
-      .outputMode("append").start()
-    try {
-      mem.addData((21L, "2024-03-01 00:00:01", "a semantic near duplicate arrives here", v(1)))
-      query.processAllAvailable()
-      mem.addData((22L, "2024-03-01 02:00:00", "late sentinel advances the watermark", v(135)))
-      query.processAllAvailable()
-      assert(auditBoundedState("curate_sem", query) == Set("agg"))
-    } finally { query.stop(); cellIndex.unpersist() }
-  }
-
-  test("Curation.streamingSourceState: watermarked (window, doc) aggregate in APPEND mode") {
-    // production contract: append mode (the downstream finishSourceGate
-    // consumes closed windows). Complete mode — which the drain-style
-    // spec uses for test convenience — would retain every (window, doc)
-    // group forever and is exactly what this guard rejects.
-    implicit val sq = spark.sqlContext
-    val cols = Seq("ts", "doc_id", "source", "qf", "dp", "cn", "w")
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String, Long, Long, Long, Long)]
-    val query = Curation.streamingSourceState(mem.toDF().toDF(cols: _*),
-        "10 minutes", "30 minutes", col("qf") === 1, col("dp") === 1,
-        col("cn") === 1, col("w"))
-      .writeStream.format("memory").queryName("sg_srcstate")
-      .outputMode("append").start()
-    try {
-      mem.addData((java.sql.Timestamp.valueOf("2024-03-01 00:05:00"), 1L, "a", 0L, 0L, 0L, 7L))
-      query.processAllAvailable()
-      mem.addData((java.sql.Timestamp.valueOf("2024-03-01 03:00:00"), 2L, "b", 0L, 0L, 0L, 7L))
-      query.processAllAvailable()
-      assert(auditBoundedState("source_state", query) == Set("agg"))
-    } finally query.stop()
-  }
-
-  // ---- drift monitor ----
-
-  test("Drift.streamingDriftState: watermarked (window, doc) aggregate") {
-    // state = in-flight docs under the watermark; the reference
-    // distribution never enters the stream (finishDrift joins it
-    // statelessly over the drained state)
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, String, String)]
-    val st = toDocStream(mem).select(col("doc_id"), col("ts"),
-      Text.tokens(col("text")).as("items"))
-    val query = Drift.streamingDriftState(st, "ts", "doc_id",
-        col("items"), "10 minutes", "30 minutes")
-      .writeStream.format("memory").queryName("sg_drift")
-      .outputMode("append").start()
-    try {
-      mem.addData(docBatch1: _*); query.processAllAvailable()
-      mem.addData(docBatch2: _*); query.processAllAvailable()
-      assert(auditBoundedState("drift_state", query) == Set("agg"))
-    } finally query.stop()
-  }
-
-  // ---- streaming dedup / ANN quarantine probes ----
-
-  test("Dedup.streamingIngestDupIds: index side static, dedup state within-watermark") {
-    assert(auditDocStream("ingest_dup", st =>
-      Dedup.streamingIngestDupIds(st, col("text"), 16, 2, sgBandIndex)) ==
-      Set("dedup"))
-  }
-
-  test("Dedup.streamingSubstrDupIds: gram probe stateless, dedup state within-watermark") {
-    val gramIndex = Dedup.substrGramIndex(sgBaseDocs, col("text"), 4).cache()
-    try assert(auditDocStream("substr_dup", st =>
-      Dedup.streamingSubstrDupIds(st, col("text"), 4, gramIndex)) ==
-      Set("dedup"))
-    finally gramIndex.unpersist()
-  }
-
-  test("Knn.streamingProbeCellDupIds: codebook broadcast, dedup state within-watermark") {
-    def v(deg: Double) = {
-      val r = math.toRadians(deg)
-      Array(math.cos(r).toFloat, math.sin(r).toFloat, 0.0f, 0.0f)
-    }
-    val base = Seq((0L, v(0)), (1L, v(40))).toDF("vec_id", "embedding")
-    val cents = Seq((0L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
-      (1L, Array(0.0f, 1.0f, 0.0f, 0.0f))).toDF("cent_id", "cvec")
-    val index = Knn.ivfAssign(base, cents, 4).cache()
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, Array[Float], String)]
-    val stream = mem.toDF().toDF("vec_id", "embedding", "ts_s")
-      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-    val query = Knn.streamingProbeCellDupIds(stream, index, cents, 4, 0.9, 2, 100)
-      .writeStream.format("memory").queryName("sg_ann_dup")
-      .outputMode("append").start()
-    try {
-      mem.addData((10L, v(1), "2024-03-01 00:00:01")); query.processAllAvailable()
-      mem.addData((11L, v(135), "2024-03-01 02:00:00")); query.processAllAvailable()
-      assert(auditBoundedState("ann_dup", query) == Set("dedup"))
-    } finally { query.stop(); index.unpersist() }
   }
 
   // ---- connector data path ----

@@ -4,8 +4,8 @@ import graft.operators.Sketches
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Sketches as Structured Streaming state: CMS counters and HLL
-  * registers are each ONE stateful aggregation (sum / max merge), so
+/** Sketches as Structured Streaming state: Bloom bits, KMV minima and
+  * HLL registers are each ONE stateful aggregation (set / max merge), so
   * the streaming complete-mode result must equal the batch sketch of
   * everything ingested so far — the mergeability claim of
   * [[Sketches]], proven on a live stream instead of a union.
@@ -15,38 +15,6 @@ class StreamingSketchSpec extends SparkSpec {
 
   private val batch1 = (0 until 80).map(i => s"s-item-${i % 30}")
   private val batch2 = (0 until 90).map(i => s"s-item-${i % 45}-b")
-
-  private def cmsMap(items: Seq[String]): Map[(Int, Long), Long] =
-    Sketches.cmsSketchRaw(items.toDF("item"), col("item"))
-      .as[(Int, Long, Long)].collect().map { case (r, b, c) => ((r, b), c) }.toMap
-
-  test("raw-occurrence CMS equals the counted-path CMS") {
-    val counts = batch1.toDF("item").groupBy("item").agg(count(lit(1)).as("cnt"))
-    val counted = Sketches.cmsSketch(counts, col("item"), col("cnt"))
-      .as[(Int, Long, Long)].collect().map { case (r, b, c) => ((r, b), c) }.toMap
-    assert(cmsMap(batch1) == counted)
-  }
-
-  test("streaming CMS counters track the batch sketch across micro-batches") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[String]
-    val q = Sketches.cmsSketchRaw(mem.toDF().select(col("value").as("item")), col("item"))
-      .writeStream.format("memory").queryName("cms_stream")
-      .outputMode("complete").start()
-    try {
-      mem.addData(batch1: _*)
-      q.processAllAvailable()
-      val afterOne = spark.table("cms_stream")
-        .as[(Int, Long, Long)].collect().map { case (r, b, c) => ((r, b), c) }.toMap
-      assert(afterOne == cmsMap(batch1))
-      mem.addData(batch2: _*)
-      q.processAllAvailable()
-      val afterTwo = spark.table("cms_stream")
-        .as[(Int, Long, Long)].collect().map { case (r, b, c) => ((r, b), c) }.toMap
-      assert(afterTwo == cmsMap(batch1 ++ batch2),
-        "counters must merge by sum across micro-batches")
-    } finally q.stop()
-  }
 
   test("streaming Bloom bit set tracks the batch bits and ignores redelivery") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -11,7 +11,9 @@ import scala.jdk.CollectionConverters._
 
 /** End-to-end Structured Streaming semantics: delivery, at-least-once
   * replay after sink failure, checkpoint restart without reprocessing,
-  * watermark windows, streaming dedup — the R1/R3–R11/R15 surface.
+  * supervised restarts — the R1/R3–R11/R15 surface. Watermark windows,
+  * sessions and streaming dedup are the pipe language's streaming verbs
+  * (HumioStreamSpec, StreamGuardSpec).
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -280,23 +282,6 @@ class StreamingSpec extends SparkSpec {
     assert(result.restarts == 2 && result.fatal.nonEmpty)
   }
 
-  test("watermarked tumbling window counts late data correctly") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val df = mem.toDF().toDF("ts", "event_type")
-    val out = ConnectorPipeline.timechartStream(df, "10 minutes", "1 hour")
-    val q = out.writeStream.format("memory").queryName("tc")
-      .outputMode("update").trigger(Trigger.ProcessingTime(50L)).start()
-    def t(min: Int) = new java.sql.Timestamp(3600000L + min * 60000L)
-    mem.addData((t(0), "click"), (t(10), "click"), (t(70), "view"))
-    q.processAllAvailable()
-    val rows = spark.sql("select event_type, count from tc").as[(String, Long)]
-      .collect().toMap
-    q.stop()
-    assert(rows("click") == 2L)
-    assert(rows("view") == 1L)
-  }
-
   test("stream-stream interval join: events match orders within the time bound") {
     implicit val sq = spark.sqlContext
     val evMem = MemoryStream[(java.sql.Timestamp, Long, Long)]
@@ -322,57 +307,6 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     q.stop()
     assert(rows == Set((1L, 100L)), s"only the in-window same-user pair joins, got $rows")
-  }
-
-  test("session_window groups events by 30-min gaps per user") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Long)]
-    val df = mem.toDF().toDF("ts", "user_id")
-    val out = ConnectorPipeline.sessionStream(df, "1 minute", "30 minutes")
-    val q = out.writeStream.format("memory").queryName("sess")
-      .outputMode("complete").trigger(Trigger.ProcessingTime(50L)).start()
-    def t(min: Int) = new java.sql.Timestamp(min * 60000L)
-    // user 1: two events 10 min apart (one session), then one 40 min later
-    mem.addData((t(0), 1L), (t(10), 1L), (t(50), 1L), (t(0), 2L))
-    q.processAllAvailable()
-    val sessions = spark.sql("select user_id, n_events from sess")
-      .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-    q.stop()
-    assert(sessions(1L) == Seq(1L, 2L), "user 1: a 2-event session and a 1-event session")
-    assert(sessions(2L) == Seq(1L))
-  }
-
-  test("flatMapGroupsWithState emits one alert exactly when the count crosses") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[Long]
-    val out = ConnectorPipeline.thresholdAlerts(mem.toDS(), threshold = 3L)
-      .toDF("user_id", "n")
-    val q = out.writeStream.format("memory").queryName("alerts")
-      .outputMode("update").trigger(Trigger.ProcessingTime(50L)).start()
-    mem.addData(1L, 1L, 2L)        // batch 1: u1=2, u2=1 — nobody crosses
-    q.processAllAvailable()
-    mem.addData(1L, 2L, 2L)        // batch 2: u1=3 crosses; u2=3 crosses
-    q.processAllAvailable()
-    mem.addData(1L, 2L)            // batch 3: both already past — no re-alert
-    q.processAllAvailable()
-    val rows = spark.sql("select user_id, n from alerts")
-      .as[(Long, Long)].collect().toSeq
-    q.stop()
-    assert(rows.sorted == Seq((1L, 3L), (2L, 3L)),
-      s"one alert per key at the crossing batch, got $rows")
-  }
-
-  test("dropDuplicatesWithinWatermark upgrades at-least-once to effectively-once") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Long)]
-    val df = mem.toDF().toDF("ts", "event_id")
-    val out = ConnectorPipeline.dedupStream(df, "1 hour", Seq("event_id"))
-    val q = out.writeStream.format("memory").queryName("dd")
-      .outputMode("append").trigger(Trigger.ProcessingTime(50L)).start()
-    val ts = new java.sql.Timestamp(1000L)
-    mem.addData((ts, 1L), (ts, 1L), (ts, 2L))   // duplicate delivery of event 1
-    q.processAllAvailable(); q.stop()
-    assert(spark.sql("select count(*) from dd").as[Long].head() == 2L)
   }
 
   test("fromKafka: option mapping, fail-fast validation, and the kafka source path") {
