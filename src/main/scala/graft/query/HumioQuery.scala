@@ -153,6 +153,15 @@ object HumioQuery {
     * COMPILED Dataset is reused per (query text, table names, input and
     * table plans): parse and per-stage analysis happen once, and every
     * execution still computes from the sources.
+    *
+    * A limit-free `sort` (and `top(rest=)`'s re-sort) over a small batch
+    * input plans in one partition, without Spark's range-bound sampling
+    * job and range exchange: small is no row bound and an analyzed size
+    * estimate within `spark.sql.autoBroadcastJoinThreshold`; anything
+    * else, a threshold of -1 included, keeps the range sort. The choice
+    * is made here, while lowering, because a planner strategy would need
+    * a session extension that not every caller's session has
+    * ([[globalSort]]).
     */
   def run(df: DataFrame, query: String,
           tables: Map[String, DataFrame] = Map.empty): DataFrame = {
@@ -247,6 +256,37 @@ object HumioQuery {
     require(stream.columns.contains("ts"),
       "runStream() needs a ts event-time column to watermark")
     run(stream.withWatermark("ts", watermark), query, tables)
+  }
+
+  /** A limit-free global sort of `df` by `order`. Spark plans one as a
+    * range-partitioned exchange whose bounds come from an extra job that
+    * samples the sort's input, so a sort over a few grouped rows costs
+    * two jobs and a shuffle. A small input is sorted in one partition
+    * instead: `coalesce(1)` under the same global sort, which Spark then
+    * plans with no sampling job and no exchange. A sort over one
+    * partition is still a total order, so rows and their order are the
+    * same either way.
+    *
+    * Small means: a batch input with no row bound (a bounded one, such
+    * as a limit, keeps Spark's own plan) whose analyzed size estimate is
+    * at most `spark.sql.autoBroadcastJoinThreshold`, the size below
+    * which Spark already ships a whole relation to every task. A
+    * threshold of -1 (broadcast off) closes the gate. The analyzed
+    * estimate needs no optimizer pass and, without column pruning, only
+    * over-estimates, so a wrong guess falls back to the range sort.
+    *
+    * The rewrite sits here, in the lowering, not in a planner
+    * `Strategy`: a strategy needs a session extension, and a session
+    * built without one would never run it.
+    */
+  private def globalSort(df: DataFrame, order: Seq[Column]): DataFrame = {
+    val small = !df.isStreaming && {
+      val qe = df.queryExecution
+      val threshold = qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+      qe.analyzed.maxRows.isEmpty && threshold >= 0 &&
+        qe.analyzed.stats.sizeInBytes <= threshold
+    }
+    (if (small) df.coalesce(1) else df).orderBy(order: _*)
   }
 
   /** split on '|' not inside parentheses, braces (a `case { … | … }`
@@ -955,8 +995,8 @@ object HumioQuery {
                   detRound4(col(mName).cast("double") * 100.0 /
                     col("__t").cast("double")))
                 .drop("__t")
-            limited.unionByName(restAligned)
-              .orderBy(col(mName).desc, col(f).asc)
+            globalSort(limited.unionByName(restAligned),
+              Seq(col(mName).desc, col(f).asc))
         }
       case "eval" =>
         require(named.size == 1 && pos.isEmpty,
@@ -984,10 +1024,15 @@ object HumioQuery {
       case "sort" =>
         // sort(f1, …[, order=desc][, limit=n]) — with limit, Spark plans
         // TakeOrderedAndProject: per-partition top-n + a tiny driver
-        // merge, never a full global sort
+        // merge, never a full global sort. Without one, a small input
+        // sorts in one partition ([[globalSort]]): no range-bound
+        // sampling job, no range exchange
         val desc = named.get("order").contains("desc")
-        val sorted = df.orderBy(pos.map(f => if (desc) col(f).desc else col(f).asc): _*)
-        named.get("limit").map(n => sorted.limit(n.toInt)).getOrElse(sorted)
+        val order = pos.map(f => if (desc) col(f).desc else col(f).asc)
+        named.get("limit") match {
+          case Some(n) => df.orderBy(order: _*).limit(n.toInt)
+          case None => globalSort(df, order)
+        }
       case "head" => df.limit(pos.headOption.map(_.toInt).getOrElse(10))
       case "tail" =>
         // tail(n): the n most recent events by ts (event_id tie-break

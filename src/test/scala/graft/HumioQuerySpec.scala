@@ -45,6 +45,62 @@ class HumioQuerySpec extends SparkSpec {
       "limit must fuse into the sort")
   }
 
+  // ---- small global sorts plan in one partition (HumioQuery.globalSort).
+  // A Seq-built frame has a row bound, which keeps Spark's plan, so the
+  // gate is exercised over a file-backed input of several partitions ----
+
+  private lazy val filed: org.apache.spark.sql.DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sort").toString + "/ev"
+    df.repartition(3).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private val smallSorts = Seq(
+    "groupBy(event_type) | sort(event_type, order=desc)" ->
+      Seq[Any]("view", "error", "click"),
+    "value >= 20.0 | select(event_id) | sort(event_id, order=desc)" ->
+      Seq[Any](4L, 3L, 2L))
+
+  private def plannedRows(q: String): (String, Seq[Any]) = {
+    val out = HumioQuery.run(filed, q)
+    val rows = out.collect().map(_.get(0)).toSeq
+    (out.queryExecution.executedPlan.toString, rows)
+  }
+
+  test("a small limit-free sort plans in one partition: no range exchange") {
+    assert(filed.rdd.getNumPartitions > 1, "the gate needs a multi-partition input")
+    smallSorts.foreach { case (q, expected) =>
+      val (plan, rows) = plannedRows(q)
+      assert(!plan.contains("rangepartitioning"), s"$q range-partitions:\n$plan")
+      assert(plan.contains("Coalesce 1"), s"$q does not sort in one partition:\n$plan")
+      assert(rows == expected, q)
+    }
+  }
+
+  test("with broadcast off (threshold -1) the same sorts range-partition, same rows") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try smallSorts.foreach { case (q, expected) =>
+      // built after the conf is set: the gate reads it at build time
+      val (plan, rows) = plannedRows(q)
+      assert(plan.contains("rangepartitioning"), s"$q sorts in one partition:\n$plan")
+      assert(!plan.contains("Coalesce 1"), q)
+      assert(rows == expected, q)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("sort(limit=) over a gate-eligible input still plans TakeOrderedAndProject") {
+    val q = HumioQuery.run(filed, "sort(value, order=desc, limit=2)")
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(!plan.contains("Coalesce 1"), plan)
+    assert(q.collect().map(_.getAs[Long]("event_id")).toSeq == Seq(4L, 3L))
+  }
+
   test("chained pipeline matches hand-built DataFrame") {
     val dsl = HumioQuery.run(df,
       "event_type != error | groupBy(user_id, function=max(value)) | sort(user_id)")
@@ -99,6 +155,27 @@ class HumioQuerySpec extends SparkSpec {
       .as[(String, Long)].collect().toMap
     q.stop()
     assert(rows == Map("click" -> 2L), "error filtered; clicks bucketed")
+  }
+
+  test("sort on a stream keeps Spark's plan (complete mode after an aggregation)") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.Trigger
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val out = HumioQuery.run(mem.toDF().toDF("event_id", "event_type"),
+      "groupBy(event_type) | sort(event_type, order=desc)")
+    val q = out.writeStream.format("memory").queryName("dslsortstream")
+      .outputMode("complete").trigger(Trigger.ProcessingTime(50L)).start()
+    mem.addData((1L, "click"), (2L, "view"), (3L, "click"), (4L, "error"))
+    q.processAllAvailable()
+    val rows = spark.sql("select event_type, _count from dslsortstream")
+      .as[(String, Long)].collect().toSeq
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.executedPlan.toString
+    q.stop()
+    assert(rows == Seq(("view", 1L), ("error", 1L), ("click", 2L)))
+    assert(!plan.contains("Coalesce"), s"a stream must keep Spark's sort plan:\n$plan")
   }
 
   test("the narrow verbs (in/replace/format/default/rename) run on a stream") {

@@ -27,9 +27,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *       any EMPTY-partition Window over an unbounded child (the
   *       repo's round-11 doctrine: empty windows only over bounded
   *       relations);
-  *  (iii) an Exchange to SinglePartition whose child is neither a
-  *       (partial) aggregate nor a bounded relation (a raw-row funnel
-  *       into one task).
+  *  (iii) an Exchange to SinglePartition, or a one-partition
+  *       Coalesce, whose child is neither a (partial) aggregate nor a
+  *       bounded relation (a raw-row funnel into one task). The one
+  *       sanctioned coalesce is HumioQuery's small-sort gate: a
+  *       one-partition coalesce directly under a global Sort, planned
+  *       only when the input's size estimate is within the broadcast
+  *       threshold.
   *
   * Boundedness is STRUCTURAL: global aggregates are 1 row, limits are
   * ≤ n, grouping aggregates cannot exceed their child, unions add,
@@ -427,6 +431,12 @@ class PlanGuardSpec extends AnyFunSuite {
       if (wl.contains(name)) hits += ((rule, name))
       else out += s"$name [$rule] $detail"
     val defs = aliasDefs(plan)
+    // the small-sort gate's shape: a global Sort whose child, through
+    // codegen's input adapter, is the one-partition coalesce
+    def sortGated(c: CoalesceExec): Boolean = plan.exists {
+      case s: SortExec if s.global => stripCodegen(s.child) eq c
+      case _ => false
+    }
     plan.foreach {
       case j: BroadcastNestedLoopJoinExec =>
         val ok = boundedRows(j.left).exists(_ <= MaxBounded) ||
@@ -461,12 +471,24 @@ class PlanGuardSpec extends AnyFunSuite {
         // double-report
         ()
       case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
-        val ok = e.child.isInstanceOf[BaseAggregateExec] ||
-          boundedRows(e.child).exists(_ <= MaxBounded)
-        if (!ok) flag("exchange", exchangeWhitelist,
+        if (!funnelOk(e.child)) flag("exchange", exchangeWhitelist,
           "Exchange SinglePartition over a non-aggregate unbounded child")
+      case c: CoalesceExec if c.numPartitions == 1 && !sortGated(c) =>
+        if (!funnelOk(c.child)) flag("exchange", exchangeWhitelist,
+          "Coalesce 1 over a non-aggregate unbounded child")
       case _ => ()
     }
+  }
+
+  /** A rule (iii) funnel is fine over an aggregate or a bounded child. */
+  private def funnelOk(child: SparkPlan): Boolean =
+    child.isInstanceOf[BaseAggregateExec] ||
+      boundedRows(child).exists(_ <= MaxBounded)
+
+  private def stripCodegen(p: SparkPlan): SparkPlan = p match {
+    case w: WholeStageCodegenExec => stripCodegen(w.child)
+    case i: InputAdapter => stripCodegen(i.child)
+    case other => other
   }
 
   test("every declared query's physical plan is free of structural scale-killers") {
@@ -501,13 +523,17 @@ class PlanGuardSpec extends AnyFunSuite {
   // ---- the guard guards itself: planted evasions the r13 audit was
   // blind to (name-set LowCard) must now be caught ----
 
-  private def windowFlags(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+  /** The audit's violations of `rule` on a planted plan. */
+  private def plantedFlags(df: org.apache.spark.sql.DataFrame, rule: String): Seq[String] = {
     val plan = df.queryExecution.executedPlan
     val out = Seq.newBuilder[String]
     val hits = collection.mutable.Set[(String, String)]()
     (plan +: plan.subqueriesAll).foreach(audit("planted", _, out, hits))
-    out.result().filter(_.contains("[window]"))
+    out.result().filter(_.contains(s"[$rule]"))
   }
+
+  private def windowFlags(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    plantedFlags(df, "window")
 
   test("a RENAMED low-card partition column cannot evade the window rule") {
     import org.apache.spark.sql.expressions.Window
@@ -545,6 +571,17 @@ class PlanGuardSpec extends AnyFunSuite {
     val df = ev.withColumn("rn",
       row_number().over(Window.partitionBy("shard").orderBy("event_id")))
     assert(windowFlags(df).isEmpty)
+  }
+
+  test("an ungated one-partition coalesce over an events file scan is a funnel") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString + "/events"
+    session.range(100).selectExpr("id AS event_id", "CAST(id % 3 AS STRING) AS event_type")
+      .write.parquet(dir)
+    val ev = session.read.parquet(dir)
+    val flags = plantedFlags(ev.coalesce(1).select("event_id", "event_type"), "exchange")
+    assert(flags.exists(_.contains("Coalesce 1")), s"coalesce(1) must be flagged: $flags")
+    // the same coalesce directly under a global sort is the gate's shape
+    assert(plantedFlags(ev.coalesce(1).orderBy("event_id"), "exchange").isEmpty)
   }
 
   // ---- the declared mode twins must really plan their mode: each

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
-"""Per-query scale analysis from committed Bench records.
+"""Per-query tables from committed Bench records and perfbench profiles.
 
-Two modes:
+Three modes:
 
   python3 tools/scale_table.py LO.json HI.json [scale]
       Markdown ratio table: warm ratio hi/lo per query and the
@@ -12,11 +12,17 @@ Two modes:
       Least-squares exponent over ln t ~ a + e*ln scale across 2+
       records (e.g. sf1=10 sf3=30 sf10=100 relative to sf0.1=1).
 
+  python3 tools/scale_table.py --profile PARENT.json CHANGE.json
+      Per-query diff of two traced perfbench `result.json` files
+      (`perfbench/run.py --trace 1` writes `profile.queries`): wall_ms,
+      codegen_compiles, jobs and jobs_ms per query and pass, parent ->
+      change, then per-pass totals and each side's warm median wall.
+
 Sub-second-at-every-scale queries are summarized in aggregate (the
 fixed-cost floor dominates; an exponent fitted on 0.2 s vs 0.4 s
 measures noise, not the plan).
 """
-import json, math, sys
+import json, math, statistics, sys
 
 
 def load(p):
@@ -95,6 +101,45 @@ def fit(paths_scales):
         print(f"| ({len(out) - 40} more, all <= {out[40][0]:.2f}) | | |")
 
 
+PROFILE_COLS = ("wall_ms", "codegen_compiles", "jobs", "jobs_ms")
+
+
+def profile_rows(p):
+    prof = load(p).get("profile")
+    if not prof:
+        sys.exit(f"{p}: no profile section (run perfbench with --trace 1)")
+    return {(q["name"], q["pass"]): q for q in prof["queries"]}
+
+
+def profile_diff(parent_p, change_p):
+    a, b = profile_rows(parent_p), profile_rows(change_p)
+    keys = [k for k in a if k in b]  # the parent's execution order
+    missing = sorted(set(a) ^ set(b))
+    if missing:
+        print(f"NOTE: {len(missing)} executions not in both records: {missing}")
+    head = " | ".join(PROFILE_COLS)
+    print(f"| query | pass | {head} |")
+    print("|---|---|" + "---|" * len(PROFILE_COLS))
+
+    def cells(x, y):
+        return " | ".join(f"{x[c]} → {y[c]}" for c in PROFILE_COLS)
+
+    for k in keys:
+        print(f"| {k[0]} | {k[1]} | {cells(a[k], b[k])} |")
+    # per pass, hunting (hq_*) and curation queries apart
+    group = lambda k: (k[1], "hunt" if k[0].startswith("hq_") else "curate")
+    for g in dict.fromkeys(map(group, keys)):
+        ks = [k for k in keys if group(k) == g]
+        tot = lambda r: {c: sum(r[k][c] for k in ks) for c in PROFILE_COLS}
+        print(f"| **{g[1]} total ({len(ks)})** | {g[0]} | {cells(tot(a), tot(b))} |")
+    warm = [k for k in keys if k[1].startswith("warm")]
+    if warm:
+        ma = statistics.median(a[k]["wall_ms"] for k in warm)
+        mb = statistics.median(b[k]["wall_ms"] for k in warm)
+        print(f"\nwarm median wall_ms ({len(warm)} executions): "
+              f"parent {ma:g}, change {mb:g}")
+
+
 def usage():
     print(__doc__.strip())
     sys.exit(1)
@@ -103,7 +148,11 @@ def usage():
 if __name__ == "__main__":
     if len(sys.argv) < 3:
         usage()
-    if sys.argv[1] == "--fit":
+    if sys.argv[1] == "--profile":
+        if len(sys.argv) != 4:
+            usage()
+        profile_diff(sys.argv[2], sys.argv[3])
+    elif sys.argv[1] == "--fit":
         pairs = sys.argv[2:]
         if len(pairs) < 4 or len(pairs) % 2 != 0:
             usage()
